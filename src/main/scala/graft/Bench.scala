@@ -1,4 +1,6 @@
 package graft
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark entry point (driver contract): one JSON line with per-query
@@ -44,11 +46,14 @@ object Bench {
   private[graft] def sec3(x: Double): String =
     String.format(java.util.Locale.ROOT, "%.3f", Double.box(x))
 
-  /** Time each query as the median of `runs` back-to-back samples.
-    * A query that throws must FAIL the run, not bench as a fast green
-    * number: its timing is None (rendered as JSON null — near-zero
-    * elapsed times of a failed `count()` are not measurements) and the
-    * first exception line is recorded per query for the `errors` map.
+  /** Time each query as the median of `runs` back-to-back samples. A
+    * sample is the build plus a full `noop` write of every output
+    * column: a `count()` would let Catalyst prune the output work of
+    * any column nobody counts. A query that throws must FAIL the run,
+    * not bench as a fast green number: its timing is None (rendered as
+    * JSON null — near-zero elapsed times of a failed write are not
+    * measurements) and the first exception line is recorded per query
+    * for the `errors` map.
     */
   private[graft] def measure(
       spark: SparkSession, sfDir: String, runs: Int,
@@ -58,10 +63,9 @@ object Bench {
     val results = queries.map { case (name, fn) =>
       val samples = (1 to runs).map { _ =>
         // quiesce before EVERY sample, not just the query's first:
-        // a query that leaves internal caches warm (an unmanaged
-        // shingle persist surviving samples 2..n) would otherwise
-        // bench warm while a managed query (releases per invocation)
-        // benches cold — suite medians must be comparable without
+        // a query whose internal caches survived the previous sample
+        // would otherwise bench warm while the others bench cold —
+        // suite medians must be comparable without
         // per-query warmth adjudication (judge r11 #4). Cost: every
         // sample prices the query COLD; disk-resident build-once
         // indexes stay warm by design (that amortization is
@@ -69,8 +73,9 @@ object Bench {
         spark.catalog.clearCache()
         System.gc()
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch {
-          case e: Throwable =>
+        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        catch {
+          case NonFatal(e) =>
             errors.getOrElseUpdate(name, e.toString.linesIterator.next().take(300))
         }
         (System.nanoTime() - t0) / 1e9
@@ -111,7 +116,7 @@ object Bench {
     Seq("lineitem", "orders", "customer", "supplier", "part", "nation",
       "region", "events", "documents", "embeddings").foreach { t =>
       try spark.read.parquet(s"$sfDir/$t.parquet").count()
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
     }
     // and one synthetic shuffle/window/join pass: JIT-compiles the Janino
     // compiler itself and the exchange/sort/agg machinery, which would
@@ -119,7 +124,7 @@ object Bench {
     // Warm-up failures are LOGGED (r18, judge advice): a silently broken
     // warm-up would shift first-of-family medians with no diagnostic.
     def warm(label: String)(f: => Unit): Unit =
-      try f catch { case e: Throwable =>
+      try f catch { case NonFatal(e) =>
         System.err.println(s"[bench] warm-up '$label' failed: " +
           e.toString.linesIterator.next().take(200))
       }
@@ -257,7 +262,7 @@ object Bench {
         val r = graft.streaming.StreamingBench.run(spark, sfDir)
         val rps1 = String.format(java.util.Locale.ROOT, "%.1f", Double.box(r.rps))
         s""","streaming_rps":$rps1,"streaming_records":${r.records},"streaming_batches":${r.batches},"streaming_sec":${sec3(r.seconds)}"""
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         System.err.println(s"[bench] streaming failed: ${e.getMessage}")
         ""","streaming_rps":0.0"""
       }
@@ -265,7 +270,7 @@ object Bench {
     val line = renderLine(results, errors, skip, streaming, sfDir)
     println(line)
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath), line + "\n")
-    catch { case e: Throwable =>
+    catch { case NonFatal(e) =>
       System.err.println(s"[bench] could not write $outPath: ${e.getMessage}")
     }
     spark.stop()

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.MessageFunctions._
+import graft.operators.Intermediates
 import graft.pipeline.{Enrich, GraftConfig}
 import graft.queries._
 import graft.sources.Tables
@@ -29,23 +30,17 @@ object SparkEntry {
 
   /** One entry per implemented operator from SURVEY.md §2.
     *
-    * REGISTRY CONTRACT NOTE (r18, judge advice): most entries are lazy
-    * plan builders, but the queries that manage internal persists
-    * (dedup_components/_refine, dedup_resolve, dedup_cosine_pairs/
-    * _capped, dedup_minhash_superset's siblings, pipe_ingest_neardup_miss,
-    * pipe_split_leakproof_neardup_leaks, pipe_zorder_layout) are EAGER:
-    * the closure executes the query (cache + count) so the internal
-    * caches can be released before it returns, and the returned frame
-    * is the CACHED result. A long-lived multi-query consumer should
-    * `unpersist()` the returned frame after use or clear the catalog
-    * cache periodically (Bench clears before every sample; Verify's
-    * session ends).
+    * Lifecycle: a registry frame stays valid until the next registry
+    * build in that session (each build first runs
+    * [[graft.operators.Intermediates.release]]).
     */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    MessageQueries.queries ++ RelationalQueries.queries ++ TpchQueries.queries ++
+    (MessageQueries.queries ++ RelationalQueries.queries ++ TpchQueries.queries ++
       EventQueries.queries ++ TextQueries.queries ++ DedupQueries.queries ++
       SimilarityQueries.queries ++ PipelineQueries.queries ++
-      TrainingDataQueries.queries
+      TrainingDataQueries.queries).map { case (name, build) =>
+      name -> ((s: SparkSession, d: String) => { Intermediates.release(s); build(s, d) })
+    }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */

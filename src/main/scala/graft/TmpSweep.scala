@@ -41,7 +41,7 @@ import graft.queries.BuiltOnce
   * exception (removed: it can never be served — reads require an exact
   * key match). Entries not matching the patterns above — including the
   * `graft_<tag>_<uuid>` per-query scratch of
-  * [[graft.operators.Dedup.materializedManaged]], which is
+  * [[graft.operators.Intermediates.scratch]], which is
   * query-lifetime, not cross-session — are never touched.
   *
   * Callers must pass the COMPLETE set of corpus dirs still in use,

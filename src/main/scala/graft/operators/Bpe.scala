@@ -19,7 +19,7 @@ import org.apache.spark.storage.StorageLevel
   * rows only), a 1-row argmax collect, and a narrow map applying the
   * merge. Driver state is the merge list — O(nMerges) pairs, never
   * types. Type-table lineage is cut through a persisted-RDD round-trip
-  * every `itersPerCut` rounds (the [[Graph.pageRankManaged]] pattern),
+  * every `itersPerCut` rounds (the [[Graph.pageRank]] pattern),
   * so the plan never deepens past a bounded window and at most two
   * snapshots are cached at once.
   *

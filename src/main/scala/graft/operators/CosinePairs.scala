@@ -10,7 +10,7 @@ import graft.plans.{SortedTermDot, SuffixSqMass}
   * (Bayardo/Ramakrishnan/Tumkur "Scaling Up All Pairs Similarity
   * Search", WWW'07, with the L2 residual candidate bound from L2AP —
   * Anastasiu & Karypis, ICDE'14 — the weighted-cosine sibling of the
-  * PPJoin prefix-filter family in [[Dedup.ngramJaccardBlockedManaged]]).
+  * PPJoin prefix-filter family in [[Dedup.ngramJaccardBlocked]]).
   *
   * Documents become sparse integer tf vectors over word n-gram shingles
   * (shingles, not unigrams: the synthetic corpus has a ~31-word
@@ -79,9 +79,9 @@ object CosinePairs {
 
   /** All document pairs with tf-cosine ≥ `threshold` over `shingleN`-gram
     * vectors: `(id_a, id_b, cosine)` with id_a < id_b, cosine exact and
-    * rounded to 6 for cross-engine output stability. The returned
-    * release handle unpersists the per-document vector cache (read by
-    * the prefix explode and both verify joins).
+    * rounded to 6 for cross-engine output stability. The per-document
+    * vector cache (read by the prefix explode and both verify joins) is
+    * registered with [[Intermediates]].
     *
     * `dfCap`: with it set, terms appearing in more than `dfCap`
     * documents are removed from the VECTORS (stop-shingle removal —
@@ -96,10 +96,10 @@ object CosinePairs {
     * semantics (the oracle-companion form; quadratic on saturated
     * vocabularies by nature — any exact all-pairs similarity is).
     */
-  def tfCosinePairsManaged(
+  def tfCosinePairs(
       df: DataFrame, textCol: String, idCol: String,
       threshold: Double, shingleN: Int = 3,
-      dfCap: Option[Int] = None): (DataFrame, () => Unit) = {
+      dfCap: Option[Int] = None): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0, "0 < threshold <= 1")
     require(dfCap.forall(_ >= 2), "dfCap >= 2 (df=1 terms never pair)")
     // (id, term, tf) — integer term frequencies per document. Terms are
@@ -130,7 +130,7 @@ object CosinePairs {
     // `rsqs` is the per-position suffix squared mass (L2AP bound);
     // (vterms, vtfs) is the SAME vector re-sorted by term value — the
     // representation the per-candidate merge verify consumes.
-    val docs = dt.join(dfreq, "term")
+    val docs = Intermediates.persist(dt.join(dfreq, "term")
       .groupBy("id")
       .agg(sort_array(collect_list(struct(col("df"), col("term"), col("tf"))))
         .as("ts"))
@@ -149,8 +149,7 @@ object CosinePairs {
       // (SortedMergeExprs specializes on the static containsNull)
       .select(col("id"), col("terms"), col("tfs"), col("n2"), col("rsqs"),
         transform(col("vts"), x => knownNotNull(x("terms"))).as("vterms"),
-        transform(col("vts"), x => knownNotNull(x("tfs"))).as("vtfs"))
-      .persist()
+        transform(col("vts"), x => knownNotNull(x("tfs"))).as("vtfs")))
     // prefix length: drop the longest TAIL whose squared mass stays
     // under t²·n2. rsqs[i] is exactly the tail mass starting at i and
     // DESCENDS in i, so the tail length is the count of positions whose
@@ -181,7 +180,7 @@ object CosinePairs {
     // exact verification: BIGINT dot via one codegen'd sorted merge of
     // the term-sorted parallel arrays per candidate
     val sides = docs.select(col("id"), col("vterms"), col("vtfs"), col("n2"))
-    val out = cands
+    cands
       .join(sides.select(col("id").as("id_a"), col("vterms").as("ta"),
         col("vtfs").as("fa"), col("n2").as("n2_a")), "id_a")
       .join(sides.select(col("id").as("id_b"), col("vterms").as("tb"),
@@ -195,14 +194,5 @@ object CosinePairs {
           (sqrt(col("n2_a").cast("double")) * sqrt(col("n2_b").cast("double"))))
       .filter(col("cos_raw") >= threshold)
       .select(col("id_a"), col("id_b"), round(col("cos_raw"), 6).as("cosine"))
-    (out, () => { docs.unpersist(); () })
   }
-
-  /** [[tfCosinePairsManaged]] without the cache handle (spec/dev use —
-    * production corpus passes should release).
-    */
-  def tfCosinePairs(df: DataFrame, textCol: String, idCol: String,
-      threshold: Double, shingleN: Int = 3,
-      dfCap: Option[Int] = None): DataFrame =
-    tfCosinePairsManaged(df, textCol, idCol, threshold, shingleN, dfCap)._1
 }

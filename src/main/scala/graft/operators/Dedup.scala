@@ -251,19 +251,9 @@ object Dedup {
     * [[minhashNearDups]] verify would need history shingle sets, which
     * an index that never stores bodies cannot provide, and whose size
     * is unbounded where a signature's is fixed.
-    */
-  def incrementalIngestNearDup(index: DataFrame, batch: DataFrame,
-      textCol: String, idCol: String, threshold: Double = 0.5,
-      numHashes: Int = 64, bands: Int = 16, shingleN: Int = 3,
-      knownHotBands: Option[DataFrame] = None): DataFrame =
-    incrementalIngestNearDupManaged(index, batch, textCol, idCol,
-      threshold, numHashes, bands, shingleN, knownHotBands)._1
-
-  /** [[incrementalIngestNearDup]] plus a release handle for the
-    * internal signature cache (the band screen re-reads it at action
-    * time): call after acting on the result — see
-    * [[minhashNearDupsManaged]]. The no-handle form above leaves the
-    * cache to LRU eviction / session end.
+    *
+    * The internal signature cache (the band screen re-reads it at
+    * action time) is registered with [[Intermediates]].
     *
     * `knownHotBands`: a one-column `band` frame of the index's
     * saturated bands (count > [[HotBandCap]]), precomputed when the
@@ -273,11 +263,10 @@ object Dedup {
     * index does, so it belongs at build time, not per batch). When
     * None the census runs inline (exact, same result).
     */
-  def incrementalIngestNearDupManaged(index: DataFrame, batch: DataFrame,
+  def incrementalIngestNearDup(index: DataFrame, batch: DataFrame,
       textCol: String, idCol: String, threshold: Double = 0.5,
-      numHashes: Int = 64, bands: Int = 16,
-      shingleN: Int = 3,
-      knownHotBands: Option[DataFrame] = None): (DataFrame, () => Unit) = {
+      numHashes: Int = 64, bands: Int = 16, shingleN: Int = 3,
+      knownHotBands: Option[DataFrame] = None): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val rpb = numHashes / bands
     // LOUD parameter guard: the index stores signatures but not the
@@ -309,8 +298,8 @@ object Dedup {
     //    agreement — the same measure as the history screen). The
     //    pair plan is consumed eagerly by the components loop inside
     //    resolveClusters, under the persist below.
-    val sigs = docSignatures(uniq, textCol, idCol, numHashes, shingleN)
-      .persist()
+    val sigs = Intermediates.persist(
+      docSignatures(uniq, textCol, idCol, numHashes, shingleN))
     val pairs = pairsByAgreement(sigs, threshold, bands, rpb)
     val resolved = resolveClusters(uniq, idCol, pairs)
     // 3. exact history screen: digest anti-join (NULL text coalesced
@@ -346,9 +335,7 @@ object Dedup {
     val colliding = batchBands.join(idxBands, Seq("band"))
       .filter(sigAgreement(col("sig"), col("h_sig")) >= threshold)
       .select(col("id").as(idCol)).distinct()
-    val accepted = freshExact.join(colliding, Seq(idCol), "left_anti")
-      .drop("__sha")
-    (accepted, () => { sigs.unpersist(); () })
+    freshExact.join(colliding, Seq(idCol), "left_anti").drop("__sha")
   }
 
   /** [[incrementalIngestDigests]] with a Bloom prefilter: rows whose
@@ -460,7 +447,7 @@ object Dedup {
     */
   /** Boilerplate-saturation cap shared by BOTH band screens: in-batch
     * pairing ([[pairsByAgreement]]) counts a band's batch membership,
-    * the cross-batch history screens ([[incrementalIngestNearDupManaged]]
+    * the cross-batch history screens ([[incrementalIngestNearDup]]
     * and the ingest's index screen) count its index membership — one
     * constant, one policy, so the two decisions agree wherever the
     * populations do.
@@ -494,13 +481,6 @@ object Dedup {
       .select("id_a", "id_b", "est_jaccard")
   }
 
-  /** Near-duplicate pairs by MinHash+LSH with exact-Jaccard verification
-    * of candidates. Output: (id_a, id_b, jaccard) with id_a < id_b,
-    * jaccard >= threshold.
-    *
-    * bands × rowsPerBand must equal the signature length; with 16×4 the
-    * candidate-recall at j=0.8 is ≈ 1-(1-0.8^4)^16 ≈ 0.9997.
-    */
   /** (id, shingle-set, MinHash signature) computed as a single NARROW
     * projection via the native [[graft.plans.MinHashSigExpr]]: no
     * explode, no groupBy — the signature stage is map-only work
@@ -561,56 +541,46 @@ object Dedup {
       .filter(size(col("sh")) > 0)
       .withColumn("sig", TextHashExprs.minhashSig(col("sh"), numHashes))
 
-  /** [[minhashNearDupsManaged]] over a pre-shingled `(id, sh, …)` frame
-    * ([[shingledDocs]]) — the shared-shingle seam. The returned release
-    * handle frees the internal `(id, sh, sig)` cache; the caller owns
-    * the shingled frame's own lifecycle.
+  /** [[minhashNearDups]] over a pre-shingled `(id, sh, …)` frame
+    * ([[shingledDocs]]) — the shared-shingle seam. The caller owns the
+    * shingled frame's own lifecycle.
     */
   private[graft] def minhashFromShingled(
       shingled: DataFrame, threshold: Double,
-      numHashes: Int = 64, bands: Int = 16): (DataFrame, () => Unit) = {
+      numHashes: Int = 64, bands: Int = 16): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     minhashPairsFromSigs(signaturesFromShingled(shingled, numHashes),
       threshold, bands, numHashes / bands)
   }
 
-  /** Convenience form of [[minhashNearDupsManaged]] that leaves the
-    * internal signature cache to LRU eviction / `catalog.clearCache` /
-    * session end. Long-lived sessions issuing many dedup runs should
-    * call the Managed form and release after acting on the result.
+  /** Near-duplicate pairs by MinHash+LSH with exact-Jaccard
+    * verification of candidates: `(id_a, id_b, jaccard)` with
+    * id_a < id_b, jaccard >= threshold. The internal signature cache
+    * is registered with [[Intermediates]].
+    *
+    * bands × rowsPerBand must equal the signature length; with 16×4 the
+    * candidate-recall at j=0.8 is ≈ 1-(1-0.8^4)^16 ≈ 0.9997.
     */
   def minhashNearDups(
       df: DataFrame, textCol: String, idCol: String,
       threshold: Double = 0.5, numHashes: Int = 64,
-      bands: Int = 16, shingleN: Int = 3): DataFrame =
-    minhashNearDupsManaged(df, textCol, idCol, threshold, numHashes,
-      bands, shingleN)._1
-
-  /** [[minhashNearDups]] plus a release handle for the internal signature
-    * cache: call it after consuming the result to free the cached
-    * signatures immediately instead of waiting for LRU eviction /
-    * session end (long-lived sessions issuing many dedup runs should use
-    * this form).
-    */
-  def minhashNearDupsManaged(
-      df: DataFrame, textCol: String, idCol: String,
-      threshold: Double = 0.5, numHashes: Int = 64,
-      bands: Int = 16, shingleN: Int = 3): (DataFrame, () => Unit) = {
+      bands: Int = 16, shingleN: Int = 3): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     minhashPairsFromSigs(
       withSignatures(df, textCol, idCol, numHashes, shingleN),
       threshold, bands, numHashes / bands)
   }
 
-  /** [[minhashNearDupsManaged]] over a precomputed `(id, sh, sig)`
+  /** [[minhashNearDups]] over a precomputed `(id, sh, sig)`
     * frame ([[docSignatures]]) — the single-signature-pass seam: an
     * ingest that needs signatures for pairing AND for band keys
     * computes them once and feeds both stages.
     */
   private[graft] def minhashPairsFromSigs(sigs: DataFrame,
-      threshold: Double, bands: Int, rowsPerBand: Int): (DataFrame, () => Unit) = {
-    val withSig = sigs
-      .persist() // read by both bucket-join branches and both verify joins
+      threshold: Double, bands: Int, rowsPerBand: Int): DataFrame = {
+    // read by both bucket-join branches and both verify joins
+    // (MEMORY_AND_DISK, O(n·(shingles+numHashes)·8B))
+    val withSig = Intermediates.persist(sigs)
     // candidate generation shuffles only (id, band) — 16 bytes of key per
     // row; shingle sets are joined back AFTER pair dedup so the band
     // self-join never carries array payloads
@@ -622,7 +592,7 @@ object Dedup {
       .select(col("l.id").as("id_a"), col("r.id").as("id_b"))
       .dropDuplicates("id_a", "id_b")
     val sets = withSig.select(col("id"), col("sh"))
-    val out = cands
+    cands
       .join(sets.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
       .join(sets.withColumnRenamed("id", "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
       // `sh` is sorted at signature build: one codegen'd merge per
@@ -636,10 +606,6 @@ object Dedup {
         (size(col("sh_a")) + size(col("sh_b")) - col("n_common")).cast("double"))
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
-    // `withSig` must stay cached while the returned lazy plan is alive
-    // (storage MEMORY_AND_DISK, LRU-evicted, O(n·(shingles+numHashes)·8B));
-    // the release handle unpersists it once the caller has acted on `out`.
-    (out, () => { withSig.unpersist(); () })
   }
 
   /** Exact n-gram Jaccard pairs within blocking keys via a PREFIX-FILTERED
@@ -655,22 +621,12 @@ object Dedup {
     * pair. No false negatives: the prefix bound is exact, and
     * every stage is a codegen'd join — no O(block²) pairwise scans. This
     * is the exact ground truth the LSH path is verified against.
-    */
-  def ngramJaccardBlocked(
-      df: DataFrame, textCol: String, idCol: String,
-      blockCols: Seq[String], threshold: Double, shingleN: Int = 3,
-      dfCap: Option[Int] = None): DataFrame =
-    ngramJaccardBlockedManaged(df, textCol, idCol, blockCols, threshold,
-      shingleN, dfCap)._1
-
-  /** [[ngramJaccardBlocked]] plus a release handle for the internal
-    * shingle cache (see [[minhashNearDupsManaged]]).
     *
     * `dfCap`: with it set, shingles appearing in more than `dfCap`
     * documents (globally — document frequency over the DISTINCT shingle
     * sets, before blocking) are removed from the SETS — Jaccard over
     * the rare-shingle subspace, the stop-shingle semantics of
-    * [[graft.operators.CosinePairs.tfCosinePairsManaged]]'s cap and
+    * [[graft.operators.CosinePairs.tfCosinePairs]]'s cap and
     * `text_winnow_pairs`' fingerprint discard, well-defined on both
     * engines rather than a lossy candidate heuristic. This is the
     * saturated-vocabulary guard: the PPJoin prefix filter bounds
@@ -681,30 +637,30 @@ object Dedup {
     * join fan-out at dfCap² regardless of corpus size. None = exact
     * full-vocabulary semantics (the oracle-companion form; quadratic on
     * saturated vocabularies by nature — any exact all-pairs similarity
-    * is).
+    * is). The internal shingle cache is registered with
+    * [[Intermediates]].
     */
-  def ngramJaccardBlockedManaged(
+  def ngramJaccardBlocked(
       df: DataFrame, textCol: String, idCol: String,
       blockCols: Seq[String], threshold: Double, shingleN: Int = 3,
-      dfCap: Option[Int] = None): (DataFrame, () => Unit) =
+      dfCap: Option[Int] = None): DataFrame =
     ngramJaccardFromShingled(
       shingledDocs(df, textCol, idCol, blockCols, shingleN),
-      blockCols, threshold, dfCap, basePersisted = false)
+      blockCols, threshold, dfCap)
 
-  /** [[ngramJaccardBlockedManaged]] over a pre-shingled
+  /** [[ngramJaccardBlocked]] over a pre-shingled
     * `(id, sh, blockCols…)` frame ([[shingledDocs]]) — the shared-shingle
-    * seam. With `basePersisted` the caller's persist already covers the
-    * multi-consumer reads (prefix join + both verify joins), so the
-    * internal persist is skipped on the exact (dfCap-less) path; the
-    * dfCap rebuild still manages its own exploded frame either way.
+    * seam. `base` is persisted for the multi-consumer reads (prefix
+    * join + both verify joins); when the caller already persisted it,
+    * that second persist is a no-op.
     */
   private[graft] def ngramJaccardFromShingled(
       base: DataFrame, blockCols: Seq[String], threshold: Double,
-      dfCap: Option[Int], basePersisted: Boolean): (DataFrame, () => Unit) = {
+      dfCap: Option[Int]): DataFrame = {
     require(threshold > 0.0, "zero-overlap pairs never materialize; threshold must be > 0")
     require(dfCap.forall(_ >= 2), "dfCap >= 2 (df=1 shingles never pair)")
-    val (withSets, releaseCapped): (DataFrame, () => Unit) = dfCap match {
-      case None => (base, () => ())
+    val withSets = dfCap match {
+      case None => base
       case Some(c) =>
         // stop-shingle removal BEFORE sizes/prefixes, so capped-out
         // shingles vanish from the sets on both sides of every pair.
@@ -715,25 +671,22 @@ object Dedup {
         // same outcome as the sz>0 filter on an empty set. `ds` feeds
         // two un-shareable subtrees (the df aggregate and the join
         // probe side — different child plans, no exchange reuse), so it
-        // is persisted for the duration of the returned plan: without
-        // it the native shingling pass over the whole corpus runs
-        // TWICE when `t` materializes. Released with the main handle.
-        val ds = base.select(col("id"), explode(col("sh")).as("s")).persist()
+        // is persisted for the life of the returned plan: without it
+        // the native shingling pass over the whole corpus runs TWICE
+        // when `t` materializes.
+        val ds = Intermediates.persist(
+          base.select(col("id"), explode(col("sh")).as("s")))
         val keep = ds.groupBy("s").agg(count(lit(1)).as("df"))
           .filter(col("df") <= c).select("s")
         val capped = ds.join(keep, "s")
           .groupBy("id").agg(sort_array(collect_list(col("s"))).as("sh"))
-        (base.drop("sh").join(capped, "id"), () => { ds.unpersist(); () })
+        base.drop("sh").join(capped, "id")
     }
-    val tRaw = withSets
+    // read by the prefix join and both verify joins (the size/filter on
+    // top of the cached array column is per-read noise, not a recompute)
+    val t = Intermediates.persist(withSets)
       .withColumn("sz", size(col("sh")))
       .filter(col("sz") > 0)
-    // read by the prefix join and both verify joins: persist unless the
-    // caller's shingled frame is already cached (the size/filter on top
-    // of a cached array column is per-read noise, not a recompute)
-    val (t, releaseT): (DataFrame, () => Unit) =
-      if (basePersisted && dfCap.isEmpty) (tRaw, () => ())
-      else { val p = tRaw.persist(); (p, () => { p.unpersist(); () }) }
     // minimum overlap a qualifying pair must have with THIS set:
     // |∩| ≥ t·|∪| ≥ t·max(|A|,|B|) ≥ ⌈t·|S|⌉ for each side.
     // The 1e-6 slack absorbs double rounding in t·sz: IEEE can round
@@ -776,7 +729,7 @@ object Dedup {
       .select(col("l.id").as("id_a"), col("r.id").as("id_b"))
       .dropDuplicates("id_a", "id_b")
     val sets = t.select(col("id"), col("sh"), col("sz"))
-    val out = cands
+    cands
       .join(sets.select(col("id").as("id_a"), col("sh").as("sh_a"), col("sz").as("sz_a")), "id_a")
       .join(sets.select(col("id").as("id_b"), col("sh").as("sh_b"), col("sz").as("sz_b")), "id_b")
       // verify: one codegen'd sorted merge per candidate (the `sh`
@@ -792,55 +745,18 @@ object Dedup {
         (col("sz_a") + col("sz_b") - col("n_common")).cast("double"))
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
-    (out, () => { releaseT(); releaseCapped() })
-  }
-
-  /** Materialize a (typically expensive) plan to scratch parquet ONCE,
-    * returning the read-back frame plus a release handle that deletes
-    * the scratch dir. Storage-level caching is the wrong tool for a
-    * plan that is both expensive and consumed by several actions (e.g.
-    * a PPJoin edge list feeding the components loop): cached blocks
-    * compete for the very executor memory the plan's own shuffles need,
-    * and an evicted block silently RE-EVALUATES the whole upstream plan
-    * at the next action (measured: sf10 `dedup_components` cost 2.5×
-    * its own edge input when the loop's actions fell out of cache).
-    * The round-trip pins the cost at exactly one evaluation plus one
-    * small columnar write; every later action is a plain scan. Scratch
-    * lives under the Spark checkpoint dir when one is configured (a
-    * shared filesystem on a real cluster); LOCAL MODE may fall back to
-    * the driver's tmp dir (resolved as an explicit `file:` path), but a
-    * non-local session without a checkpoint dir is a loud error —
-    * executors resolving a bare tmp path against a non-local default
-    * filesystem would each write somewhere else.
-    *
-    * SCRATCH-LIFETIME HAZARD: the release handle DELETES the scratch
-    * dir, and any still-lazy (or persisted-but-evictable) plan derived
-    * from the returned frame recomputes THROUGH that scan — on a real
-    * cluster a lost cached block after release fails with
-    * FileNotFoundException instead of recomputing. Callers must fully
-    * materialize everything derived from the returned frame (collect,
-    * write, or cache+count with the cache held for the query's
-    * lifetime) before invoking release, and should release in a
-    * `finally` so exception paths do not leak the dir.
-    */
-  def materializedManaged(df: DataFrame,
-      tag: String = "edges"): (DataFrame, () => Unit) = {
-    val spark = df.sparkSession
-    val base = spark.sparkContext.getCheckpointDir.getOrElse {
-      require(spark.sparkContext.isLocal,
-        "materializedManaged needs a Spark checkpoint dir on a shared " +
-          "filesystem when not in local mode (sc.setCheckpointDir) — " +
-          "the driver-local tmp fallback is meaningless to executors")
-      "file:" + System.getProperty("java.io.tmpdir")
-    }
-    val dir = new org.apache.hadoop.fs.Path(base,
-      s"graft_${tag}_${java.util.UUID.randomUUID().toString.take(12)}")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    df.write.parquet(dir.toString)
-    (spark.read.parquet(dir.toString), () => { fs.delete(dir, true); () })
   }
 
   // --- near-dup cluster resolution --------------------------------------
+
+  /** Edge-count ceiling for the driver-local union-find fast path
+    * (16 B/edge ⇒ ≤ ~16 MB collected). Near-dup edge lists are usually
+    * MUCH smaller than the corpus — at 100 TB the corpus never fits a
+    * driver, but its duplicate-pair list routinely does; crossing the
+    * ceiling falls back to the distributed loop automatically (the same
+    * measure-then-choose move AQE makes for broadcast joins).
+    */
+  val LocalComponentsMaxEdges = 1000000L
 
   /** Connected components over a near-dup pair list: every node gets the
     * MINIMUM id reachable through any chain of pairs as its component
@@ -860,29 +776,13 @@ object Dedup {
     * Input: (id_a, id_b) pairs (any extra columns ignored).
     * Output: (id, component) for every id appearing in a NON-SELF pair
     * (an id paired only with itself is its own trivial component and
-    * emits no row, like any unpaired id).
+    * emits no row, like any unpaired id). The distributed loop's final
+    * label cache is registered with [[Intermediates]]; intermediate
+    * rounds are released as the loop advances.
     */
   def connectedComponents(
       pairs: DataFrame, maxIter: Int = 20,
-      localMaxEdges: Long = LocalComponentsMaxEdges): DataFrame =
-    connectedComponentsManaged(pairs, maxIter, localMaxEdges)._1
-
-  /** [[connectedComponents]] plus a release handle for the final label
-    * cache (see [[minhashNearDupsManaged]]; intermediate rounds are
-    * released as the loop advances).
-    */
-  /** Edge-count ceiling for the driver-local union-find fast path
-    * (16 B/edge ⇒ ≤ ~16 MB collected). Near-dup edge lists are usually
-    * MUCH smaller than the corpus — at 100 TB the corpus never fits a
-    * driver, but its duplicate-pair list routinely does; crossing the
-    * ceiling falls back to the distributed loop automatically (the same
-    * measure-then-choose move AQE makes for broadcast joins).
-    */
-  val LocalComponentsMaxEdges = 1000000L
-
-  def connectedComponentsManaged(
-      pairs: DataFrame, maxIter: Int = 20,
-      localMaxEdges: Long = LocalComponentsMaxEdges): (DataFrame, () => Unit) = {
+      localMaxEdges: Long = LocalComponentsMaxEdges): DataFrame = {
     val spark = pairs.sparkSession
     // lineage truncation per round WITH a releasable handle: iterative
     // DataFrame loops otherwise stack each round's plan on the last and
@@ -938,8 +838,7 @@ object Dedup {
       }
       val labelled = parent.keysIterator
         .map(id => (id, find(id))).toSeq.sortBy(_._1)
-      return (spark.createDataFrame(labelled).toDF("id", "component"),
-        () => ())
+      return spark.createDataFrame(labelled).toDF("id", "component")
     }
     var (labels, release) = materialize(
       edges.groupBy("src")
@@ -991,7 +890,9 @@ object Dedup {
         throw new IllegalArgumentException(
           s"label propagation did not converge in $maxIter rounds")
       }
-      (labels, release)
+      val last = release
+      Intermediates.onRelease(spark)(last())
+      labels
     } finally edges.unpersist()
   }
 
@@ -1073,26 +974,17 @@ object Dedup {
   def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
   /** SimHash near-dup pairs within blocking keys: hamming(sig) <= maxDist.
-    * Cache note as on [[minhashNearDups]]: prefer the Managed form in
-    * long-lived sessions.
+    * The internal signature cache is registered with [[Intermediates]].
     */
   def simhashNearDups(
       df: DataFrame, textCol: String, idCol: String,
-      blockCols: Seq[String], maxDist: Int = 12): DataFrame =
-    simhashNearDupsManaged(df, textCol, idCol, blockCols, maxDist)._1
-
-  /** [[simhashNearDups]] plus a release handle for the internal signature
-    * cache (see [[minhashNearDupsManaged]]).
-    */
-  def simhashNearDupsManaged(
-      df: DataFrame, textCol: String, idCol: String,
-      blockCols: Seq[String], maxDist: Int = 12): (DataFrame, () => Unit) = {
+      blockCols: Seq[String], maxDist: Int = 12): DataFrame = {
     require(maxDist >= 0 && maxDist < 64, "maxDist in [0, 64)")
     // signatures via the native per-row expression — a narrow projection
     // (no explode/groupBy shuffle); persisted because both join branches
     // read it (MEMORY_AND_DISK, O(n·8B))
-    val t = df.select((idCol +: blockCols).map(col) :+
-      graft.plans.TextHashExprs.simhashSig(col(textCol)).as("sig"): _*).persist()
+    val t = Intermediates.persist(df.select((idCol +: blockCols).map(col) :+
+      graft.plans.TextHashExprs.simhashSig(col(textCol)).as("sig"): _*))
     // LOSSLESS band blocking (Manku et al., WWW'07): split the 64 bits
     // into maxDist+1 disjoint bands — a pair within hamming maxDist
     // differs in at most maxDist bands, so BY PIGEONHOLE it agrees
@@ -1109,7 +1001,7 @@ object Dedup {
     // 66 s plain at sf10) — wide radii fall back to the exhaustive
     // block join, which is also exactly the small-block regime they
     // are used in (oracle machinery, not production paths)
-    val out = if (w < 6) {
+    if (w < 6) {
       val l = t.select(Seq(col(idCol).as("id_a"), col("sig").as("sig_a")) ++
         blockCols.map(col): _*)
       val r = t.select(Seq(col(idCol).as("id_b"), col("sig").as("sig_b")) ++
@@ -1142,6 +1034,5 @@ object Dedup {
         .dropDuplicates("id_a", "id_b")
         .select("id_a", "id_b", "hamming")
     }
-    (out, () => { t.unpersist(); () })
   }
 }

@@ -27,30 +27,18 @@ object Graph {
     * the dangling term). Multi-edges count multiply — dedupe first if
     * simple-graph semantics are wanted.
     *
-    * Convenience form of [[pageRankManaged]]: any lineage-cut caches
-    * (none at all when `iters < itersPerCut`, e.g. the 3-iteration
-    * query default) are left to LRU eviction / session end.
+    * Each lineage cut forces the ranks computed so far (one count job
+    * per cut, O(nodes) rows of MEMORY_AND_DISK state) and releases its
+    * predecessor immediately, so at most one rank snapshot is ever
+    * cached; the last one is registered with [[Intermediates]] (none
+    * at all when `iters <= itersPerCut`, e.g. the 3-iteration query
+    * default).
     */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
                iters: Int, damping: Double = 0.85,
                nodes: Option[DataFrame] = None,
                itersPerCut: Int = 8,
-               nodesCount: Option[Long] = None): DataFrame =
-    pageRankManaged(edges, srcCol, dstCol, iters, damping, nodes,
-      itersPerCut, nodesCount)._1
-
-  /** [[pageRank]] plus a release handle for the last lineage-cut cache
-    * (same contract as [[Dedup.connectedComponentsManaged]]: call after
-    * consuming the result; a no-op when no cut happened). Each cut
-    * forces the ranks computed so far (one count job per cut, O(nodes)
-    * rows of MEMORY_AND_DISK state) and releases its predecessor
-    * immediately, so at most one rank snapshot is ever cached.
-    */
-  def pageRankManaged(edges: DataFrame, srcCol: String, dstCol: String,
-               iters: Int, damping: Double = 0.85,
-               nodes: Option[DataFrame] = None,
-               itersPerCut: Int = 8,
-               nodesCount: Option[Long] = None): (DataFrame, () => Unit) = {
+               nodesCount: Option[Long] = None): DataFrame = {
     require(iters >= 1, "pageRank: iters >= 1")
     require(itersPerCut >= 1, "pageRank: itersPerCut >= 1")
     val spark = edges.sparkSession
@@ -75,7 +63,7 @@ object Graph {
     val nodeDeg = ns.join(deg, Seq("id"), "left")
       .select(col("id"), coalesce(col("deg"), lit(0L)).as("deg"))
     var ranks = nodeDeg.select(col("id"), lit(1.0 / n).as("r"))
-    var release: () => Unit = () => ()
+    var cut: Option[org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]] = None
     for (i <- 1 to iters) {
       val withDeg = ranks.join(nodeDeg, "id")
       // dangling (deg = 0) rank mass, as a broadcast scalar — not head()
@@ -93,18 +81,18 @@ object Graph {
           (lit((1 - damping) / n) + lit(damping) *
             (coalesce(col("in_c"), lit(0.0)) + col("m") / n)).as("r"))
       if (i % itersPerCut == 0 && i < iters) {
-        // persisted-RDD round-trip (see connectedComponentsManaged): cuts
+        // persisted-RDD round-trip (see Dedup.connectedComponents): cuts
         // the plan AND lets the previous snapshot free deterministically.
         // The count forces THIS snapshot before its predecessor goes away
         val rdd = ranks.rdd
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         rdd.count()
-        val prev = release
         ranks = spark.createDataFrame(rdd, ranks.schema)
-        prev()
-        release = () => { rdd.unpersist(false); () }
+        cut.foreach(_.unpersist(false))
+        cut = Some(rdd)
       }
     }
-    (ranks.select(col("id"), col("r").as("pr")), release)
+    cut.foreach(rdd => Intermediates.onRelease(spark)(rdd.unpersist(false)))
+    ranks.select(col("id"), col("r").as("pr"))
   }
 }

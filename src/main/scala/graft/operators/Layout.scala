@@ -70,15 +70,11 @@ object Layout {
     * result is independent of partition boundaries.
     *
     * Output: input columns + (z, file_id). Deterministic: the tiebreak
-    * column must be unique per row. Returns the frame plus a release
-    * handle for the internal sorted cache (the Managed contract).
+    * column must be unique per row. The internal sorted cache is
+    * registered with [[Intermediates]].
     */
   def zorderFiles(df: DataFrame, z: Column, tiebreak: Column,
-      nFiles: Int): DataFrame =
-    zorderFilesManaged(df, z, tiebreak, nFiles)._1
-
-  def zorderFilesManaged(df: DataFrame, z: Column, tiebreak: Column,
-      nFiles: Int): (DataFrame, () => Unit) = {
+      nFiles: Int): DataFrame = {
     require(nFiles >= 1, "nFiles >= 1")
     val spark = df.sparkSession
     val parts = spark.sessionState.conf.numShufflePartitions
@@ -86,11 +82,12 @@ object Layout {
     // phase keys off the column value — NOT TaskContext.getPartitionId,
     // whose value is the enclosing stage's partition index and shifts
     // when a downstream union/recompute wraps this plan
-    val sorted = df.withColumn("z", z).withColumn("_tb", tiebreak.cast("long"))
-      .repartitionByRange(parts, col("z"), col("_tb"))
-      .sortWithinPartitions(col("z"), col("_tb"))
-      .withColumn("_pid", spark_partition_id())
-      .persist() // the count phase and the rank phase must see one sort
+    // the count phase and the rank phase must see one sort
+    val sorted = Intermediates.persist(
+      df.withColumn("z", z).withColumn("_tb", tiebreak.cast("long"))
+        .repartitionByRange(parts, col("z"), col("_tb"))
+        .sortWithinPartitions(col("z"), col("_tb"))
+        .withColumn("_pid", spark_partition_id()))
     val counts = sorted.groupBy("_pid").agg(count(lit(1)).as("_n"))
       .collect().map(r => (r.getInt(0), r.getLong(1))).toMap
     val offsets = new Array[Long](parts)
@@ -111,10 +108,9 @@ object Layout {
       .partitionBy("_pid").orderBy("z", "_tb")
     val rank = element_at(offArr, col("_pid") + 1) +
       row_number().over(w).cast("long") - 1
-    val out = sorted
+    sorted
       .withColumn("file_id", ((rank * nFiles) / lit(totalRows)).cast("int"))
       .drop("_tb", "_pid")
-    (out, () => { sorted.unpersist(); () })
   }
 
   /** Per-file min/max spans of the laid-out dimensions — the pruning

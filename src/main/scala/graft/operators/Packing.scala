@@ -32,19 +32,12 @@ object Packing {
     * the packing order); token counts are capped at the budget per the
     * grid semantics (a doc longer than the budget still gets a bin —
     * callers wanting to drop or split oversized docs filter first).
+    * The internal range-partitioned cache is registered with
+    * [[Intermediates]].
     */
   def packByBudget(
       df: DataFrame, idCol: String, tokenCol: String,
-      budget: Long): DataFrame =
-    packByBudgetManaged(df, idCol, tokenCol, budget)._1
-
-  /** [[packByBudget]] plus a release handle for the internal range-
-    * partitioned cache (same contract as
-    * [[Dedup.minhashNearDupsManaged]]: call after consuming the result).
-    */
-  def packByBudgetManaged(
-      df: DataFrame, idCol: String, tokenCol: String,
-      budget: Long): (DataFrame, () => Unit) = {
+      budget: Long): DataFrame = {
     require(budget > 0, "token budget must be positive")
     val spark = df.sparkSession
     val parts = spark.sessionState.conf.numShufflePartitions
@@ -52,12 +45,12 @@ object Packing {
     // TaskContext.getPartitionId in a later pass, whose value is the
     // enclosing stage's partition index and shifts when a downstream
     // union/recompute wraps this plan (same fix as Layout.zorderFiles)
-    val slim = df
+    // both scan phases must see one materialization
+    val slim = Intermediates.persist(df
       .select(col(idCol).cast("long").as("_id"), col(tokenCol).cast("long").as("_tok"))
       .repartitionByRange(parts, col("_id"))
       .sortWithinPartitions("_id")
-      .withColumn("_pid", spark_partition_id())
-      .persist() // both scan phases must see one materialization
+      .withColumn("_pid", spark_partition_id()))
     val totals = slim
       .groupBy("_pid").agg(sum("_tok").as("_t"))
       .collect().map(r => (r.getInt(0), r.getLong(1))).toMap
@@ -78,10 +71,9 @@ object Packing {
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
     val run = element_at(offArr, col("_pid") + 1) +
       coalesce(sum("_tok").over(w), lit(0L))
-    val out = slim
+    slim
       .withColumn("_run", run)
       .withColumn("seq_id", expr(s"_run div ${budget}L"))
       .select(col("_id").as(idCol), col("_tok").as("n_tokens"), col("seq_id"))
-    (out, () => { slim.unpersist(); () })
   }
 }

@@ -165,66 +165,29 @@ object Sampling {
     * banding misses a (1−j^r)^b fraction of true-j pairs, so this is
     * leakproof up to LSH recall — the exhaustive alternative is the
     * O(n²) oracle, not a production shape.
+    *
+    * Returns `(split, pairs)`: the split and the verified near-dup pair
+    * list `(id_a, id_b)` its components were built from — for callers
+    * that audit the split against the pairs (the
+    * `pipe_split_leakproof_neardup_leaks` census joins both) with ONE
+    * MinHash signature/band/verify pass. The pair list is persisted
+    * (duplicate-pair scale, not corpus scale) and registered with
+    * [[Intermediates]], like the signature cache under it; the
+    * components loop's measure-then-choose count fills it, so
+    * split-only callers pay no extra job for it.
     */
   def leakproofSplitNearDup(df: DataFrame, textCol: String, idCol: String,
       threshold: Double = 0.5,
-      trainPerMille: Int = 900, valPerMille: Int = 950): DataFrame = {
+      trainPerMille: Int = 900, valPerMille: Int = 950): (DataFrame, DataFrame) = {
     require(0 < trainPerMille && trainPerMille <= valPerMille && valPerMille <= 1000,
       "0 < trainPerMille <= valPerMille <= 1000")
     Checks.requireIntegralId(df, idCol,
       s"leakproofSplitNearDup: id column '$idCol'")
-    val (nd, release) =
-      Dedup.minhashNearDupsManaged(df, textCol, idCol, threshold)
-    val edges = exactDupEdges(df, textCol, idCol)
-      .unionByName(nd.select("id_a", "id_b"))
-    // connectedComponents materializes the edge list eagerly (its
-    // measure-then-choose count), so the near-dup plan is consumed
-    // before the signature cache is released. Deliberately NOT the
-    // Managed delegate: split-only callers would pay its pair-list
-    // persist + count for a frame they never read (r17: measured +0.7 s
-    // at sf1 on pipe_split_leakproof_neardup)
-    val comps = Dedup.connectedComponents(edges)
-    release()
-    splitFromComponents(df, idCol, comps, trainPerMille, valPerMille)
-  }
-
-  /** [[leakproofSplitNearDup]] that ALSO returns the verified near-dup
-    * pair list the split's components were built from, materialized —
-    * for callers that audit the split against the pairs (the
-    * `pipe_split_leakproof_neardup_leaks` census joins both), computing
-    * the MinHash signature/band/verify pass ONCE instead of once per
-    * consumer (r17: that query ran the full LSH machinery twice).
-    *
-    * LIFECYCLE (judge r17 advice, same contract as
-    * [[graft.operators.Dedup.minhashNearDupsManaged]]): BOTH returned
-    * frames must be fully materialized (collect/write/cache+count)
-    * BEFORE the release handle is invoked — the split frame stays lazy
-    * over the persisted pair list, so releasing first silently
-    * recomputes the full LSH signature/band/verify pass on the split's
-    * next action.
-    */
-  def leakproofSplitNearDupManaged(
-      df: DataFrame, textCol: String, idCol: String,
-      threshold: Double = 0.5,
-      trainPerMille: Int = 900, valPerMille: Int = 950)
-      : (DataFrame, DataFrame, () => Unit) = {
-    require(0 < trainPerMille && trainPerMille <= valPerMille && valPerMille <= 1000,
-      "0 < trainPerMille <= valPerMille <= 1000")
-    Checks.requireIntegralId(df, idCol,
-      s"leakproofSplitNearDup: id column '$idCol'")
-    val (nd, sigRelease) =
-      Dedup.minhashNearDupsManaged(df, textCol, idCol, threshold)
-    // materialize the pair list (duplicate-pair scale, not corpus
-    // scale) BEFORE the signature cache releases — a lazy plan
-    // surviving the release would silently recompute the whole LSH
-    // pass on the next consumer
-    val pairs = nd.select("id_a", "id_b").persist()
-    pairs.count()
+    val pairs = Intermediates.persist(
+      Dedup.minhashNearDups(df, textCol, idCol, threshold).select("id_a", "id_b"))
     val edges = exactDupEdges(df, textCol, idCol).unionByName(pairs)
     val comps = Dedup.connectedComponents(edges)
-    sigRelease()
-    (splitFromComponents(df, idCol, comps, trainPerMille, valPerMille),
-      pairs, () => { pairs.unpersist(); () })
+    (splitFromComponents(df, idCol, comps, trainPerMille, valPerMille), pairs)
   }
 
   /** (rep, member) edges of the exact-content duplicate groups — the

@@ -305,28 +305,13 @@ object TextAnalysis {
     * Output: (idCol, n_tokens, lm_score). Docs: rounding to 6 dp keeps
     * the [0, ~10] score range well inside double exactness.
     */
-  def lmScore(df: DataFrame, textCol: String, idCol: String): DataFrame = {
-    // the token table is evaluated twice (model build + score join) —
-    // Spark plans share no subtrees. Fine for one-shot queries; at
-    // corpus scale use [[lmScoreManaged]], which persists the token
-    // table so tokenization/explode runs once
-    lmScoreOver(tokenTable(df, textCol, idCol), idCol)
-  }
-
-  /** [[lmScore]] with the exploded token table persisted, so the
-    * heaviest pass (tokenize + explode over the whole corpus) runs
-    * ONCE instead of twice (model build + score join). Returns the
-    * result plus a release handle for the token cache — same contract
-    * as [[Dedup.minhashNearDupsManaged]]: call it after consuming the
-    * result. The cache is MEMORY_AND_DISK and token-table-sized
-    * (larger than the corpus), so the managed form is for pipelines
-    * that would otherwise pay the double scan, not a default.
-    */
-  def lmScoreManaged(
-      df: DataFrame, textCol: String, idCol: String): (DataFrame, () => Unit) = {
-    val toks = tokenTable(df, textCol, idCol).persist()
-    (lmScoreOver(toks, idCol), () => { toks.unpersist(); () })
-  }
+  def lmScore(df: DataFrame, textCol: String, idCol: String): DataFrame =
+    // the exploded token table is read by the model build AND the score
+    // join — Spark plans share no subtrees, so it is persisted (and
+    // registered with [[Intermediates]]): the heaviest pass (tokenize +
+    // explode over the whole corpus, MEMORY_AND_DISK, larger than the
+    // corpus) runs ONCE instead of twice
+    lmScoreOver(Intermediates.persist(tokenTable(df, textCol, idCol)), idCol)
 
   private def tokenTable(df: DataFrame, textCol: String, idCol: String): DataFrame =
     df.select(col(idCol), explode(tokens(lower(trim(col(textCol))))).as("tok"))
@@ -366,25 +351,14 @@ object TextAnalysis {
     * over the token array + explode — no per-doc window/sort, so no
     * shuffle before the model groupBys); both model aggregations are
     * map-side-combined counts on (prev, tok) / (prev); the totals row
-    * broadcasts. This unmanaged form evaluates the bigram subtree twice
-    * (model build + score join); the registered query and corpus-scale
-    * pipelines use [[lmBigramScoreManaged]], which persists it for one
-    * pass.
+    * broadcasts. The exploded bigram table is persisted the [[lmScore]]
+    * way, so the heaviest pass (tokenize + per-doc bigram explode over
+    * the whole corpus) runs ONCE instead of twice (bigram-model build +
+    * score join).
     */
   def lmBigramScore(df: DataFrame, textCol: String, idCol: String): DataFrame =
-    lmBigramOver(bigramTable(df, textCol, idCol), df, textCol, idCol)
-
-  /** [[lmBigramScore]] with the exploded bigram table persisted so the
-    * heaviest pass (tokenize + per-doc bigram explode over the whole
-    * corpus) runs ONCE instead of twice (bigram-model build + score
-    * join) — the [[lmScoreManaged]] contract: consume the result, then
-    * call the release handle.
-    */
-  def lmBigramScoreManaged(
-      df: DataFrame, textCol: String, idCol: String): (DataFrame, () => Unit) = {
-    val bg = bigramTable(df, textCol, idCol).persist()
-    (lmBigramOver(bg, df, textCol, idCol), () => { bg.unpersist(); () })
-  }
+    lmBigramOver(Intermediates.persist(bigramTable(df, textCol, idCol)),
+      df, textCol, idCol)
 
   private def bigramTable(df: DataFrame, textCol: String, idCol: String): DataFrame = {
     val arr = tokens(lower(trim(col(textCol))))

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.Dedup
+import graft.operators.{CosinePairs, Dedup, Intermediates}
 import graft.sources.Tables
 
 /** Deduplication query surface over `documents` (north-star extension).
@@ -56,14 +56,9 @@ object DedupQueries {
     // integer dot products over 3-gram tf vectors, so the DuckDB replay
     // is bit-exact; the registered plan is the prefix-filtered
     // production shape, the oracle brute-forces the same math
-    "dedup_cosine_pairs" -> ((s, d) => {
-      val (pairs, release) = graft.operators.CosinePairs
-        .tfCosinePairsManaged(Tables.documents(s, d), "text", "doc_id",
-          threshold = 0.6)
-      val out = pairs.orderBy("id_a", "id_b")
-      out.cache().count() // materialize before releasing the vector cache
-      release()
-      out}),
+    "dedup_cosine_pairs" -> ((s, d) =>
+      CosinePairs.tfCosinePairs(Tables.documents(s, d), "text", "doc_id",
+        threshold = 0.6).orderBy("id_a", "id_b")),
 
     // the SCALE form of the APSS join: df-capped stop-shingle removal
     // (cosine over the rare-term subspace). A fixed absolute cap bounds
@@ -74,14 +69,9 @@ object DedupQueries {
     // SFs the cap bites (df 16..25 terms dropped at sf0.1) without
     // losing any qualifying pair, so this row checks the cap path
     // itself, not just the uncapped plan again
-    "dedup_cosine_capped" -> ((s, d) => {
-      val (pairs, release) = graft.operators.CosinePairs
-        .tfCosinePairsManaged(Tables.documents(s, d), "text", "doc_id",
-          threshold = 0.6, dfCap = Some(15))
-      val out = pairs.orderBy("id_a", "id_b")
-      out.cache().count() // materialize before releasing the vector cache
-      release()
-      out}),
+    "dedup_cosine_capped" -> ((s, d) =>
+      CosinePairs.tfCosinePairs(Tables.documents(s, d), "text", "doc_id",
+        threshold = 0.6, dfCap = Some(15)).orderBy("id_a", "id_b")),
 
     // MinHash+LSH near-dups (hash-based candidates; rows-only — ground
     // truth asserted in DedupSpec against dedup_ngram_jaccard)
@@ -93,49 +83,28 @@ object DedupQueries {
     // near-dup cluster resolution: exact-Jaccard pairs → connected
     // components → (id, component) labels (min-id canonical docs)
     "dedup_components" -> ((s, d) => {
-      val (pairs, releasePairs) = Dedup.ngramJaccardBlockedManaged(
-        Tables.documents(s, d), "text", "doc_id",
-        Seq("lang", "source"), threshold = 0.5)
-      // the exact PPJoin edge plan is this query's whole cost:
-      // materialize it to scratch parquet ONCE before the components
+      // the exact PPJoin edge plan is this query's whole cost: it
+      // round-trips through scratch parquet ONCE before the components
       // loop, so no loop action can re-evaluate it (a storage-cache
-      // eviction did exactly that at sf10 — see materializedManaged),
-      // then free the shingle cache before the loop allocates. The
-      // OUTPUT is materialized (cache + count) before the scratch dir
-      // is deleted — a lazy plan surviving the release would recompute
-      // through the deleted scan on any block loss — and the release
-      // sits in a finally so failure paths cannot leak the dir
-      val (edges, releaseEdges) = Dedup.materializedManaged(
-        pairs.select("id_a", "id_b"), "cc_edges")
-      releasePairs()
-      try {
-        val out = Dedup.connectedComponents(edges).orderBy("id")
-        out.cache().count()
-        out
-      } finally releaseEdges()}),
+      // eviction did exactly that at sf10 — see Intermediates.scratch),
+      // and the shingle cache is freed before the loop allocates
+      val edges = Intermediates.scratch("cc_edges")(
+        Dedup.ngramJaccardBlocked(Tables.documents(s, d), "text", "doc_id",
+          Seq("lang", "source"), threshold = 0.5).select("id_a", "id_b"))
+      Dedup.connectedComponents(edges).orderBy("id")}),
 
     // full near-dup resolution: pairs → clusters → one canonical doc
     // per cluster + every unpaired doc (the end-to-end dedup pipeline)
     "dedup_resolve" -> ((s, d) => {
       val docs = Tables.documents(s, d)
-      val (pairs, releasePairs) = Dedup.ngramJaccardBlockedManaged(
-        docs, "text", "doc_id", Seq("lang", "source"), threshold = 0.5)
-      // same single-evaluation pin as dedup_components: the edge plan
-      // round-trips through scratch parquet before the components
-      // loop, and the aggregated output materializes (cache + count)
-      // before the finally deletes the scratch — resolveClusters'
-      // kept anti-join otherwise executes lazily after release
-      val (edges, releaseEdges) = Dedup.materializedManaged(
-        pairs.select("id_a", "id_b"), "resolve_edges")
-      releasePairs()
-      try {
-        val out = Dedup.resolveClusters(docs, "doc_id", edges)
-          .groupBy("lang")
-          .agg(count(lit(1)).as("n_kept"))
-          .orderBy("lang")
-        out.cache().count()
-        out
-      } finally releaseEdges()}),
+      // same single-evaluation pin as dedup_components
+      val edges = Intermediates.scratch("resolve_edges")(
+        Dedup.ngramJaccardBlocked(docs, "text", "doc_id",
+          Seq("lang", "source"), threshold = 0.5).select("id_a", "id_b"))
+      Dedup.resolveClusters(docs, "doc_id", edges)
+        .groupBy("lang")
+        .agg(count(lit(1)).as("n_kept"))
+        .orderBy("lang")}),
 
     // PRODUCTION components: the identical connectedComponents loop fed
     // by MinHash+LSH edges — what a 100 TB pipeline actually runs (the
@@ -143,12 +112,10 @@ object DedupQueries {
     // recursive-CTE oracle demands exact edges; SCALE.md measures the
     // difference). Rows-only label table; the checked property is
     // dedup_components_refine below
-    "dedup_components_minhash" -> ((s, d) => {
-      val (pairs, releasePairs) = Dedup.minhashNearDupsManaged(
-        Tables.documents(s, d), "text", "doc_id", threshold = 0.5)
-      val comps = Dedup.connectedComponents(pairs)
-      releasePairs()
-      comps.orderBy("id")}),
+    "dedup_components_minhash" -> ((s, d) =>
+      Dedup.connectedComponents(Dedup.minhashNearDups(
+        Tables.documents(s, d), "text", "doc_id", threshold = 0.5))
+        .orderBy("id")),
 
     // CHECKED property for the production path (the superset move
     // lifted from pairs to components): MinHash candidates contain
@@ -165,10 +132,7 @@ object DedupQueries {
       // derives its signature cache FROM it instead of from a second
       // corpus scan); the derivations are expression-identical, so the
       // pair sets (and this row's asserted empty set) are bit-for-bit
-      // unchanged. EAGER entry: the output is cache()d + counted before
-      // the shared cache is released (a lazy plan would re-shingle on
-      // the consumer's action), so the registry closure executes on
-      // construction — the dedup_components pattern.
+      // unchanged.
       // EVALUATION ORDER MATTERS: the exact pair list is materialized
       // FIRST, while the shared cache is still cold — the PPJoin's
       // prefix self-join then plans against the parquet child's
@@ -177,35 +141,27 @@ object DedupQueries {
       // in-memory stats flip the self-join to a sort-merge over two
       // 36 MB exchanges, 2.2× slower). The MinHash pass runs second and
       // derives its signatures from the now-warm cache.
-      val shared = Dedup.shingledDocs(docs, "text", "doc_id",
-        Seq("lang", "source")).persist()
-      var releasePairs: () => Unit = () => ()
-      var releaseExact: () => Unit = () => ()
-      try {
-        val exact = Dedup.ngramJaccardFromShingled(shared,
-          Seq("lang", "source"), threshold = 0.5, dfCap = None,
-          basePersisted = true)._1.select("id_a", "id_b")
-        exact.cache().count()
-        releaseExact = () => { exact.unpersist(); () }
-        val (pairs, rp) = Dedup.minhashFromShingled(shared, threshold = 0.5)
-        releasePairs = rp
-        val mh = Dedup.connectedComponents(pairs)
-        val ca = mh.select(col("id").as("id_a"), col("component").as("comp_a"))
-        val cb = mh.select(col("id").as("id_b"), col("component").as("comp_b"))
-        // label tables scale with the paired-doc count — same
-        // never-broadcast discipline as the superset rows
-        val out = exact.join(ca.hint("merge"), Seq("id_a"), "left")
-          .join(cb.hint("merge"), Seq("id_b"), "left")
-          // a missing label (endpoint absent from the MinHash pair list)
-          // is also a violation — coalesce to distinct sentinels so null
-          // never silently equals null
-          .filter(coalesce(col("comp_a"), lit(-1L)) =!=
-            coalesce(col("comp_b"), lit(-2L)))
-          .select("id_a", "id_b")
-          .orderBy("id_a", "id_b")
-        out.cache().count()
-        out
-      } finally { releasePairs(); releaseExact(); shared.unpersist(); () }}),
+      val shared = Intermediates.persist(Dedup.shingledDocs(docs, "text",
+        "doc_id", Seq("lang", "source")))
+      val exact = Intermediates.persist(Dedup.ngramJaccardFromShingled(
+        shared, Seq("lang", "source"), threshold = 0.5, dfCap = None)
+        .select("id_a", "id_b"))
+      exact.count()
+      val mh = Dedup.connectedComponents(
+        Dedup.minhashFromShingled(shared, threshold = 0.5))
+      val ca = mh.select(col("id").as("id_a"), col("component").as("comp_a"))
+      val cb = mh.select(col("id").as("id_b"), col("component").as("comp_b"))
+      // label tables scale with the paired-doc count — same
+      // never-broadcast discipline as the superset rows
+      exact.join(ca.hint("merge"), Seq("id_a"), "left")
+        .join(cb.hint("merge"), Seq("id_b"), "left")
+        // a missing label (endpoint absent from the MinHash pair list)
+        // is also a violation — coalesce to distinct sentinels so null
+        // never silently equals null
+        .filter(coalesce(col("comp_a"), lit(-1L)) =!=
+          coalesce(col("comp_b"), lit(-2L)))
+        .select("id_a", "id_b")
+        .orderBy("id_a", "id_b")}),
 
     // SimHash near-dups within blocks (rows-only)
     // radius 3 = the Manku et al. (WWW'07) web-scale setting, and the

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Chunking, Decontaminate, Dedup, Sampling, Search, Similarity, TextAnalysis}
+import graft.operators.{Chunking, Decontaminate, Dedup, Intermediates, Sampling, Search, Similarity, TextAnalysis}
 import graft.sources.Tables
 
 /** Corpus-preparation pipeline stages a training-data pipeline runs
@@ -14,12 +14,6 @@ import graft.sources.Tables
   * sha-256 digests, doubles rounded before comparison/ordering).
   */
 object PipelineQueries {
-
-  // release handle of the previous near-dup-ingest signature cache
-  // (the managed form frees it when the NEXT invocation runs — same
-  // pattern as TextQueries.lmBigramRelease)
-  private val ndIngestRelease =
-    new java.util.concurrent.atomic.AtomicReference[() => Unit](() => ())
 
   /** Shared fixture of the near-dup ingest rows: the history is 80% of
     * the corpus, the batch is the %5==0 docs plus replays of the %7==0
@@ -90,12 +84,8 @@ object PipelineQueries {
 
   private def ndIngestAccepted(s: SparkSession, d: String): DataFrame = {
     val (idx, hot, batch) = ndIngestParts(s, d)
-    ndIngestRelease.getAndSet(() => ()).apply()
-    val (accepted, release) =
-      Dedup.incrementalIngestNearDupManaged(idx, batch, "text", "doc_id",
-        knownHotBands = Some(hot))
-    ndIngestRelease.set(release)
-    accepted
+    Dedup.incrementalIngestNearDup(idx, batch, "text", "doc_id",
+      knownHotBands = Some(hot))
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -268,12 +258,9 @@ object PipelineQueries {
       // entire ingest (signature pass, in-batch resolve, exact + band
       // screens) evaluates twice under the one action (measured at
       // sf0.1: the plan carried 166 parquet scans / 214 Exchanges;
-      // with it, half — the r17 plan diff). Tiny frame (doc_id, sha),
-      // materialized by the count below, released after the output
-      // materializes (the dedup_components pattern)
-      val accepted = ndIngestAccepted(s, d)
-        .select(col("doc_id"), sha2(col("text"), 256).as("sha"))
-        .persist()
+      // with it, half — the r17 plan diff). Tiny frame (doc_id, sha)
+      val accepted = Intermediates.persist(ndIngestAccepted(s, d)
+        .select(col("doc_id"), sha2(col("text"), 256).as("sha")))
       val histShas = history.select(sha2(col("text"), 256).as("sha")).distinct()
       val viol1 = accepted.join(histShas, Seq("sha"), "left_semi")
         .select(col("doc_id"), lit("exact_in_history").as("reason"))
@@ -283,11 +270,7 @@ object PipelineQueries {
       val viol2 = accepted.join(minPerText, "sha")
         .filter(col("doc_id") =!= col("keep"))
         .select(col("doc_id"), lit("not_min_of_batch_group").as("reason"))
-      val out = viol1.unionByName(viol2).orderBy("doc_id", "reason")
-      // try/finally (r18, judge advice): a throwing count must not leak
-      // the persisted ingest frame until the next catalog clear
-      try { out.cache().count(); out }
-      finally { accepted.unpersist(); () }}),
+      viol1.unionByName(viol2).orderBy("doc_id", "reason")}),
 
     // LEAKAGE-FREE split: same 90/5/5 arithmetic but decided once per
     // content-duplicate CLUSTER (bucket of the min-id representative's
@@ -322,7 +305,7 @@ object PipelineQueries {
     // property
     "pipe_split_leakproof_neardup" -> ((s, d) =>
       Sampling.leakproofSplitNearDup(Tables.documents(s, d), "text", "doc_id")
-        .groupBy("split")
+        ._1.groupBy("split")
         .agg(count(lit(1)).as("n_docs"),
           countDistinct("cluster_rep").as("n_clusters"))
         .orderBy("split")),
@@ -336,13 +319,12 @@ object PipelineQueries {
       val docs = Tables.documents(s, d)
       // one MinHash pass serves both the split's components AND the v2
       // pair audit (r17: the pair list here was a SECOND full LSH
-      // signature/band/verify pass over the corpus — the managed form
-      // returns the identical materialized pair frame the split was
-      // built from). split itself feeds three consumers (v1, sa, sb),
-      // so it persists until the output materializes
-      val (split0, pairs, release) = Sampling
-        .leakproofSplitNearDupManaged(docs, "text", "doc_id", 0.5)
-      val split = split0.persist()
+      // signature/band/verify pass over the corpus — the split returns
+      // the identical persisted pair frame it was built from). split
+      // itself feeds three consumers (v1, sa, sb), so it is persisted too
+      val (split0, pairs) = Sampling
+        .leakproofSplitNearDup(docs, "text", "doc_id", 0.5)
+      val split = Intermediates.persist(split0)
       val v1 = split.groupBy("cluster_rep")
         .agg(countDistinct("split").as("n_splits"))
         .filter(col("n_splits") > 1)
@@ -355,11 +337,7 @@ object PipelineQueries {
         .filter(col("split_a") =!= col("split_b"))
         .select(col("id_a"), col("id_b"),
           lit("neardup_pair_straddles").as("reason"))
-      val out = v1.unionByName(v2).orderBy("reason", "id_a", "id_b")
-      // try/finally (r18, judge advice): a throwing count must not leak
-      // the MinHash pair persist or the split cache
-      try { out.cache().count(); out }
-      finally { release(); split.unpersist(); () }}),
+      v1.unionByName(v2).orderBy("reason", "id_a", "id_b")}),
 
     // passage-level duplication census: per doc, distinct 4-gram count
     // and how many of those grams appear in >= 2 docs. Spark counts
@@ -453,16 +431,12 @@ object PipelineQueries {
             .as("qb"),
           graft.operators.Layout.bucketize(
             col("n_chars"), 0.0, 1024.0, bits = 4).as("lb"))
-      val (laidOut, release) = graft.operators.Layout.zorderFilesManaged(
+      val laidOut = graft.operators.Layout.zorderFiles(
         feat,
         graft.operators.Layout.zValue(col("qb"), col("lb"), bits = 4),
         col("doc_id"), nFiles = 8)
-      val out = graft.operators.Layout.fileSpans(laidOut,
-        Seq("q" -> col("qb"), "len" -> col("lb")))
-      // materialize before the sorted cache releases; try/finally (r18,
-      // judge advice) so a throwing count cannot leak it
-      try { out.cache().count(); out }
-      finally { release(); () }}),
+      graft.operators.Layout.fileSpans(laidOut,
+        Seq("q" -> col("qb"), "len" -> col("lb")))}),
 
     // per-source document cap (RefinedWeb's "at most N per domain"):
     // rank in deterministic shuffle-key order so the kept set is an

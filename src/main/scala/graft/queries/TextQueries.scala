@@ -12,17 +12,6 @@ import graft.sources.Tables
   */
 object TextQueries {
 
-  /** Deferred release handle for text_lm_score's token cache (see the
-    * query comment): the registered query must return a lazy result, so
-    * its cache outlives the call and is freed on the next invocation.
-    */
-  private val lmScoreRelease =
-    new java.util.concurrent.atomic.AtomicReference[() => Unit](() => ())
-
-  /** Same contract for text_lm_bigram's bigram-table cache. */
-  private val lmBigramRelease =
-    new java.util.concurrent.atomic.AtomicReference[() => Unit](() => ())
-
   /** Content-stamped memo of the longest-duplicate binary search (the
     * [[BuiltOnce]] move): L* is a property of the corpus, so
     * `text_longest_dup` and its `_bound` maximality companion share ONE
@@ -598,36 +587,24 @@ object TextQueries {
     // add-one-smoothed unigram LM surprisal (CCNet-style statistical
     // quality): model = corpus token frequencies, score = mean
     // −log10 p(tok). Per-token log-probs rounded then decimal-summed →
-    // bit-stable at any parallelism, oracle-checked end to end
-    // registered through the MANAGED single-pass form: the exploded
-    // token table (the heaviest pass — larger than the corpus) is
-    // persisted so tokenize+explode runs once across model build,
-    // totals, and score join. The result is returned LAZILY (the
-    // caller's action reads through the cache); the cache is released
-    // on the NEXT invocation, so at most one token cache is ever alive
-    // — an eager localCheckpoint here would re-add a full extra job
-    // (measured +0.4 s at sf0.1, DevLm) for no correctness gain. The
-    // plain lmScore would evaluate the token subtree twice.
-    "text_lm_score" -> ((s, d) => {
-      lmScoreRelease.getAndSet(() => ()).apply() // free the previous cache
-      val (res, release) = graft.operators.TextAnalysis.lmScoreManaged(
-        Tables.documents(s, d), "text", "doc_id")
-      lmScoreRelease.set(release)
-      res.orderBy("doc_id")
-    }),
+    // bit-stable at any parallelism, oracle-checked end to end. The
+    // exploded token table (the heaviest pass — larger than the corpus)
+    // is persisted so tokenize+explode runs once across model build,
+    // totals, and score join; the result is returned LAZILY (the
+    // caller's action reads through the cache) — an eager
+    // localCheckpoint here would re-add a full extra job (measured
+    // +0.4 s at sf0.1, DevLm) for no correctness gain
+    "text_lm_score" -> ((s, d) =>
+      lmScore(Tables.documents(s, d), "text", "doc_id").orderBy("doc_id")),
 
     // interpolated bigram LM (Jelinek–Mercer λ=½ over MLE bigram +
     // add-one unigram): mean −log10 p per doc over its interior
     // bigrams — one model order above text_lm_score, same
-    // rounded-log/decimal-sum engine-parity recipe; managed so the
-    // bigram explode runs once (the text_lm_score move)
-    "text_lm_bigram" -> ((s, d) => {
-      lmBigramRelease.getAndSet(() => ()).apply() // free the previous cache
-      val (res, release) = graft.operators.TextAnalysis.lmBigramScoreManaged(
-        Tables.documents(s, d), "text", "doc_id")
-      lmBigramRelease.set(release)
-      res.orderBy("doc_id")
-    }),
+    // rounded-log/decimal-sum engine-parity recipe; the bigram explode
+    // runs once (the text_lm_score move)
+    "text_lm_bigram" -> ((s, d) =>
+      lmBigramScore(Tables.documents(s, d), "text", "doc_id")
+        .orderBy("doc_id")),
 
     // TRAINED quality classifier (the fastText-style distillation every
     // corpus pipeline runs: fit a cheap model to the heuristic/LLM

@@ -9,7 +9,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 import org.apache.spark.util.sketch.BloomFilter
 
-import graft.operators.Dedup
+import graft.operators.{Dedup, Intermediates}
 
 /** Continuous training-corpus ingestion: a document file stream runs
   * through a quality gate and (near-)dedup, and appends only genuinely
@@ -1914,7 +1914,9 @@ object CorpusIngest {
   /** Shared reader/writer scaffolding of both starters: schema-declared
     * file stream → quality gate → checkpointed foreachBatch running
     * `perBatch`. One copy, so stream-setup fixes cannot silently miss
-    * a variant.
+    * a variant. Each micro-batch releases the [[Intermediates]] it
+    * registered (the stream runs in its own session, and a batch's
+    * result is committed before it returns).
     */
   private def startStream(
       spark: SparkSession,
@@ -1930,7 +1932,9 @@ object CorpusIngest {
     prepared(stream, minTokens).writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) => perBatch(batch); () }
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        try perBatch(batch) finally Intermediates.release(batch.sparkSession)
+      }
       .start()
   }
 }

@@ -9,11 +9,11 @@ object DevEdges {
     val spark = GraftSession.get(GraftSession.envCpus)
     spark.sparkContext.setLogLevel("ERROR")
     args.foreach { d =>
-      val (pairs, rel) = graft.operators.Dedup.ngramJaccardBlockedManaged(
+      val pairs = graft.operators.Dedup.ngramJaccardBlocked(
         graft.sources.Tables.documents(spark, d), "text", "doc_id",
         Seq("lang", "source"), threshold = 0.5)
       println(s"[edges] $d = ${pairs.count()}")
-      rel()
+      graft.operators.Intermediates.release(spark)
     }
     spark.stop()
   }

@@ -1,8 +1,8 @@
 package graft
 
-/** Dev-only micro-harness for the lm-score variants (not part of the
-  * driver contract): times the two-pass form, the managed form with the
-  * eager checkpoint, and the managed form without it, on one sf dir.
+/** Dev-only micro-harness for lm scoring (not part of the driver
+  * contract): times the token-cached form with and without an eager
+  * checkpoint of its result, on one sf dir.
   */
 object DevLm {
   def main(args: Array[String]): Unit = {
@@ -17,17 +17,14 @@ object DevLm {
       }
       println(f"[devlm] $tag%-24s median ${samples.sorted.apply(2)}%.3f s (${samples.map(s => f"$s%.2f").mkString(",")})")
     }
-    time("two-pass lmScore") {
-      graft.operators.TextAnalysis.lmScore(docs, "text", "doc_id").count(); ()
-    }
-    time("managed + checkpoint") {
-      val (res, rel) = graft.operators.TextAnalysis.lmScoreManaged(docs, "text", "doc_id")
-      try res.orderBy("doc_id").localCheckpoint(true).count() finally rel()
+    def lm() = graft.operators.TextAnalysis.lmScore(docs, "text", "doc_id")
+    val release = () => graft.operators.Intermediates.release(spark)
+    time("cached + checkpoint") {
+      try lm().orderBy("doc_id").localCheckpoint(true).count() finally release()
       ()
     }
-    time("managed, count only") {
-      val (res, rel) = graft.operators.TextAnalysis.lmScoreManaged(docs, "text", "doc_id")
-      try res.count() finally rel()
+    time("cached, count only") {
+      try lm().count() finally release()
       ()
     }
     spark.stop()

@@ -77,7 +77,7 @@ object DevPr {
           pmod(col("user_id") * 13 + 5, lit(n)))).as("dst"))
         .filter(col("src") =!= col("dst"))
         .dropDuplicates("src", "dst")
-      val (pr, release) = graft.operators.Graph.pageRankManaged(
+      val pr = graft.operators.Graph.pageRank(
         edges, "src", "dst", iters = 3,
         nodes = Some(users.select(col("user_id").as("id"))),
         nodesCount = Some(n))
@@ -85,7 +85,7 @@ object DevPr {
         .withColumn("pr", round(col("pr"), 9))
         .orderBy(desc("pr"), col("id"))
         .limit(30).count()
-      release()
+      graft.operators.Intermediates.release(spark)
       c
     }
 

@@ -34,7 +34,7 @@ object DevR10 {
     }
 
     // stage breakdown of one steady-state invocation (mirrors
-    // PipelineQueries.ndIngestParts + incrementalIngestNearDupManaged)
+    // PipelineQueries.ndIngestParts + incrementalIngestNearDup)
     val history = docs.filter(pmod(col("doc_id"), lit(5L)) =!= 0)
     val batch = docs.filter(pmod(col("doc_id"), lit(5L)) === 0)
       .select(col("doc_id"), col("text"))
@@ -64,11 +64,9 @@ object DevR10 {
       sigs.unpersist()
       r
     }
-    time("full ingest screen (managed)") {
-      val (acc, rel) =
-        Dedup.incrementalIngestNearDupManaged(idx, batch, "text", "doc_id")
-      val n = acc.count()
-      rel()
+    time("full ingest screen") {
+      val n = Dedup.incrementalIngestNearDup(idx, batch, "text", "doc_id").count()
+      graft.operators.Intermediates.release(spark)
       n
     }
     spark.stop()

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.Dedup
+import graft.operators.{Dedup, Intermediates}
 import graft.sources.Tables
 
 /** Dev aid (r18): in-JVM A/B of the shared shingle+signature pass for
@@ -31,19 +31,18 @@ object DevShingle {
       val docs = Tables.documents(spark, sfDir)
       val exact = Dedup.ngramJaccardBlocked(docs, "text", "doc_id",
         Seq("lang", "source"), threshold = 0.5).select("id_a", "id_b")
-      val (pairs, releasePairs) = Dedup.minhashNearDupsManaged(
-        docs, "text", "doc_id", threshold = 0.5)
-      val mh = Dedup.connectedComponents(pairs)
-      releasePairs()
+      val mh = Dedup.connectedComponents(Dedup.minhashNearDups(
+        docs, "text", "doc_id", threshold = 0.5))
       val ca = mh.select(col("id").as("id_a"), col("component").as("comp_a"))
       val cb = mh.select(col("id").as("id_b"), col("component").as("comp_b"))
-      exact.join(ca.hint("merge"), Seq("id_a"), "left")
+      try exact.join(ca.hint("merge"), Seq("id_a"), "left")
         .join(cb.hint("merge"), Seq("id_b"), "left")
         .filter(coalesce(col("comp_a"), lit(-1L)) =!=
           coalesce(col("comp_b"), lit(-2L)))
         .select("id_a", "id_b")
         .orderBy("id_a", "id_b")
         .count()
+      finally Intermediates.release(spark)
     }
 
     def newRefine(): Long =
@@ -78,10 +77,8 @@ object DevShingle {
       val exact = Dedup.ngramJaccardBlocked(docs, "text", "doc_id",
         Seq("lang", "source"), threshold = 0.5).select("id_a", "id_b")
       val ta = System.nanoTime()
-      val (pairs, releasePairs) = Dedup.minhashNearDupsManaged(
-        docs, "text", "doc_id", threshold = 0.5)
-      val mh = Dedup.connectedComponents(pairs)
-      releasePairs()
+      val mh = Dedup.connectedComponents(Dedup.minhashNearDups(
+        docs, "text", "doc_id", threshold = 0.5))
       println(f"[devshingle]   old phase a (mh+cc): ${(System.nanoTime() - ta) / 1e9}%.2f s")
       val tb = System.nanoTime()
       val ca = mh.select(col("id").as("id_a"), col("component").as("comp_a"))
@@ -92,6 +89,7 @@ object DevShingle {
           coalesce(col("comp_b"), lit(-2L)))
         .select("id_a", "id_b").orderBy("id_a", "id_b").count()
       println(f"[devshingle]   old phase b (exact+join): ${(System.nanoTime() - tb) / 1e9}%.2f s")
+      Intermediates.release(spark)
       (0L, n)
     }
 
@@ -100,19 +98,18 @@ object DevShingle {
     // broadcast), MinHash second off the warm cache
     def newRefineP(): (Long, Long) = {
       val docs = Tables.documents(spark, sfDir)
-      val shared = Dedup.shingledDocs(docs, "text", "doc_id",
-        Seq("lang", "source")).persist()
+      val shared = Intermediates.persist(Dedup.shingledDocs(docs, "text",
+        "doc_id", Seq("lang", "source")))
       try {
         val tb = System.nanoTime()
-        val exact = Dedup.ngramJaccardFromShingled(shared,
-          Seq("lang", "source"), threshold = 0.5, dfCap = None,
-          basePersisted = true)._1.select("id_a", "id_b")
-        exact.cache().count()
+        val exact = Intermediates.persist(Dedup.ngramJaccardFromShingled(
+          shared, Seq("lang", "source"), threshold = 0.5, dfCap = None)
+          .select("id_a", "id_b"))
+        exact.count()
         println(f"[devshingle]   new phase b (exact): ${(System.nanoTime() - tb) / 1e9}%.2f s")
         val ta = System.nanoTime()
-        val (pairs, releasePairs) = Dedup.minhashFromShingled(shared, threshold = 0.5)
-        val mh = Dedup.connectedComponents(pairs)
-        releasePairs()
+        val mh = Dedup.connectedComponents(
+          Dedup.minhashFromShingled(shared, threshold = 0.5))
         println(f"[devshingle]   new phase a (mh+cc): ${(System.nanoTime() - ta) / 1e9}%.2f s")
         val tc = System.nanoTime()
         val ca = mh.select(col("id").as("id_a"), col("component").as("comp_a"))
@@ -123,9 +120,8 @@ object DevShingle {
             coalesce(col("comp_b"), lit(-2L)))
           .select("id_a", "id_b").orderBy("id_a", "id_b").count()
         println(f"[devshingle]   new phase c (final join): ${(System.nanoTime() - tc) / 1e9}%.2f s")
-        exact.unpersist()
         (0L, n)
-      } finally { shared.unpersist(); () }
+      } finally Intermediates.release(spark)
     }
 
     // warm all once

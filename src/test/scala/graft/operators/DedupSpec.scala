@@ -227,15 +227,15 @@ class DedupSpec extends SparkSpec {
     // driver-local union-find fast path (default for small edge lists)
     // and the distributed label-propagation loop (forced via
     // localMaxEdges = -1, the 100 TB path)
-    val (comps, release) = Dedup.connectedComponentsManaged(
-      edges.toDF("id_a", "id_b"))
+    val comps = Dedup.connectedComponents(edges.toDF("id_a", "id_b"))
     val got = comps.as[(Long, Long)].collect().toMap
-    release()
     assert(got == expect)
-    val (compsDist, releaseDist) = Dedup.connectedComponentsManaged(
+    val compsDist = Dedup.connectedComponents(
       edges.toDF("id_a", "id_b"), localMaxEdges = -1L)
     val gotDist = compsDist.as[(Long, Long)].collect().toMap
-    releaseDist()
+    // the final label cache is alive until released
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- beforeIds).nonEmpty)
+    Intermediates.release(spark)
     assert(gotDist == expect)
     // every round's backing RDD was released, incl. the final one
     // (only ids created by THIS test can appear in the difference)
@@ -285,6 +285,8 @@ class DedupSpec extends SparkSpec {
   }
 
   test("managed variants release their internal cache (ADVICE r1)") {
+    // "managed": each operator registers its internal cache with
+    // Intermediates, and Intermediates.release frees all of them
     // set-difference, not size equality: the async ContextCleaner can
     // remove an earlier suite's dead cache entries mid-test
     def cachedIds: Set[Int] =
@@ -294,21 +296,22 @@ class DedupSpec extends SparkSpec {
     // parameters deliberately differ from every other test so the
     // internal persist() can't dedup against a still-alive cache entry
     // from an earlier test (CacheManager reuses identical plans)
-    val (pairs, release) = Dedup.minhashNearDupsManaged(
+    val pairs = Dedup.minhashNearDups(
       docs, "text", "doc_id", threshold = 0.4, numHashes = 32, bands = 8)
     assert(pairs.select("id_a", "id_b").count() > 0)
     assert((cachedIds -- before).nonEmpty) // signature table really was cached
-    release()
-    val (shPairs, shRelease) = Dedup.simhashNearDupsManaged(
+    Intermediates.release(spark)
+    assert((cachedIds -- before).isEmpty)
+    val shPairs = Dedup.simhashNearDups(
       docs, "text", "doc_id", Seq("lang", "source"), maxDist = 6)
     assert(shPairs.count() >= 0)
-    shRelease()
+    assert((cachedIds -- before).nonEmpty)
     // shingleN (not threshold) is what the cached shingle table depends on
-    val (ngPairs, ngRelease) = Dedup.ngramJaccardBlockedManaged(
+    val ngPairs = Dedup.ngramJaccardBlocked(
       docs, "text", "doc_id", Seq("lang", "source"), threshold = 0.6, shingleN = 4)
     assert(ngPairs.count() >= 0)
-    ngRelease()
-    assert((cachedIds -- before).isEmpty) // every handle unpersisted its table
+    Intermediates.release(spark)
+    assert((cachedIds -- before).isEmpty) // every table was unpersisted
   }
 
   test("simhash near-dups on testdata include the exact near-dup pair") {
@@ -592,7 +595,7 @@ class DedupSpec extends SparkSpec {
       "saturated bands must be dropped from the history screen")
   }
 
-  test("materializedManaged evaluates its plan exactly once; release deletes the scratch") {
+  test("Intermediates.scratch evaluates its body once; release deletes it") {
     // the single-evaluation pin behind dedup_components/dedup_resolve:
     // the upstream plan runs ONCE (at the parquet write), every later
     // action on the returned frame is a scan — counted via an
@@ -601,7 +604,7 @@ class DedupSpec extends SparkSpec {
     val bump = udf((x: Long) => { acc.add(1L); x })
     val df = spark.range(7).select(bump(col("id")).as("id_a"),
       (col("id") + 100L).as("id_b"))
-    val (mat, release) = Dedup.materializedManaged(df, "spec_once")
+    val mat = Intermediates.scratch("spec_once")(df)
     assert(acc.value == 7L, s"write must evaluate the plan once: ${acc.value}")
     assert(mat.count() == 7L && mat.count() == 7L
       && mat.select("id_a").as[Long].collect().sorted.toSeq == (0L to 6L))
@@ -611,8 +614,14 @@ class DedupSpec extends SparkSpec {
     val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
     def dirs = tmp.listFiles().filter(_.getName.startsWith("graft_spec_once_"))
     assert(dirs.length == 1)
-    release()
-    assert(dirs.isEmpty, "release must delete the scratch dir")
+    // what the body registered is released once its data is on disk
+    val inner = spark.range(5).select(col("id").as("id_a"), (col("id") + 1L).as("id_b"))
+    val viaCache = Intermediates.scratch("spec_once")(Intermediates.persist(inner))
+    assert(inner.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
+      "the body's persist must be released after the scratch write")
+    assert(viaCache.count() == 5L && dirs.length == 2)
+    Intermediates.release(spark)
+    assert(dirs.isEmpty, "release must delete the scratch dirs")
   }
 
   test("the snapshot-diff carve modifies NULL-text docs too (concat_ws, ADVICE r7)") {

@@ -91,12 +91,13 @@ class GraphSpec extends SparkSpec {
     val e = Seq((1L, 2L), (3L, 2L), (2L, 4L), (4L, 1L), (2L, 1L))
     val nodes = Seq(1L, 2L, 3L, 4L)
     val expect = ref(e, nodes, iters = 20)
-    val (ranks, release) = Graph.pageRankManaged(e.toDF("src", "dst"),
+    val beforeIds = spark.sparkContext.getPersistentRDDs.keySet
+    val ranks = Graph.pageRank(e.toDF("src", "dst"),
       "src", "dst", iters = 20, nodes = Some(nodes.toDF("id")), itersPerCut = 5)
     // the plan must reflect only the rounds SINCE the last cut, not all
     // 20 — without truncation this tree is ~4× deeper
     val planLines = ranks.queryExecution.optimizedPlan.numberedTreeString.linesIterator.size
-    val (oneCut, release1) = Graph.pageRankManaged(e.toDF("src", "dst"),
+    val oneCut = Graph.pageRank(e.toDF("src", "dst"),
       "src", "dst", iters = 5, nodes = Some(nodes.toDF("id")), itersPerCut = 99)
     val fiveIterLines = oneCut.queryExecution.optimizedPlan.numberedTreeString.linesIterator.size
     assert(planLines <= fiveIterLines + 10,
@@ -105,9 +106,10 @@ class GraphSpec extends SparkSpec {
     nodes.foreach(v =>
       assert(math.abs(got(v) - expect(v)) < 1e-12, s"node $v: ${got(v)} vs ${expect(v)}"))
     assert(math.abs(got.values.sum - 1.0) < 1e-9)
-    val cachedBefore = spark.sparkContext.getPersistentRDDs.size
-    release(); release1()
-    assert(spark.sparkContext.getPersistentRDDs.size < cachedBefore,
-      "release() must free the last rank snapshot")
+    // the last rank snapshot is alive until released, then freed
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- beforeIds).nonEmpty)
+    Intermediates.release(spark)
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- beforeIds).isEmpty,
+      "release must free the last rank snapshot")
   }
 }

@@ -47,20 +47,19 @@ class LayoutSpec extends SparkSpec {
         TextAnalysis.qualityScore($"text"), 0.0, 1.0, bits = 4))
       .withColumn("lb", Layout.bucketize($"n_chars", 0.0, 1024.0, bits = 4))
     val z = Layout.zValue($"qb", $"lb", bits = 4)
-    val (laid, release) = Layout.zorderFilesManaged(docs, z, $"doc_id", nFiles = 8)
+    val laid = Layout.zorderFiles(docs, z, $"doc_id", nFiles = 8)
     val sizes = laid.groupBy("file_id").agg(count(lit(1)).as("n"))
       .as[(Int, Long)].collect().toMap
-    release()
     val total = sizes.values.sum
     assert(sizes.keySet == (0 until 8).toSet)
     sizes.values.foreach(n => assert(math.abs(n - total / 8.0) <= 1.0, sizes))
     // independence: a different input partitioning yields the same labels
-    val (laid2, release2) = Layout.zorderFilesManaged(
+    val laid2 = Layout.zorderFiles(
       docs.repartition(7), z, $"doc_id", nFiles = 8)
     val a = laid.select("doc_id", "file_id")
     val b = laid2.select("doc_id", "file_id")
     assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
-    release2()
+    Intermediates.release(spark)
   }
 
   test("z-order files span less of the off-sort dimension than a 1-D sort") {

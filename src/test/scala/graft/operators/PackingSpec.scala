@@ -13,14 +13,14 @@ class PackingSpec extends SparkSpec {
     .select($"doc_id", TextAnalysis.tokenCount($"text").cast("long").as("tok"))
 
   test("two-phase scan equals the single-task global window") {
-    val (packed, release) = Packing.packByBudgetManaged(docs, "doc_id", "tok", 2048)
+    val packed = Packing.packByBudget(docs, "doc_id", "tok", 2048)
     val got = packed.select("doc_id", "seq_id").as[(Long, Long)].collect().toMap
     val w = Window.orderBy("doc_id").rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val expect = docs
       .withColumn("cum_before", sum($"tok").over(w) - $"tok")
       .select($"doc_id", ($"cum_before" / 2048).cast("long").as("seq_id"))
       .as[(Long, Long)].collect().toMap
-    release()
+    Intermediates.release(spark)
     assert(got == expect && got.nonEmpty)
   }
 
@@ -29,18 +29,18 @@ class PackingSpec extends SparkSpec {
       val before = spark.conf.get("spark.sql.shuffle.partitions")
       spark.conf.set("spark.sql.shuffle.partitions", parts)
       try {
-        val (p, release) = Packing.packByBudgetManaged(docs, "doc_id", "tok", 512)
+        val p = Packing.packByBudget(docs, "doc_id", "tok", 512)
         val m = p.select("doc_id", "seq_id").as[(Long, Long)].collect().toMap
-        release(); m
+        Intermediates.release(spark); m
       } finally spark.conf.set("spark.sql.shuffle.partitions", before)
     }
     assert(run("3") == run("17"))
   }
 
   test("bins start on the budget grid and are contiguous in id order") {
-    val (p, release) = Packing.packByBudgetManaged(docs, "doc_id", "tok", 1024)
+    val p = Packing.packByBudget(docs, "doc_id", "tok", 1024)
     val rows = p.orderBy("doc_id").as[(Long, Long, Long)].collect()
-    release()
+    Intermediates.release(spark)
     // seq_id is non-decreasing in doc order, and matches the grid formula
     var cum = 0L
     for ((_, tok, bin) <- rows) {

@@ -127,7 +127,7 @@ class SamplingSpec extends SparkSpec {
         (42L, b), (9001L, c),                  // transitive chain via b
         (77L, "a b")))                          // sub-shingle singleton
       .toDF("doc_id", "text")
-    val got = Sampling.leakproofSplitNearDup(docs, "text", "doc_id")
+    val (got, splitPairs) = Sampling.leakproofSplitNearDup(docs, "text", "doc_id")
     assert(got.count() == docs.count(), "total assignment, no drops")
     // the exact pair AND the transitive near-dup chain form ONE cluster
     // labelled by its min id, all in one split
@@ -148,5 +148,9 @@ class SamplingSpec extends SparkSpec {
     val sb = got.select(col("doc_id").as("id_b"), col("split").as("split_b"))
     assert(pairs.join(sa, "id_a").join(sb, "id_b")
       .filter(col("split_a") =!= col("split_b")).isEmpty)
+    // the returned pair list IS the verified near-dup edge set
+    val returned = splitPairs.as[(Long, Long)].collect().toSet
+    assert(returned.contains((42L, 9001L)) &&
+      returned == pairs.select("id_a", "id_b").as[(Long, Long)].collect().toSet)
   }
 }

@@ -163,17 +163,18 @@ class TextAnalysisSpec extends SparkSpec {
     } finally { docs.unpersist(); () }
   }
 
-  test("lmScoreManaged equals lmScore and releases its token cache") {
+  test("lmScore caches its token table until Intermediates.release") {
     val docs = Tables.documents(spark, sf001).limit(60)
-    val plain = TextAnalysis.lmScore(docs, "text", "doc_id")
-      .as[(Long, Long, Double)].collect().sortBy(_._1).toSeq
-    val (scored, release) = TextAnalysis.lmScoreManaged(docs, "text", "doc_id")
-    val managed = scored.as[(Long, Long, Double)].collect().sortBy(_._1).toSeq
-    assert(managed == plain)
-    val cachedBefore = spark.sparkContext.getPersistentRDDs.size
-    release()
-    assert(spark.sparkContext.getPersistentRDDs.size < cachedBefore,
-      "release() must unpersist the token cache")
+    val beforeIds = spark.sparkContext.getPersistentRDDs.keySet
+    val scored = TextAnalysis.lmScore(docs, "text", "doc_id")
+    val cached = scored.as[(Long, Long, Double)].collect().sortBy(_._1).toSeq
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- beforeIds).nonEmpty,
+      "the token table must be cached while the result is alive")
+    Intermediates.release(spark)
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- beforeIds).isEmpty,
+      "release must unpersist the token cache")
+    // after release the same plan recomputes from the source: same rows
+    assert(scored.as[(Long, Long, Double)].collect().sortBy(_._1).toSeq == cached)
   }
 
   test("lmBigramScore matches an independent in-memory bigram model") {
@@ -208,17 +209,18 @@ class TextAnalysisSpec extends SparkSpec {
     assert(!got.exists(_._1 == 2L))
   }
 
-  test("lmBigramScoreManaged equals lmBigramScore and releases its cache") {
+  test("lmBigramScore caches its bigram table until Intermediates.release") {
     val docs = Tables.documents(spark, sf0001).limit(50)
-    val plain = TextAnalysis.lmBigramScore(docs, "text", "doc_id")
-      .as[(Long, Long, Double)].collect().sortBy(_._1).toSeq
-    val (scored, release) = TextAnalysis.lmBigramScoreManaged(docs, "text", "doc_id")
-    val managed = scored.as[(Long, Long, Double)].collect().sortBy(_._1).toSeq
-    assert(managed == plain)
-    val cachedBefore = spark.sparkContext.getPersistentRDDs.size
-    release()
-    assert(spark.sparkContext.getPersistentRDDs.size < cachedBefore,
-      "release() must unpersist the bigram cache")
+    val beforeIds = spark.sparkContext.getPersistentRDDs.keySet
+    val scored = TextAnalysis.lmBigramScore(docs, "text", "doc_id")
+    val cached = scored.as[(Long, Long, Double)].collect().sortBy(_._1).toSeq
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- beforeIds).nonEmpty,
+      "the bigram table must be cached while the result is alive")
+    Intermediates.release(spark)
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- beforeIds).isEmpty,
+      "release must unpersist the bigram cache")
+    // after release the same plan recomputes from the source: same rows
+    assert(scored.as[(Long, Long, Double)].collect().sortBy(_._1).toSeq == cached)
   }
 
   test("lmBigramScore ranks a common-bigram doc as more predictable") {

@@ -9,6 +9,7 @@ import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNes
 
 import graft.SparkSpec
 import graft.SparkEntry
+import graft.operators.Intermediates
 
 /** Physical-plan assertions for the scale-critical properties: predicate
   * pushdown to parquet, column pruning, broadcast join selection, and
@@ -218,11 +219,9 @@ class PlanSpec extends SparkSpec {
   }
 
   test("dedup_cosine_pairs: every join is an equi-join; vector cache reused") {
-    // pin on the OPERATOR (the registered query returns a pre-counted
-    // result cache, which would collapse the plan to one cache read)
     val docs = spark.read.parquet(s"$sf001/documents.parquet")
-    val (pairs, release) = graft.operators.CosinePairs
-      .tfCosinePairsManaged(docs, "text", "doc_id", threshold = 0.6)
+    val pairs = graft.operators.CosinePairs
+      .tfCosinePairs(docs, "text", "doc_id", threshold = 0.6)
     val plan = executed(pairs)
     // prefix candidates and verification both ride term/id equi-joins —
     // the all-pairs semantics must never plan as a cartesian/NLJ
@@ -234,7 +233,7 @@ class PlanSpec extends SparkSpec {
     // (l, r) and both verify sides — the shingle/df work runs ONCE
     assert(plan.collect { case s: InMemoryTableScanExec => s }.size >= 3,
       plan.toString)
-    release()
+    Intermediates.release(spark)
   }
 
   test("ev_funnel: range predicate rides the user_id equi-join, never an NLJ") {
@@ -431,9 +430,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("text_lm_score: shuffles carry tokens and counts, never document text") {
-    // the REGISTERED query checkpoints its result, so inspect the plan it
-    // materializes: the managed form's pre-checkpoint dataflow
-    val (res, release) = graft.operators.TextAnalysis.lmScoreManaged(
+    val res = graft.operators.TextAnalysis.lmScore(
       graft.sources.Tables.documents(spark, sf001), "text", "doc_id")
     try {
       val plan = executed(res)
@@ -441,13 +438,12 @@ class PlanSpec extends SparkSpec {
       assert(shuffles.nonEmpty)
       assert(!shuffles.exists(_.child.output.exists(_.name == "text")),
         s"document bodies crossed a shuffle:\n$plan")
-    } finally release()
+    } finally Intermediates.release(spark)
   }
 
   test("text_lm_score managed: token subtree is cache-backed, evaluated once") {
     val docs = graft.sources.Tables.documents(spark, sf001)
-    val (res, release) = graft.operators.TextAnalysis.lmScoreManaged(
-      docs, "text", "doc_id")
+    val res = graft.operators.TextAnalysis.lmScore(docs, "text", "doc_id")
     try {
       val plan = executed(res)
       // every consumer of the token table (score join, model build, and
@@ -460,12 +456,13 @@ class PlanSpec extends SparkSpec {
       // and no direct parquet re-scan of documents survives outside it
       assert(scans(plan).isEmpty,
         s"tokenize subtree re-evaluated from source:\n$plan")
-      // managed and two-pass forms agree row for row
-      val managed = res.orderBy("doc_id").collect().map(_.toString)
-      val plain = graft.operators.TextAnalysis.lmScore(docs, "text", "doc_id")
-        .orderBy("doc_id").collect().map(_.toString)
-      assert(managed.sameElements(plain))
-    } finally release()
+      // the cache-backed result agrees row for row with the same plan
+      // recomputed from source once the cache is released
+      val cached = res.orderBy("doc_id").collect().map(_.toString)
+      Intermediates.release(spark)
+      val recomputed = res.orderBy("doc_id").collect().map(_.toString)
+      assert(cached.sameElements(recomputed))
+    } finally Intermediates.release(spark)
   }
 
   test("pipe_split_leakproof: document text never crosses an exchange") {
