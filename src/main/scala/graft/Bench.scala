@@ -86,12 +86,15 @@ object Bench {
   }
 
   /** Assemble the driver-contract JSON line from measured parts (pure —
-    * spec-testable without a timed run).
+    * spec-testable without a timed run). `prebuildFailed` names the
+    * BuiltOnce prebuilds that threw: their queries' first samples may
+    * have paid the cold build, so the line says so.
     */
   private[graft] def renderLine(
       results: Seq[(String, Option[Double])],
       errors: Seq[(String, String)],
-      skip: Set[String], streaming: String, sfDir: String): String = {
+      skip: Set[String], streaming: String, sfDir: String,
+      prebuildFailed: Seq[String] = Seq.empty): String = {
     val qs = results.map { case (k, v) => jsonStr(k) + ":" + v.fold("null")(sec3) }
       .mkString("{", ",", "}")
     val total = results.flatMap(_._2).sum
@@ -103,7 +106,11 @@ object Bench {
       if (skip.isEmpty) ""
       else skip.toSeq.sorted.map(jsonStr)
         .mkString(""","skipped":[""", ",", "]")
-    s"""{"metric":"total","value":${sec3(total)},"unit":"sec","queries":$qs$streaming$errJson$skipJson,"sf":${jsonStr(sfDir)}}"""
+    val prebuildJson =
+      if (prebuildFailed.isEmpty) ""
+      else prebuildFailed.map(jsonStr)
+        .mkString(""","prebuild_failed":[""", ",", "]")
+    s"""{"metric":"total","value":${sec3(total)},"unit":"sec","queries":$qs$streaming$errJson$skipJson$prebuildJson,"sf":${jsonStr(sfDir)}}"""
   }
 
   def main(args: Array[String]): Unit = {
@@ -123,10 +130,12 @@ object Bench {
     // otherwise land on the alphabetically-first query's samples.
     // Warm-up failures are LOGGED (r18, judge advice): a silently broken
     // warm-up would shift first-of-family medians with no diagnostic.
-    def warm(label: String)(f: => Unit): Unit =
-      try f catch { case NonFatal(e) =>
+    // Returns whether the pass succeeded.
+    def warm(label: String)(f: => Unit): Boolean =
+      try { f; true } catch { case NonFatal(e) =>
         System.err.println(s"[bench] warm-up '$label' failed: " +
           e.toString.linesIterator.next().take(200))
+        false
       }
     warm("shuffle/window/join") {
       import org.apache.spark.sql.expressions.Window
@@ -241,7 +250,9 @@ object Bench {
       if (sys.env.contains("SPARK_GRAFT_BENCH_COLD_BUILTONCE")) Seq.empty[String]
       else builtOnceBacked
         .filter(q => only.forall(_.contains(q)) && !skip.contains(q))
-    prebuild.foreach { q =>
+    // a failed prebuild is tagged in the output line ("prebuild_failed"),
+    // not only logged: that query's timed samples may include the build
+    val prebuildFailed = prebuild.filterNot { q =>
       warm(s"builtonce prebuild: $q") {
         SparkEntry.queries(q)(spark, sfDir).count()
         ()
@@ -267,7 +278,8 @@ object Bench {
         ""","streaming_rps":0.0"""
       }
     } else ""
-    val line = renderLine(results, errors, skip, streaming, sfDir)
+    val line = renderLine(results, errors, skip, streaming, sfDir,
+      prebuildFailed)
     println(line)
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath), line + "\n")
     catch { case NonFatal(e) =>

@@ -48,10 +48,6 @@ object IngestBench {
     val nBatches = args.lift(2).map(_.toInt).getOrElse(20)
     val pregrowFrac = args.lift(3).map(_.toDouble).getOrElse(0.0)
     val spark = GraftSession.get(GraftSession.envCpus)
-    // dev A/B hook: SPARK_GRAFT_NO_PREWARM=1 disables the post-pack
-    // read-back so its effect on the shadow batches can be isolated
-    if (sys.env.get("SPARK_GRAFT_NO_PREWARM").contains("1"))
-      CorpusIngest.PackPrewarm = false
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val (minId, maxId) = {
       val r = docs.agg(min("doc_id"), max("doc_id")).collect().head

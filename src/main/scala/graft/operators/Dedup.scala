@@ -195,23 +195,6 @@ object Dedup {
           .otherwise(array().cast("array<bigint>")))
   }
 
-  /** The LSH band-key array of a text column, as a COLUMN — the
-    * carry-your-own-index form: a corpus table that stores this beside
-    * each document can screen incoming batches by exploding it, with
-    * no separate index table to keep transactionally ordered with the
-    * sink (see [[graft.streaming.CorpusIngest.startNearDup]]). Docs
-    * too short to shingle get an EMPTY array (no bands ⇒ never
-    * collide), matching [[incrementalIngestNearDup]]'s behavior.
-    */
-  def bandKeysCol(text: Column, numHashes: Int = 64, bands: Int = 16,
-      shingleN: Int = 3): Column = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val sh = hashedShingles(text, shingleN)
-    when(size(sh) > 0,
-      lshBands(TextHashExprs.minhashSig(sh, numHashes), bands, numHashes / bands))
-      .otherwise(array().cast("array<bigint>"))
-  }
-
   /** Near-duplicate-aware incremental ingestion — the LSH form of
     * [[incrementalIngestDigests]], screening a batch against a
     * [[nearDupIndex]] of everything ever accepted. Two screens:

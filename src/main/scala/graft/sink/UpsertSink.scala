@@ -83,6 +83,17 @@ final class ParquetUpsertSink(
       }
     }
 
+  /** [[UpsertSink.upsert]] over the partition-bucketed parquet table.
+    *
+    * Batch requirement: `batch` must be PERSISTED or DETERMINISTIC. The
+    * touched partition values are collected in one action and the
+    * merge/write runs in another, so `batch` is evaluated twice. If
+    * the two evaluations disagree, dynamic overwrite can rewrite a
+    * partition missing from the collected values with batch rows only,
+    * dropping that partition's existing rows. The production caller,
+    * [[graft.streaming.MessagePipeline.start]], persists each
+    * micro-batch (`batch.persist()`) before both sinks run.
+    */
   def upsert(batch: DataFrame, keys: Seq[String], versionCol: String): Unit =
     retry.run {
       val existing = readExisting(spark, path, batch)

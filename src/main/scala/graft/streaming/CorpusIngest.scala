@@ -47,12 +47,10 @@ import graft.operators.{Dedup, Intermediates}
   * so `spark.read.parquet(corpusDir)` still yields exactly the docs
   * table (plus its `dbucket` partition column).
   *
-  * A corpus dir written by the pre-bucketed FLAT layout (no `dbucket`
-  * partition, no `_graft_meta`) is detected and served by a LEGACY
-  * fallback: unpruned screens, flat appends, no bloom/index state —
-  * correct but per-batch O(corpus). Start a fresh corpus dir (or copy
-  * the docs through one [[ingestBatch]] into a new dir) to get the
-  * bucketed probes back.
+  * This is the ONLY layout served. A dir without `_graft_meta` is a
+  * new corpus; if it already holds data (e.g. a flat parquet table
+  * with no `dbucket` partition) the first batch rejects it before
+  * writing anything — see `layoutBuckets`.
   *
   * ## Why this probe shape survives 100 TB
   *
@@ -115,10 +113,10 @@ import graft.operators.{Dedup, Intermediates}
   *
   * Driver-side metadata cost is also batch-proportional: the landed
   * and index probes read ONLY the batch's own partition-bucket
-  * directories (never a full-corpus file listing), and the
-  * bucketed-vs-legacy layout decision reads `_graft_meta`, not the
-  * table. (On a real fleet the listing would come from a catalog; this
-  * keeps the same O(touched buckets) shape without one.) The `buckets`
+  * directories (never a full-corpus file listing), and the layout
+  * check reads `_graft_meta`, not the table. (On a real fleet the
+  * listing would come from a catalog; this keeps the same O(touched
+  * buckets) shape without one.) The `buckets`
   * sizing trades that listing fan-out against probe read amplification:
   * more buckets = smaller pruned reads but more directories to stat per
   * probing batch — size it to the fleet, once, at first write.
@@ -311,6 +309,14 @@ object CorpusIngest {
     * partitions and silently re-admit duplicates, so a caller passing
     * a different `buckets` than the persisted layout is a loud error
     * (pass the corpus's own bucket count, or start a fresh dir).
+    *
+    * No `_graft_meta` means a NEW corpus, and a new corpus dir must not
+    * hold data yet: any non-underscore, non-dot entry at its root (a
+    * flat parquet table's part files, another table's partition dirs)
+    * is rejected with an `IllegalArgumentException` before the meta is
+    * stamped, so nothing is written into a dir this layout did not
+    * create. That costs one root listing, once per corpus; steady
+    * batches pay only the meta read.
     */
   private def layoutBuckets(spark: SparkSession, corpusDir: String,
       requested: Int): Int = {
@@ -325,6 +331,16 @@ object CorpusIngest {
             "persisted value or use a fresh corpus dir")
         persisted
       case None =>
+        val data =
+          try fsOf(spark, corpusDir).listStatus(new Path(corpusDir))
+            .map(_.getPath.getName)
+            .filterNot(n => n.startsWith("_") || n.startsWith("."))
+          catch { case _: java.io.FileNotFoundException => Array.empty[String] }
+        require(data.isEmpty,
+          s"corpus dir $corpusDir has no _graft_meta but already holds " +
+            s"data (${data.sorted.take(3).mkString(", ")}): the flat " +
+            "(pre-bucketed) corpus layout is unsupported — ingest into " +
+            "a fresh corpus dir")
         writeSmall(spark, p, s"$requested".getBytes("UTF-8"))
         requested
     }
@@ -335,11 +351,10 @@ object CorpusIngest {
   private final case class BloomMeta(
       cap: Long, ins: Long, epoch: Long, nshards: Int)
 
-  /** Parsed `_graft_bloom/meta`, None when absent OR written by the
-    * retired single-file format ("cap ins") — a legacy bloom is simply
-    * treated as missing: the batch probes everything (conservative)
-    * and the accept path rebuilds the sharded base from the landed
-    * table, which is the one-time migration.
+  /** Parsed `_graft_bloom/meta`, None when absent or not in the `v2`
+    * format — a missing bloom: the batch probes everything
+    * (conservative) and the accept path rebuilds the sharded base from
+    * the landed table.
     */
   private def readBloomMeta(spark: SparkSession,
       corpusDir: String): Option[BloomMeta] =
@@ -616,15 +631,6 @@ object CorpusIngest {
     }.sum.toLong
   }
 
-  /** Data files directly under a FLAT (legacy-layout) corpus root. */
-  private def filesFlat(spark: SparkSession, root: String): Long = {
-    val fs = fsOf(spark, root)
-    if (!fs.exists(new Path(root))) 0L
-    else fs.listStatus(new Path(root)).count(s => s.isFile &&
-      !s.getPath.getName.startsWith("_") &&
-      !s.getPath.getName.startsWith(".")).toLong
-  }
-
   private def existingParquet(spark: SparkSession, dir: String): Option[DataFrame] =
     try Some(spark.read.parquet(dir))
     catch { case _: org.apache.spark.sql.AnalysisException => None }
@@ -658,8 +664,7 @@ object CorpusIngest {
   //    the batch's own (already pruned) index buckets.
   //
   // Absent or epoch-stale state (fresh corpus, crash between meta and
-  // census write, legacy dirs) falls back to the exact batch-scoped
-  // census — the pre-round-12 behavior.
+  // census write) falls back to the exact batch-scoped census.
 
   private[streaming] final case class BandCounts(
       epoch: Long, floor: Long, counts: Map[Long, Long])
@@ -852,11 +857,6 @@ object CorpusIngest {
     */
   private[streaming] var PackTargetBytesOverride: Option[Long] = None
 
-  /** Test hook: disables the post-pack read-back (so its cost can be
-    * A/B measured in the ingest series).
-    */
-  private[graft] var PackPrewarm: Boolean = true
-
   /** Bin-pack one partitioned root at an epoch boundary: every
     * `partCol=k` dir holding more than [[LandedPackMinFiles]] data
     * files is rewritten — deduplicated on `dedupKeys`, which heals any
@@ -991,8 +991,8 @@ object CorpusIngest {
     // batch after the epoch pays the cold re-read (the measured
     // "shadow" — +15 s at sf10). Folding it here keeps the boundary
     // batch O(capacity) — which it already is — and the steady series
-    // flat. Test hook PackPrewarm A/Bs the effect.
-    if (PackPrewarm && packedIn.nonEmpty) {
+    // flat.
+    if (packedIn.nonEmpty) {
       val uris = packedIn.map(_.toUri.toString).toSeq
       // ship the SESSION's hadoop conf entries to the tasks: resolving
       // the filesystem from a default Configuration() would drop every
@@ -1156,31 +1156,25 @@ object CorpusIngest {
       }
     }
 
-  /** The corpus's live doc data files as sorted root-relative paths —
-    * bucketed layouts under `dbucket=*`, flat (legacy) layouts at the
-    * root; underscore/dot names (state files, pack staging, in-flight
-    * parquet commits) excluded. Called only AFTER this writer's own
-    * appends have returned (= committed), so the listing is a whole
-    * number of batches by construction.
+  /** The corpus's live doc data files as sorted root-relative paths
+    * under `dbucket=*`; underscore/dot names (state files, pack
+    * staging, in-flight parquet commits) excluded. Called only AFTER
+    * this writer's own appends have returned (= committed), so the
+    * listing is a whole number of batches by construction.
     */
   private def liveDocFiles(spark: SparkSession, corpusDir: String): Seq[String] = {
     val fs = fsOf(spark, corpusDir)
     val rootP = new Path(corpusDir)
     if (!fs.exists(rootP)) return Seq.empty
     def isData(n: String) = !n.startsWith("_") && !n.startsWith(".")
-    val entries = fs.listStatus(rootP)
-    val rootFiles = entries
-      .filter(s => s.isFile && isData(s.getPath.getName))
-      .map(_.getPath.getName)
-    val bucketFiles = entries
+    fs.listStatus(rootP)
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("dbucket="))
       .flatMap { d =>
         val dn = d.getPath.getName
         fs.listStatus(d.getPath)
           .filter(s => s.isFile && isData(s.getPath.getName))
           .map(s => s"$dn/${s.getPath.getName}")
-      }
-    (rootFiles ++ bucketFiles).toSeq.sorted
+      }.toSeq.sorted
   }
 
   /** Publish the reader snapshot when the live file set differs from
@@ -1361,65 +1355,6 @@ object CorpusIngest {
     }
   }
 
-  /** ONE-TIME migration of a retired FLAT-layout corpus dir into the
-    * bucketed layout at `targetDir` (which must be empty or absent):
-    * docs are rewritten partitioned by digest bucket, the band index
-    * and sharded bloom are rebuilt from the landed rows, and the layout
-    * meta is stamped — so a stream restarted over a pre-bucketed corpus
-    * pays the legacy fallback's O(corpus) screen ONCE here instead of
-    * on every future batch, forever. The near-dup variant is detected
-    * from the flat corpus's own `bands` column (signatures, which the
-    * flat layout never stored, are recomputed from text — the O(corpus)
-    * pass this migration exists to pay once). The flat dir is left
-    * untouched; point the restarted stream and every reader at
-    * `targetDir` once this returns. Crash mid-migration: delete
-    * `targetDir` and re-run — the target is not live until this
-    * returns.
-    */
-  def migrateCorpus(spark: SparkSession, flatDir: String,
-      targetDir: String, buckets: Int = DefaultBuckets): Unit = {
-    import graft.operators.Dedup
-    val flat = spark.read.parquet(flatDir)
-    require(!flat.columns.contains("dbucket"),
-      s"$flatDir already carries the bucketed layout's dbucket column")
-    val fs = fsOf(spark, targetDir)
-    val tp = new Path(targetDir)
-    require(!fs.exists(tp) || fs.listStatus(tp).isEmpty,
-      s"migration target $targetDir must be empty or absent")
-    val hasBands = flat.columns.contains("bands")
-    val withDigest =
-      if (flat.columns.contains("digest")) flat
-      else flat.withColumn("digest", sha2(col("text"), 256))
-    withDigest.withColumn("dbucket",
-        pmod(xxhash64(col("digest")), lit(buckets.toLong)).cast("int"))
-      .repartition(col("dbucket"))
-      .write.partitionBy("dbucket").parquet(targetDir)
-    if (hasBands) {
-      Dedup.docSignatures(withDigest, "text", "digest")
-        .select(explode(Dedup.lshBands(col("sig"), Bands, RowsPerBand))
-            .as("band"),
-          col("id").as("digest"), col("sig"))
-        .withColumn("bbucket",
-          pmod(col("band"), lit(buckets.toLong)).cast("int"))
-        .repartition(col("bbucket"))
-        .write.partitionBy("bbucket").parquet(s"$targetDir/_graft_index")
-    }
-    // sharded bloom over every landed digest hash + band key, one
-    // shard per task; meta written LAST so a crash re-migrates cleanly
-    val landed = spark.read.parquet(targetDir)
-    val keys = bloomKeys(
-      if (hasBands) landed.select(col("digest"), col("bands"))
-      else landed.select(col("digest")), hasBands)
-    val nKeys = keys.count()
-    val cap = math.max(1L << 17, 2 * nKeys)
-    writeShards(spark, targetDir, buildShards(keys, cap, buckets))
-    writeBloomMeta(spark, targetDir, BloomMeta(cap, nKeys, 0L, buckets))
-    if (hasBands) refreshBandCounts(spark, targetDir, 0L)
-    writeSmall(spark, new Path(targetDir, "_graft_meta"),
-      s"$buckets".getBytes("UTF-8"))
-    writeSnapshot(spark, targetDir) // migrated corpus is snapshot-readable
-  }
-
   // --- the per-batch stage ----------------------------------------------
 
   /** Resolve, screen, and append one micro-batch against the landed
@@ -1445,33 +1380,18 @@ object CorpusIngest {
     *     a fully-landed batch screens its own replay out, and a replay
     *     of any partial crash still lands the documents.
     *
-    * A corpus dir in the retired FLAT layout (no `dbucket` column) is
-    * served by the legacy fallback documented on the object: unpruned
-    * digest anti-join, near-dup screen recomputed from landed text,
-    * flat appends in the landed schema, no bloom/index/meta writes —
-    * so a stream restarted over a pre-bucketed corpus keeps its
-    * "state survives restarts" contract instead of throwing on the
-    * first batch with possible hits.
+    * `corpusDir` must be a bucketed corpus or a new one (absent, empty,
+    * or holding only underscore/dot entries). A dir without
+    * `_graft_meta` that already holds data — e.g. a flat parquet table
+    * — is rejected with an `IllegalArgumentException` before anything
+    * is written (see `layoutBuckets`).
     */
   def ingestBatch(batch: DataFrame, corpusDir: String,
       threshold: Option[Double] = Some(0.5),
       buckets: Int = DefaultBuckets): IngestStats = {
-    import graft.operators.Dedup
     val spark = batch.sparkSession
     drainRetiredBcasts(corpusDir)
-    // legacy detection must run BEFORE layoutBuckets, which would
-    // otherwise stamp a flat corpus with a bucketed-layout meta. The
-    // common (bucketed) path decides on `_graft_meta` alone — no
-    // full-corpus file listing per batch; only a corpus with no meta
-    // pays one listing to distinguish empty-new from legacy-flat.
     val fs0 = fsOf(spark, corpusDir)
-    if (!fs0.exists(new Path(corpusDir, "_graft_meta"))) {
-      existingParquet(spark, corpusDir) match {
-        case Some(df) if !df.columns.contains("dbucket") =>
-          return ingestBatchLegacy(batch, corpusDir, df, threshold)
-        case _ => ()
-      }
-    }
     val nb = layoutBuckets(spark, corpusDir, buckets)
     val resolved0 = resolveBatch(batch)
 
@@ -1523,7 +1443,7 @@ object CorpusIngest {
             else array(xxhash64(col("digest")))
           withState.withColumn("__maybe", maybe(keyArr))
         case None =>
-          // no bloom (first batch, legacy bloom format, or mid-crash
+          // no bloom (first batch, unreadable meta, or mid-crash
           // absence): conservative — everything probes; correctness
           // never rests on the bloom
           withState.withColumn("__maybe", lit(true))
@@ -1691,7 +1611,7 @@ object CorpusIngest {
                 cacheDelta(spark, corpusDir, name, ks)
               }
             case other =>
-              // absent (first batch / legacy bloom) or over capacity:
+              // absent (first batch / unreadable meta) or over capacity:
               // rebuild from the landed table + this batch at doubled
               // size — O(corpus) amortized O(1)/doc, one shard per task
               compacted = true
@@ -1787,83 +1707,6 @@ object CorpusIngest {
       withState.unpersist()
       sigRelease()
     }
-  }
-
-  /** The legacy-layout fallback of [[ingestBatch]]: correct screens
-    * over a FLAT pre-bucketed corpus dir, at the flat layout's cost —
-    * every screen reads the whole landed table (nothing to prune by),
-    * and the near-dup screen recomputes landed signatures from text
-    * (the flat layout persisted band keys but no signatures, and an
-    * unverified band hit is exactly the growing-false-reject defect
-    * the verified screen exists to fix). Appends stay FLAT in the
-    * landed schema — mixing partitioned and flat files in one dir
-    * would break partition discovery for every reader.
-    */
-  private def ingestBatchLegacy(batch: DataFrame, corpusDir: String,
-      landedAll: DataFrame, threshold: Option[Double]): IngestStats = {
-    import graft.operators.Dedup
-    val spark = batch.sparkSession
-    val resolved0 = resolveBatch(batch)
-    val (resolved, sigRelease) = threshold match {
-      case Some(t) =>
-        val sigs = Dedup.docSignatures(resolved0, "text", "doc_id").persist()
-        val pairs = Dedup.pairsByAgreement(sigs, t, Bands, RowsPerBand)
-        (Dedup.resolveClusters(resolved0, "doc_id", pairs),
-          () => { sigs.unpersist(); () })
-      case None => (resolved0, () => ())
-    }
-    try {
-      val batchRows = resolved.count()
-      val landedFiles = filesFlat(spark, corpusDir)
-      // exact screen, unpruned
-      val freshExact = resolved.join(
-        landedAll.select("digest"), Seq("digest"), "left_anti")
-      val accepted = threshold match {
-        case Some(t) =>
-          // verified near-dup screen, recomputed from landed text (one
-          // narrow pass — no signatures persisted in this layout)
-          val idx = Dedup.docSignatures(landedAll, "text", "digest")
-            .select(col("id").as("h_digest"), col("sig").as("h_sig"),
-              explode(Dedup.lshBands(col("sig"), Bands, RowsPerBand))
-                .as("band"))
-          val batchSigs = Dedup.docSignatures(freshExact, "text", "doc_id")
-          val colliding = batchSigs
-            .select(col("id").as("doc_id"), col("sig"),
-              explode(Dedup.lshBands(col("sig"), Bands, RowsPerBand))
-                .as("band"))
-            .join(idx, Seq("band"))
-            .filter(Dedup.sigAgreement(col("sig"), col("h_sig")) >= t)
-            .select("doc_id").distinct()
-          freshExact.join(colliding, Seq("doc_id"), "left_anti")
-        case None => freshExact
-      }
-      // append in the landed schema exactly: extra batch-side state is
-      // dropped; a landed column the batch cannot produce is a loud
-      // error rather than a silently null-filled column
-      val landedCols = landedAll.columns.toSeq
-      val out = threshold match {
-        case Some(_) if landedCols.contains("bands") =>
-          accepted.withColumn("bands",
-            Dedup.bandKeysCol(col("text"), Bands * RowsPerBand, Bands))
-        case _ => accepted
-      }
-      val missing = landedCols.filterNot(out.columns.contains)
-      require(missing.isEmpty,
-        s"legacy corpus at $corpusDir has columns $missing the " +
-          s"${if (threshold.isDefined) "near-dup" else "exact"} ingest " +
-          "does not produce — use the stream variant the corpus was " +
-          "written by")
-      val persisted = out.select(landedCols.map(col): _*).persist()
-      try {
-        val acceptedRows = persisted.count()
-        if (acceptedRows > 0)
-          persisted.write.mode("append").parquet(corpusDir)
-        // same committed-batches-only reader snapshot as the bucketed
-        // path (liveDocFiles lists a flat layout's root files)
-        writeSnapshot(spark, corpusDir)
-        IngestStats(batchRows, acceptedRows, 0L, batchRows, landedFiles, 0L)
-      } finally { persisted.unpersist(); () }
-    } finally sigRelease()
   }
 
   /** Start the checkpointed NEAR-DUP ingest over `sourceDir`: the

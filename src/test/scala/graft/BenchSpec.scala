@@ -58,4 +58,18 @@ class BenchSpec extends SparkSpec {
     // total counts only real measurements
     assert(node.get("value").asDouble() >= 0.0)
   }
+
+  test("a failed BuiltOnce prebuild is tagged in the rendered line") {
+    def render(failed: Seq[String]) = Bench.renderLine(
+      Seq("ok_query" -> Some(1.5)), Seq.empty, skip = Set.empty,
+      streaming = "", sfDir = "/tmp/sf", prebuildFailed = failed)
+    // a run with no failed prebuild renders no prebuild_failed key
+    assert(!mapper.readTree(render(Seq.empty)).has("prebuild_failed"))
+    val line = render(Seq("text_longest_dup"))
+    val node = mapper.readTree(line)
+    val failed = node.get("prebuild_failed")
+    assert(failed.isArray && failed.size() == 1, line)
+    assert(failed.get(0).asText() == "text_longest_dup")
+    assert(node.get("queries").get("ok_query").asDouble() == 1.5)
+  }
 }

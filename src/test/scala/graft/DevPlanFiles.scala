@@ -6,8 +6,10 @@ import org.apache.spark.sql.execution.ExplainMode
 
 /** Dev aid (round 17 optimization campaign): dump the
   * `.explain("formatted")` output of named queries to one file each —
-  * the `plans/r17/<query>_<suffix>.txt` artifacts the optimization
-  * round's judge reads in place of a live Spark UI.
+  * plan artifacts read in place of a live Spark UI (`plans/r18/`). It
+  * regenerates the round-17 `<query>_{before,after}.txt` set, which is
+  * no longer in the tree; `git show e913dce:plans/r17/<file>` prints
+  * the checked-in originals.
   *
   * Usage: `Test/runMain graft.DevPlanFiles <sfdir> <outdir> <suffix> q1,q2,... [exec]`
   * (pass `ALL` for every registered query).

@@ -255,7 +255,7 @@ class CorpusIngestSpec extends SparkSpec {
       s"index probe must carry a bbucket partition filter: $idxScan")
   }
 
-  // --- round 10: batch-proportional bloom maintenance, legacy layout ----
+  // --- round 10: batch-proportional bloom maintenance, corpus layout ----
 
   test("bloom maintenance cost tracks the batch, not the corpus") {
     val corpus = tmpDir("cind9_corp")
@@ -374,52 +374,34 @@ class CorpusIngestSpec extends SparkSpec {
     assert(st.acceptedRows == 1L)
   }
 
-  test("restart over a pre-bucketed FLAT corpus: screens verify, appends stay flat") {
-    // a corpus dir written by the retired flat layout (no dbucket
-    // partition, no _graft_meta; near-dup variant carried a bands
-    // column beside each doc): the ingest must fall back to unpruned
-    // screens rather than throw on its first batch with possible hits,
-    // and must NOT stamp or partition the legacy dir
-    val corpus = tmpDir("cind12_corp")
-    val base = "alpha bravo charlie delta echo foxtrot golf hotel " +
-      "india juliet kilo lima"
-    prep(Seq(doc(2, base)))
-      .withColumn("bands", Dedup.bandKeysCol(col("text")))
-      .write.mode("append").parquet(corpus)
-    val st = CorpusIngest.ingestBatch(prep(Seq(
-      doc(7, base),                             // exact dup → reject
-      doc(8, base.replace("alpha", "OMEGA")),   // near-dup → reject
-      doc(4, "one two three four five six seven eight nine ten eleven twelve"))),
-      corpus, Some(0.5))
-    assert(st.acceptedRows == 1L, s"$st")
-    assert(st.landedFilesRead > 0L, s"legacy screens are unpruned: $st")
-    val landed = spark.read.parquet(corpus)
-    assert(landed.select("doc_id").as[Long].collect().sorted.toSeq
-      == Seq(2L, 4L))
-    assert(!landed.columns.contains("dbucket"),
-      "legacy corpus must stay flat — mixing layouts breaks discovery")
-    assert(!new java.io.File(s"$corpus/_graft_meta").exists,
-      "legacy corpus must not be stamped with the bucketed-layout meta")
-    // the checkpointed stream restarts over the same legacy dir: the
-    // documented 'state survives restarts for free' contract
-    val src = tmpDir("cind12_src")
-    writeArrival(src, Seq(
-      doc(9, base.replace("lima", "REPLACED")), // near-dup of landed 2
-      doc(6, "eins zwei drei vier fuenf sechs sieben acht neun zehn")))
-    drainNd(src, corpus, tmpDir("cind12_ckpt"))
-    assert(spark.read.parquet(corpus).select("doc_id")
-      .as[Long].collect().sorted.toSeq == Seq(2L, 4L, 6L))
-    // exact-stream variant over a flat exact-layout corpus
-    val corpusE = tmpDir("cind12_e")
-    prep(Seq(doc(1, "aa bb cc dd ee"))).write.mode("append").parquet(corpusE)
-    val stE = CorpusIngest.ingestBatch(prep(Seq(
-      doc(3, "aa bb cc dd ee"), doc(5, "ff gg hh ii jj"))), corpusE, None)
-    assert(stE.acceptedRows == 1L, s"$stE")
-    assert(spark.read.parquet(corpusE).select("doc_id")
-      .as[Long].collect().sorted.toSeq == Seq(1L, 5L))
+  test("a dir holding data but no _graft_meta is rejected before any write") {
+    // the flat (pre-bucketed) layout is not served: a root-level parquet
+    // table without the layout meta fails the FIRST batch of either
+    // variant, and the dir is left exactly as it was — no meta, bloom,
+    // index or bucket dir stamped into it
+    Seq(Some(0.5), None).foreach { thr =>
+      val corpus = tmpDir(s"cirej_${thr.isDefined}")
+      prep(Seq(doc(1, "aa bb cc dd ee"))).write.parquet(corpus)
+      def listing = new java.io.File(corpus).listFiles().toSeq
+        .map(f => (f.getName, java.util.Arrays.hashCode(
+          java.nio.file.Files.readAllBytes(f.toPath))))
+        .sorted
+      val before = listing
+      val e = intercept[IllegalArgumentException] {
+        CorpusIngest.ingestBatch(prep(Seq(doc(5, "ff gg hh ii jj"))),
+          corpus, thr, buckets = 8)
+      }
+      assert(e.getMessage.contains(corpus) && e.getMessage.contains("flat"),
+        e.getMessage)
+      val names = new java.io.File(corpus).list().toSeq
+      assert(!names.exists(n => Set("_graft_meta", "_graft_bloom",
+        "_graft_index").contains(n) || n.startsWith("dbucket=")),
+        s"a rejected dir must not be stamped: $names")
+      assert(listing == before, s"a rejected dir must be left unchanged ($thr)")
+    }
   }
 
-  // --- round 11: landed bin-pack, migration, broadcast lifecycle --------
+  // --- round 11: landed bin-pack, sub-shingle docs, broadcast lifecycle -
 
   test("landed bin-pack bounds per-bucket file count across compaction cycles") {
     // each batch appends one file per touched bucket; without the
@@ -547,87 +529,30 @@ class CorpusIngestSpec extends SparkSpec {
       "healed corpus must hold each accepted doc exactly once")
   }
 
-  test("migrateCorpus: flat near-dup corpus becomes a pruned bucketed corpus") {
-    val flat = tmpDir("cind14_flat"); val target = tmpDir("cind14_tgt")
-    val base = "alpha bravo charlie delta echo foxtrot golf hotel " +
-      "india juliet kilo lima"
-    val other = "one two three four five six seven eight nine ten " +
-      "eleven twelve"
-    prep(Seq(doc(2, base), doc(3, other)))
-      .withColumn("bands", Dedup.bandKeysCol(col("text")))
-      .write.mode("append").parquet(flat)
-    CorpusIngest.migrateCorpus(spark, flat, target, buckets = 8)
-    // the docs came across, bucketed
-    val landed = spark.read.parquet(target)
-    assert(landed.select("doc_id").as[Long].collect().sorted.toSeq
-      == Seq(2L, 3L))
-    assert(landed.columns.contains("dbucket"))
-    // the rebuilt state screens WITHOUT the legacy fallback: exact
-    // replay + near-dup reject, novel doc lands, probes are PRUNED
-    val st = CorpusIngest.ingestBatch(prep(Seq(
-      doc(7, base),                            // exact dup -> reject
-      doc(8, base.replace("alpha", "OMEGA")),  // near-dup -> reject
-      doc(4, "eins zwei drei vier fuenf sechs sieben acht neun zehn " +
-        "elf zwoelf"))),
-      target, Some(0.5), buckets = 8)
-    assert(st.acceptedRows == 1L, s"$st")
-    val totalFiles = new java.io.File(target).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("dbucket="))
-      .map(_.listFiles().count(f => f.isFile &&
-        !f.getName.startsWith("_") && !f.getName.startsWith("."))).sum
-    assert(st.landedFilesRead < totalFiles,
-      s"migrated probes must be pruned: read ${st.landedFilesRead} " +
-        s"of $totalFiles")
-    // the migrated bloom is live: an all-novel batch reads ZERO files
-    val st2 = CorpusIngest.ingestBatch(prep(Seq(
-      doc(11, "gamma delta words nobody used before in any batch here"))),
-      target, Some(0.5), buckets = 8)
-    assert(st2.landedFilesRead == 0L && st2.indexFilesRead == 0L,
-      s"migrated bloom must screen novel batches to zero reads: $st2")
-    // exact-layout variant (no bands column) migrates too
-    val flatE = tmpDir("cind14_fe"); val targetE = tmpDir("cind14_te")
-    prep(Seq(doc(1, "aa bb cc dd ee"))).write.mode("append").parquet(flatE)
-    CorpusIngest.migrateCorpus(spark, flatE, targetE, buckets = 8)
-    val stE = CorpusIngest.ingestBatch(prep(Seq(
-      doc(5, "aa bb cc dd ee"), doc(6, "ff gg hh ii jj"))),
-      targetE, None, buckets = 8)
-    assert(stE.acceptedRows == 1L, s"$stE")
-    // a bucketed source or a non-empty target are loud errors
-    intercept[IllegalArgumentException] {
-      CorpusIngest.migrateCorpus(spark, target, tmpDir("cind14_x"))
-    }
-    intercept[IllegalArgumentException] {
-      CorpusIngest.migrateCorpus(spark, flat, target)
-    }
-  }
-
-  test("migrateCorpus carries sub-shingle docs: no index rows, digest screen still covers them") {
-    // a doc too short to shingle has no band keys in the flat layout
-    // (bands = []); migration must not index it (docSignatures filters
-    // empty shingle sets) but its digest must still reach the bloom and
-    // docs table so the exact screen rejects a replay
-    val flat = tmpDir("cind18_flat"); val target = tmpDir("cind18_tgt")
+  test("sub-shingle docs: no index rows, the digest screen still covers them") {
+    // a doc too short to shingle (2 tokens < shingleN = 3) has no band
+    // keys: it must not be indexed (docSignatures filters empty shingle
+    // sets) but its digest still reaches the bloom and the docs table,
+    // so the exact screen rejects a replay of it
+    val corpus = tmpDir("cind18_corp")
     def prep1(docs: Seq[(Long, String, String, String, Long)]) =
       CorpusIngest.prepared(
         docs.toDF("doc_id", "text", "lang", "source", "n_chars"), 1)
-    val tiny = "one two" // 2 tokens < shingleN=3 -> empty shingle set
-    prep1(Seq(doc(1, tiny),
-      doc(2, "alpha bravo charlie delta echo foxtrot golf hotel india")))
-      .withColumn("bands", Dedup.bandKeysCol(col("text")))
-      .write.mode("append").parquet(flat)
-    CorpusIngest.migrateCorpus(spark, flat, target, buckets = 8)
-    assert(spark.read.parquet(target).count() == 2L)
-    // the sub-shingle doc produced no index rows...
-    val idx = spark.read.parquet(s"$target/_graft_index")
+    val tiny = "one two"
+    val st1 = CorpusIngest.ingestBatch(prep1(Seq(doc(1, tiny),
+      doc(2, "alpha bravo charlie delta echo foxtrot golf hotel india"))),
+      corpus, Some(0.5), buckets = 8)
+    assert(st1.acceptedRows == 2L, s"$st1")
+    val idx = spark.read.parquet(s"$corpus/_graft_index")
     val tinySha = org.apache.commons.codec.digest.DigestUtils.sha256Hex(tiny)
+    assert(!idx.isEmpty, "the shingled doc must be indexed")
     assert(idx.filter(col("digest") === tinySha).isEmpty,
       "a sub-shingle doc must not be indexed")
-    // ...but its digest still screens: exact replay rejects, novel lands
+    // replay of the tiny doc rejects on its digest; a novel tiny doc lands
     val st = CorpusIngest.ingestBatch(prep1(Seq(
-      doc(9, tiny), doc(4, "vier funf"))), target, Some(0.5),
-      buckets = 8)
+      doc(9, tiny), doc(4, "vier funf"))), corpus, Some(0.5), buckets = 8)
     assert(st.acceptedRows == 1L, s"$st")
-    assert(spark.read.parquet(target).select("doc_id")
+    assert(spark.read.parquet(corpus).select("doc_id")
       .as[Long].collect().sorted.toSeq == Seq(1L, 2L, 4L))
   }
 
@@ -1171,26 +1096,6 @@ class CorpusIngestSpec extends SparkSpec {
     } finally {
       CorpusIngest.planningFaultForTest = () => ()
     }
-  }
-
-  test("legacy FLAT corpus publishes the same reader snapshot contract") {
-    // the snapshot manifest is layout-independent: a flat (root-file)
-    // corpus served by the legacy fallback publishes it too, and a
-    // torn file is hidden the same way
-    val corpus = tmpDir("cisnap6_flat")
-    prep(Seq(doc(1, "aa bb cc dd ee"))).write.mode("append").parquet(corpus)
-    CorpusIngest.ingestBatch(prep(Seq(
-      doc(3, "aa bb cc dd ee"), doc(5, "ff gg hh ii jj"))), corpusDir = corpus,
-      threshold = None)
-    assert(CorpusIngest.readSnapshot(spark, corpus).nonEmpty,
-      "legacy path must publish the manifest")
-    assert(docIds(CorpusIngest.snapshotRead(spark, corpus)) == Seq(1L, 5L))
-    val src = new java.io.File(corpus).listFiles()
-      .filter(_.getName.endsWith(".parquet")).head
-    java.nio.file.Files.copy(src.toPath,
-      src.toPath.resolveSibling("part-torn-00000.parquet"))
-    assert(CorpusIngest.snapshotRead(spark, corpus).count() == 2L,
-      "flat-layout snapshot read must also see committed batches only")
   }
 
   // --- round 13: writer fencing ------------------------------------------
