@@ -88,13 +88,15 @@ object Bench {
   /** Assemble the driver-contract JSON line from measured parts (pure —
     * spec-testable without a timed run). `prebuildFailed` names the
     * BuiltOnce prebuilds that threw: their queries' first samples may
-    * have paid the cold build, so the line says so.
+    * have paid the cold build, so the line says so. `cpus` (default
+    * parallelism) and `master` record the parallelism `spark` ran with.
     */
   private[graft] def renderLine(
       results: Seq[(String, Option[Double])],
       errors: Seq[(String, String)],
       skip: Set[String], streaming: String, sfDir: String,
-      prebuildFailed: Seq[String] = Seq.empty): String = {
+      prebuildFailed: Seq[String] = Seq.empty,
+      spark: SparkSession = SparkSession.active): String = {
     val qs = results.map { case (k, v) => jsonStr(k) + ":" + v.fold("null")(sec3) }
       .mkString("{", ",", "}")
     val total = results.flatMap(_._2).sum
@@ -110,7 +112,8 @@ object Bench {
       if (prebuildFailed.isEmpty) ""
       else prebuildFailed.map(jsonStr)
         .mkString(""","prebuild_failed":[""", ",", "]")
-    s"""{"metric":"total","value":${sec3(total)},"unit":"sec","queries":$qs$streaming$errJson$skipJson$prebuildJson,"sf":${jsonStr(sfDir)}}"""
+    val sc = spark.sparkContext
+    s"""{"metric":"total","value":${sec3(total)},"unit":"sec","queries":$qs$streaming$errJson$skipJson$prebuildJson,"cpus":${sc.defaultParallelism},"master":${jsonStr(sc.master)},"sf":${jsonStr(sfDir)}}"""
   }
 
   def main(args: Array[String]): Unit = {
@@ -279,7 +282,7 @@ object Bench {
       }
     } else ""
     val line = renderLine(results, errors, skip, streaming, sfDir,
-      prebuildFailed)
+      prebuildFailed, spark)
     println(line)
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath), line + "\n")
     catch { case NonFatal(e) =>

@@ -3,9 +3,11 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.model.MessageTypes
+import graft.plans.AesCbc
 
 /** Pure-`Column` scalar layer: every scalar the reference computes,
-  * re-expressed as codegen'd Spark built-ins (no UDFs on the hot path).
+  * re-expressed as codegen'd Spark built-ins (no UDFs on the hot path);
+  * the cipher is one static call per row (graft.plans.AesCbc).
   *
   * Reference sites:
   *  - AES-CBC encrypt/decrypt: Encryptor.java:15-43 (key/IV are 16-byte
@@ -32,49 +34,29 @@ object MessageFunctions {
 
   // --- AES-128-CBC-PKCS5, byte-parity with Encryptor.java ---------------
   //
-  // Spark's aes_encrypt(mode="CBC") returns IV ++ ciphertext; the
-  // reference emits Base64(ciphertext) with the IV fixed out-of-band.
-  // We pass the IV explicitly and strip the 16-byte prefix to match.
-
-  private val IvLen = 16
-
-  /** Spark's `base64` can emit RFC-2045 chunked output (a newline every 76
-    * chars) depending on `spark.sql.legacy.chunkBase64String.enabled`; the
-    * reference's commons-codec `encodeBase64String` never chunks
-    * (Encryptor.java:22). Normalize unconditionally so parity doesn't
-    * depend on session conf.
-    */
-  private def base64NoWrap(c: Column): Column =
-    translate(base64(c), "\r\n", "")
+  // One static call per row of graft.plans.AesCbc (a cached Cipher per
+  // thread); Base64 is unwrapped, as the reference emits it
+  // (Encryptor.java:22). Null in, null out.
 
   /** Base64(AES-128-CBC-PKCS5(plaintext)) under an explicit key/IV —
     * identical bytes to Encryptor.encrypt (Encryptor.java:15-28).
     */
-  def encryptStanza(plain: Column, key: String, iv: String): Column = {
-    val full = aes_encrypt(
-      plain.cast("binary"),
-      lit(key.getBytes("UTF-8")), lit("CBC"), lit("PKCS"),
-      lit(iv.getBytes("UTF-8")))
-    base64NoWrap(substring(full, IvLen + 1, Int.MaxValue))
-  }
+  def encryptStanza(plain: Column, key: String, iv: String): Column =
+    AesCbc.encrypt(plain, key, iv)
 
-  /** Inverse of [[encryptStanza]] (Encryptor.java:30-43): Base64 in,
-    * UTF-8 string out. Spark expects IV ++ ciphertext, so we re-prepend.
+  /** Inverse of [[encryptStanza]] (Encryptor.java:30-43): Base64 in (line
+    * wrapping allowed), UTF-8 string out. Fails the query on input that
+    * does not decrypt.
     */
-  def decryptStanza(enc: Column, key: String, iv: String): Column = {
-    val full = concat(lit(iv.getBytes("UTF-8")), unbase64(enc))
-    aes_decrypt(full, lit(key.getBytes("UTF-8")), lit("CBC"), lit("PKCS"))
-      .cast("string")
-  }
+  def decryptStanza(enc: Column, key: String, iv: String): Column =
+    AesCbc.decrypt(enc, key, iv)
 
   /** Lenient variant: null (instead of error) on undecryptable input,
-    * mirroring Encryptor's catch-all → null (Encryptor.java:23-27).
+    * malformed Base64 included, mirroring Encryptor's catch-all → null
+    * (Encryptor.java:23-27).
     */
-  def tryDecryptStanza(enc: Column, key: String, iv: String): Column = {
-    val full = concat(lit(iv.getBytes("UTF-8")), unbase64(enc))
-    try_aes_decrypt(full, lit(key.getBytes("UTF-8")), lit("CBC"), lit("PKCS"))
-      .cast("string")
-  }
+  def tryDecryptStanza(enc: Column, key: String, iv: String): Column =
+    AesCbc.tryDecrypt(enc, key, iv)
 
   // --- message-type taxonomy (MessageType.java:6-24) --------------------
 

@@ -33,6 +33,11 @@ object GraftConfig {
   * i.e. a decoded message stream. Output schema: Schemas.history.
   * No shuffle anywhere: at 100 TB this pipeline is a pure map stage that
   * scales linearly with executors.
+  *
+  * Catalyst pushes the F1 filter (`isnotnull(stanza)` on the encrypted
+  * value) below the project, so the optimized plan holds the cipher call
+  * twice and each row is encrypted twice: once in the filter, once in
+  * the projection.
   */
 object Enrich {
 

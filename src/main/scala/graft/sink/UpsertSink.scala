@@ -3,6 +3,7 @@ package graft.sink
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Idempotent keyed upsert into a parquet-backed table — the engine's
   * stand-in for the reference's Cassandra INSERT-as-upsert
@@ -85,17 +86,18 @@ final class ParquetUpsertSink(
 
   /** [[UpsertSink.upsert]] over the partition-bucketed parquet table.
     *
-    * Batch requirement: `batch` must be PERSISTED or DETERMINISTIC. The
-    * touched partition values are collected in one action and the
-    * merge/write runs in another, so `batch` is evaluated twice. If
-    * the two evaluations disagree, dynamic overwrite can rewrite a
+    * The touched partition values are collected in one action and the
+    * merge/write runs in another, so `batch` is evaluated twice. If the
+    * two evaluations disagreed, dynamic overwrite could rewrite a
     * partition missing from the collected values with batch rows only,
-    * dropping that partition's existing rows. The production caller,
-    * [[graft.streaming.MessagePipeline.start]], persists each
-    * micro-batch (`batch.persist()`) before both sinks run.
+    * dropping that partition's existing rows. So a batch that is neither
+    * persisted nor deterministic is persisted here for the call
+    * ([[pinned]]). The production caller,
+    * [[graft.streaming.MessagePipeline.start]], persists each micro-batch
+    * itself, and a deterministic batch pays nothing.
     */
   def upsert(batch: DataFrame, keys: Seq[String], versionCol: String): Unit =
-    retry.run {
+    pinned(batch) { retry.run {
       val existing = readExisting(spark, path, batch)
       // restrict the merge to partitions the batch touches — key dedup is
       // therefore per-partition; see the trait contract for the
@@ -120,7 +122,7 @@ final class ParquetUpsertSink(
           dedupByKey(existing.unionByName(batch), keys, versionCol)
       }
       write(merged, path, partitionCol)
-    }
+    }}
 
   /** [[upsert]] strengthened to GLOBAL key uniqueness: when a later write
     * for an existing key carries a different derived bucket value (e.g. a
@@ -134,13 +136,16 @@ final class ParquetUpsertSink(
     * out-of-order older batches still lose (the at-least-once-replay
     * contract holds across bucket migrations, not just within one).
     *
+    * `batch` is evaluated more than once, so it is [[pinned]] like
+    * [[upsert]]'s.
+    *
     * Cost: rewrites every partition holding a copy of a batch key
     * (located by one broadcast key semi-join, never a table shuffle).
     * When keys do imply buckets that set equals the touched partitions —
     * same cost as [[upsert]] — and grows only with actual migrations.
     */
   def upsertGlobal(batch: DataFrame, keys: Seq[String], versionCol: String): Unit =
-    retry.run {
+    pinned(batch) { retry.run {
       val existing = readExisting(spark, path, batch)
       partitionCol match {
         case Some(p) =>
@@ -182,6 +187,18 @@ final class ParquetUpsertSink(
           write(dedupByKey(existing.unionByName(batch), keys, versionCol),
             path, partitionCol)
       }
+    }}
+
+  /** Runs `body` with every evaluation of `batch` yielding the same rows:
+    * as is when `batch` is persisted or its analyzed plan is
+    * deterministic, else with `batch` persisted until `body` ends.
+    */
+  private def pinned(batch: DataFrame)(body: => Unit): Unit =
+    if (batch.storageLevel != StorageLevel.NONE ||
+        batch.queryExecution.analyzed.deterministic) body
+    else {
+      batch.persist()
+      try body finally batch.unpersist()
     }
 
   private def write(df: DataFrame, path: String, pcol: Option[String]): Unit = {

@@ -72,4 +72,14 @@ class BenchSpec extends SparkSpec {
     assert(failed.get(0).asText() == "text_longest_dup")
     assert(node.get("queries").get("ok_query").asDouble() == 1.5)
   }
+
+  test("the rendered line carries the session's parallelism before sf") {
+    val sc = spark.sparkContext
+    val line = Bench.renderLine(Seq("ok_query" -> Some(0.5)), Seq.empty,
+      skip = Set.empty, streaming = "", sfDir = "/tmp/sf")
+    val node = mapper.readTree(line)
+    assert(node.get("cpus").isInt && node.get("cpus").asInt() == sc.defaultParallelism, line)
+    assert(node.get("master").asText() == sc.master, line)
+    assert(line.endsWith(s""","cpus":${sc.defaultParallelism},"master":"${sc.master}","sf":"/tmp/sf"}"""))
+  }
 }

@@ -20,24 +20,32 @@ class MessageFunctionsSpec extends SparkSpec {
     * (Encryptor.java:15-28: AES/CBC/PKCS5Padding, raw ASCII key/IV,
     * Base64 of ciphertext only).
     */
-  private def jceEncrypt(plain: String): String = {
+  private def jce(mode: Int, k: String, v: String): Cipher = {
     val c = Cipher.getInstance("AES/CBC/PKCS5PADDING")
-    c.init(Cipher.ENCRYPT_MODE,
-      new SecretKeySpec(key.getBytes("UTF-8"), "AES"),
-      new IvParameterSpec(iv.getBytes("UTF-8")))
-    java.util.Base64.getEncoder.encodeToString(c.doFinal(plain.getBytes("UTF-8")))
+    c.init(mode, new SecretKeySpec(k.getBytes("UTF-8"), "AES"),
+      new IvParameterSpec(v.getBytes("UTF-8")))
+    c
   }
 
+  private def jceEncrypt(plain: String): String = jceEncrypt(plain, key, iv)
+
+  private def jceEncrypt(plain: String, k: String, v: String): String =
+    java.util.Base64.getEncoder.encodeToString(
+      jce(Cipher.ENCRYPT_MODE, k, v).doFinal(plain.getBytes("UTF-8")))
+
   test("encryptStanza is byte-identical to the reference's JCE cipher") {
+    // every length 0–48 crosses each PKCS5 block boundary
     val plains = Seq("hello", "", "çok güzel ☺", "emoji 😀 ok",
-      "<message to='a@b'><body>hi</body></message>", "x" * 1000)
+      "<message to='a@b'><body>hi</body></message>", "x" * 1000) ++
+      (1 to 48).map("a" * _) ++ Seq("ü" * 17, "😀" * 9, "日本語のメッセージ 🎉")
     val got = plains.toDF("p")
       .select(encryptStanza($"p", key, iv).as("e")).as[String].collect()
     assert(got.toSeq == plains.map(jceEncrypt))
   }
 
   test("decrypt(encrypt(s)) == s for unicode incl. emoji") {
-    val plains = Seq("a", "tab\tchar", "multi\nline", "☃ 😀🎉", "{\"k\": 1}")
+    val plains = Seq("a", "tab\tchar", "multi\nline", "☃ 😀🎉", "{\"k\": 1}") ++
+      (0 to 48).map("b" * _) ++ Seq("y" * 1000)
     val got = plains.toDF("p")
       .select(decryptStanza(encryptStanza($"p", key, iv), key, iv).as("d"))
       .as[String].collect()
@@ -48,6 +56,84 @@ class MessageFunctionsSpec extends SparkSpec {
     val got = Seq("definitely-not-ciphertext!")
       .toDF("e").select(tryDecryptStanza($"e", key, iv)).collect()
     assert(got.head.isNullAt(0))
+  }
+
+  // --- the per-thread cipher (graft.plans.AesCbc) --------------------------
+
+  /** Base64 of 16 bytes that the JCE oracle refuses under (key, iv): the
+    * last block's PKCS5 padding is invalid.
+    */
+  private val badPadding: String = {
+    val d = jce(Cipher.DECRYPT_MODE, key, iv)
+    Iterator.from(0).map(i => java.util.Arrays.copyOf(s"block-$i".getBytes("UTF-8"), 16))
+      .find(b => scala.util.Try(d.doFinal(b)).isFailure)
+      .map(java.util.Base64.getEncoder.encodeToString).get
+  }
+
+  test("interpreted evaluation (no codegen) gives the same bytes") {
+    val plains = Seq("", "a" * 15, "a" * 16, "emoji 😀 ok")
+    val conf = spark.conf
+    conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    conf.set("spark.sql.codegen.wholeStage", "false")
+    try {
+      val got = plains.toDF("p").select(encryptStanza($"p", key, iv),
+        decryptStanza(encryptStanza($"p", key, iv), key, iv)).as[(String, String)].collect()
+      assert(got.toSeq == plains.map(p => (jceEncrypt(p), p)))
+      assert(Seq(badPadding).toDF("e").select(tryDecryptStanza($"e", key, iv)).head().isNullAt(0))
+    } finally {
+      conf.unset("spark.sql.codegen.factoryMode")
+      conf.unset("spark.sql.codegen.wholeStage")
+    }
+  }
+
+  test("null in gives null out for encrypt, decrypt and tryDecrypt") {
+    val row = Seq(Option.empty[String]).toDF("s").select(
+      encryptStanza($"s", key, iv), decryptStanza($"s", key, iv),
+      tryDecryptStanza($"s", key, iv)).head()
+    assert((0 until 3).forall(row.isNullAt))
+  }
+
+  test("76-column-wrapped Base64 decrypts the same as unwrapped") {
+    val plain = "<message to='a@b'><body>" + "wrap me " * 40 + "</body></message>"
+    val flat = jceEncrypt(plain)
+    val wrapped = flat.grouped(76).mkString("\r\n")
+    assert(flat.length > 152 && wrapped.contains("\r\n"))
+    val got = Seq(flat, wrapped).toDF("e")
+      .select(decryptStanza($"e", key, iv), tryDecryptStanza($"e", key, iv))
+      .as[(String, String)].collect()
+    assert(got.toSeq == Seq((plain, plain), (plain, plain)))
+  }
+
+  test("garbage: decryptStanza fails the query, tryDecryptStanza yields null") {
+    for (garbage <- Seq(badPadding, "QUJD", "a===", "definitely-not-ciphertext!")) {
+      val df = Seq(garbage).toDF("e")
+      intercept[Exception](df.select(decryptStanza($"e", key, iv)).collect())
+      assert(df.select(tryDecryptStanza($"e", key, iv)).head().isNullAt(0), garbage)
+    }
+  }
+
+  test("a failed row does not poison the next rows of its task") {
+    val plains = (1 to 20).map(i => s"after the failure $i")
+    val rows = (badPadding +: "QUJD" +: plains.map(jceEncrypt(_))).zipWithIndex
+    // one partition: the same task thread decrypts the garbage rows first
+    val got = rows.toDF("e", "i").coalesce(1)
+      .select($"i", tryDecryptStanza($"e", key, iv).as("d")).as[(Int, String)]
+      .collect().sortBy(_._1).map(_._2).toSeq
+    assert(got == Seq(null, null) ++ plains)
+  }
+
+  test("two key/IV pairs in one select: each column equals its own JCE oracle") {
+    val (key2, iv2) = ("ABCDEFGHIJKLMNOP", "0000111122223333")
+    val plains = (0 until 64).map(i => s"stanza $i " + "z" * (i % 33))
+    val got = plains.toDF("p").repartition(4).select($"p",
+      encryptStanza($"p", key, iv).as("e1"), encryptStanza($"p", key2, iv2).as("e2"),
+      decryptStanza(encryptStanza($"p", key2, iv2), key2, iv2).as("d2"))
+      .as[(String, String, String, String)].collect()
+    assert(got.length == plains.length)
+    got.foreach { case (p, e1, e2, d2) =>
+      assert(e1 == jceEncrypt(p) && e2 == jceEncrypt(p, key2, iv2) && d2 == p, p)
+      assert(e1 != e2)
+    }
   }
 
   test("datePartition matches reference yyyyMM + M semantics (UTC)") {

@@ -1,6 +1,8 @@
 package graft.queries
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{Base64, ExpressionImplUtils, StringTranslate, UnBase64}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.execution.{FileSourceScanExec, SortExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -190,6 +192,36 @@ class PlanSpec extends SparkSpec {
       graft.pipeline.Enrich.plain(graft.sources.Tables.messages(spark, sf001)))
     val shuffles = plan.collect { case e: ShuffleExchangeExec => e }
     assert(shuffles.isEmpty, s"enrich must stay narrow:\n$plan")
+  }
+
+  /** Every `StaticInvoke` of a query's optimized plan (Spark's `aes_*`,
+    * `base64` and `unbase64` are runtime-replaced by these).
+    */
+  private def staticInvokes(df: DataFrame): Seq[StaticInvoke] =
+    df.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(_.collect {
+      case s: StaticInvoke => s }))
+
+  test("stanza cipher: one graft static call per row, none of Spark's aes/base64/translate") {
+    val spark4 = Seq(classOf[ExpressionImplUtils], classOf[Base64], classOf[UnBase64]).map(_.getName)
+    val enrich = graft.pipeline.Enrich(graft.sources.Tables.messages(spark, sf001),
+      graft.pipeline.GraftConfig.dev)
+    for ((name, df) <- Seq("Enrich" -> enrich, "msg_roundtrip" -> query("msg_roundtrip"))) {
+      val invokes = staticInvokes(df)
+      val sparks = invokes.filter(i => spark4.contains(i.staticObject.getName.stripSuffix("$")))
+      assert(sparks.isEmpty, s"$name plans Spark's ${sparks.map(_.functionName)}")
+      val translates = df.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(_.collect {
+        case t: StringTranslate => t }))
+      assert(translates.isEmpty, s"$name still translates")
+      assert(invokes.exists(_.staticObject == graft.plans.AesCbc.getClass), name)
+    }
+    // the benchmark's plan self-test counts StaticInvokes named *aes*:
+    // the encrypt in Enrich's F1 filter (pushed below the project) and
+    // the one in the projection
+    val aes = staticInvokes(query("msg_pipeline_encrypted"))
+      .filter(_.functionName.toLowerCase.contains("aes"))
+    assert(aes.size == 2, aes)
+    assert(aes.forall(i => i.staticObject == graft.plans.AesCbc.getClass &&
+      i.functionName == "aesEncrypt"), aes)
   }
 
   test("dedup signatures are computed scan-side: narrow from parquet to sig") {

@@ -89,6 +89,33 @@ class UpsertSinkSpec extends SparkSpec {
     assert(sink.read().filter($"p" === "202403M").count() == 0)
   }
 
+  test("a non-deterministic unpersisted batch is pinned: existing rows of the month it lands in survive") {
+    // the batch's month comes from a non-deterministic UDF: 202401M on its
+    // first evaluation, 202402M on every later one. Evaluated once for the
+    // touched months and again for the write, the row would land in
+    // 202402M, whose existing rows the dynamic overwrite would then drop.
+    val month = udf(() =>
+      if (UpsertSinkSpec.evaluations.getAndIncrement() == 0) "202401M" else "202402M")
+      .asNondeterministic()
+    val sinks = Seq[(String, ParquetUpsertSink => (org.apache.spark.sql.DataFrame => Unit))](
+      "upsert" -> (s => b => s.upsert(b, Seq("id"), "v")),
+      "upsertGlobal" -> (s => b => s.upsertGlobal(b, Seq("id"), "v")))
+    for ((name, write) <- sinks) {
+      val sink = new ParquetUpsertSink(spark, tmpDir(s"upsert_nondet_$name"), Some("p"))
+      sink.upsert(Seq(("k1", 1L, "202401M"), ("k2", 1L, "202402M")).toDF("id", "v", "p"),
+        Seq("id"), "v")
+      UpsertSinkSpec.evaluations.set(0)
+      val batch = Seq(("k3", 1L)).toDF("id", "v").withColumn("p", month())
+      assert(!batch.queryExecution.analyzed.deterministic)
+      write(sink)(batch)
+      val out = sink.read().orderBy("id").as[(String, Long, String)].collect().toSeq
+      assert(out == Seq(("k1", 1L, "202401M"), ("k2", 1L, "202402M"), ("k3", 1L, "202401M")),
+        s"$name: $out")
+      assert(batch.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
+        s"$name left its pin cached")
+    }
+  }
+
   test("distinct-set upsert converges under replay (summary semantics)") {
     val dir = tmpDir("upsert_set")
     val sink = new ParquetUpsertSink(spark, dir)
@@ -178,6 +205,13 @@ class UpsertSinkSpec extends SparkSpec {
 
     intercept[IllegalArgumentException] { RetryPolicy(maxRetries = 0) }
   }
+}
+
+object UpsertSinkSpec {
+  /** Evaluation count of the non-deterministic month UDF (static: a task
+    * deserializes its own copy of anything the closure captures).
+    */
+  val evaluations = new java.util.concurrent.atomic.AtomicInteger()
 }
 
 /** Switchable fault-injection filesystem (r18): local semantics, but
