@@ -1,55 +1,48 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 import graft.queries.BuiltOnce
 
-/** Best-effort sweep of the engine's persisted tmp layout (judge r16
-  * #4): the build-once index dirs and L* marker files are keyed by
-  * (path digest, content stamp), so entries for SUPERSEDED corpus
-  * versions are never re-read — ~100 B per L* marker but whole parquet
-  * index dirs for IVF / near-dup, which accumulate unboundedly on a
-  * long-lived dev host that re-generates corpora. This tool deletes
-  * exactly the entries no current corpus can ever hit again and leaves
-  * everything else alone.
+/** Best-effort sweep of the engine's cross-session tmp artifacts (judge
+  * r16 #4). Each [[BuiltOnce]] artifact is keyed by (path digest,
+  * content stamp), so artifacts of SUPERSEDED corpus versions are
+  * never served again — whole parquet index dirs for IVF / near-dup,
+  * which accumulate unboundedly on a long-lived dev host that
+  * re-generates corpora. This tool deletes exactly the artifacts no
+  * current corpus can hit again and leaves everything else alone.
   *
   * What it scans, directly under the tmp root (`java.io.tmpdir` from
-  * `main`; parameterized for specs):
+  * `main`; parameterized for specs): every
+  * `graft_{ivf_idx,ivf_app,nd_idx,ldup}_<dirKey>[suffix]` dir, judged
+  * by ONE rule — its [[BuiltOnce.stampOf]] against the live corpus's
+  * stamp for that kind ([[graft.queries.SimilarityQueries
+  * .ivfContentStamp]], [[graft.queries.PipelineQueries
+  * .ndIndexContentStamp]], [[graft.queries.TextQueries
+  * .ldupContentStamp]]):
   *
-  *  - `graft_ldup_<dirKey>/<keyDigest>` — persisted L* markers
-  *    ([[graft.queries.TextQueries.longestDupMarker]]); judged per
-  *    FILE by the content stamp embedded in the marker key (field 2).
-  *  - `graft_ivf_idx_<dirKey>` / `graft_ivf_app_<dirKey>` — persisted
-  *    IVF indexes; judged by the `_graft_built` stamp vs the live
-  *    embeddings table ([[graft.queries.SimilarityQueries
-  *    .ivfContentStamp]]).
-  *  - `graft_nd_idx_<dirKey>` (+`_hot`) — persisted near-dup index +
-  *    hot-band census; judged vs the history slice stamp
-  *    ([[graft.queries.PipelineQueries.ndIndexContentStamp]]).
-  *  - `graft_avro_rt_<dirKey>` — the avro round-trip scratch (no
-  *    stamp marker: rewritten on every invocation); judged by dir key
-  *    only.
+  *  - dir key matching NO declared live corpus path: removed;
+  *  - no (readable) stamp: removed — [[BuiltOnce]] rebuilds such a dir
+  *    on its next use anyway (a half-written build, or a per-key
+  *    `graft_ldup_<dirKey>` dir of the older L* marker layout);
+  *  - stamp equal to the live stamp: kept; different: removed;
+  *  - live stamp not computable (the corpus parquet is missing, any
+  *    I/O failure): kept and reported `unsure`.
   *
-  * Deletion requires POSITIVE evidence: an entry is removed only when
-  * (a) its dir key matches NO declared live corpus path, or (b) the
-  * key matches but the embedded stamp differs from the live corpus's
-  * freshly computed stamp. "Cannot tell" — unreadable marker dir,
-  * a live corpus whose parquet is missing, any I/O failure — KEEPS the
-  * entry; the sweep itself is fully best-effort and never throws. A
-  * torn/garbage file inside OUR `graft_ldup_*` namespace is the one
-  * exception (removed: it can never be served — reads require an exact
-  * key match). Entries not matching the patterns above — including the
-  * `graft_<tag>_<uuid>` per-query scratch of
-  * [[graft.operators.Intermediates.scratch]], which is
-  * query-lifetime, not cross-session — are never touched.
+  * A failed delete is reported `unsure` too; the sweep never throws.
+  * Nothing else is touched: query-lifetime `graft_<tag>_<uuid>` dirs
+  * belong to [[graft.operators.Intermediates]], and the fixed-name
+  * `graft_avro_rt` dirs of earlier versions (the Avro round trip's
+  * scratch before it became one of those) are no longer the engine's.
   *
   * Callers must pass the COMPLETE set of corpus dirs still in use,
   * spelled exactly as queries receive them (the dir key is a digest of
   * the path STRING), and must not run the sweep concurrently with a
-  * query building an index. Worst case of any misjudgment is one
-  * rebuild / one re-search — the layouts are caches, the builds are
-  * the truth.
+  * query building an artifact. Worst case of any misjudgment is one
+  * rebuild — the artifacts are caches, the builds are the truth.
   */
 object TmpSweep {
 
@@ -61,10 +54,8 @@ object TmpSweep {
         unsure.sorted.map(p => s"[sweep] unsure  $p (kept)")).mkString("\n")
   }
 
-  private val Ldup = "graft_ldup_([0-9a-f]{16})".r
-  private val BuiltOnceDir =
-    "graft_(ivf_idx|ivf_app|nd_idx)_([0-9a-f]{16})(_hot)?".r
-  private val AvroRt = "graft_avro_rt_([0-9a-f]{16})".r
+  private val Artifact =
+    "graft_(ivf_idx|ivf_app|nd_idx|ldup)_([0-9a-f]{16})(_[0-9a-z_]+)?".r
 
   def sweep(spark: SparkSession, tmpRoot: String,
       liveDirs: Seq[String]): Report = {
@@ -80,94 +71,36 @@ object TmpSweep {
             queries.SimilarityQueries.ivfContentStamp(spark, d)
           case "nd_idx" => queries.PipelineQueries.ndIndexContentStamp(spark, d)
         })
-      } catch { case scala.util.control.NonFatal(_) => None })
+      } catch { case NonFatal(_) => None })
 
     val root = new Path(tmpRoot)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     var kept = Vector.empty[String]
     var removed = Vector.empty[String]
     var unsure = Vector.empty[String]
-    /** Best-effort recursive delete; reports what actually happened —
-      * a failed delete lands in `unsure` AND returns false so callers
-      * never treat still-on-disk state as gone.
-      */
-    def delete(p: Path): Boolean =
-      try {
-        val gone = fs.delete(p, true)
-        if (gone) removed :+= p.toString else unsure :+= p.toString
-        gone
-      } catch { case scala.util.control.NonFatal(_) => unsure :+= p.toString; false }
+    def delete(p: Path): Unit =
+      try { if (fs.delete(p, true)) removed :+= p.toString else unsure :+= p.toString }
+      catch { case NonFatal(_) => unsure :+= p.toString }
 
-    def readSmall(p: Path): Option[String] =
-      try Some(BuiltOnce.readFully(fs, p))
-      catch { case scala.util.control.NonFatal(_) => None }
-
-    // one L* marker file: keep iff its embedded key's stamp field equals
-    // the live corpus's current stamp (key layout:
-    // dirKey|<stamp>|minLen|maxLen — the stamp itself contains no '|')
-    def sweepLdupDir(entry: Path, liveDir: String): Unit = {
-      val files = try fs.listStatus(entry).toSeq
-        catch { case scala.util.control.NonFatal(_) => unsure :+= entry.toString; return }
-      liveStamp(liveDir, "ldup") match {
-        case None => unsure :+= entry.toString
-        case Some(want) =>
-          // count what actually remains on disk: kept markers AND
-          // failed deletes both block the dir cleanup below
-          var remaining = 0
-          files.foreach { st =>
-            val ok = readSmall(st.getPath).exists { body =>
-              body.split("\n", 2).head.split('|') match {
-                case fields if fields.length >= 2 => fields(1) == want
-                case _ => false
-              }
-            }
-            if (ok) { kept :+= st.getPath.toString; remaining += 1 }
-            else if (!delete(st.getPath)) remaining += 1
+    def judge(entry: Path, kind: String, liveDir: Option[String]): Unit =
+      liveDir match {
+        case None => delete(entry)
+        case Some(d) => BuiltOnce.stampOf(fs, entry) match {
+          case None => delete(entry)
+          case Some(got) => liveStamp(d, kind) match {
+            case Some(want) if got == want => kept :+= entry.toString
+            case Some(_) => delete(entry)
+            case None => unsure :+= entry.toString
           }
-          // cleanup of the now-EMPTY dir is bookkeeping, not a removal
-          // of state — don't double-report it beside its files
-          if (remaining == 0)
-            try { fs.delete(entry, true); () }
-            catch { case scala.util.control.NonFatal(_) => () }
+        }
       }
-    }
-
-    def sweepBuiltOnceDir(entry: Path, kind: String, liveDir: String): Unit = {
-      val marker = new Path(entry, "_graft_built")
-      val markerExists =
-        try fs.exists(marker)
-        catch { case scala.util.control.NonFatal(_) => unsure :+= entry.toString; return }
-      if (!markerExists) {
-        // half-written build (markers are stamped only after `build`
-        // returns): the next invocation rebuilds regardless — removable
-        delete(entry); return
-      }
-      (readSmall(marker), liveStamp(liveDir, kind)) match {
-        case (Some(got), Some(want)) if got == want => kept :+= entry.toString
-        case (Some(_), Some(_)) => delete(entry)
-        case _ => unsure :+= entry.toString
-      }
-    }
 
     val entries = try fs.listStatus(root).toSeq
-      catch { case scala.util.control.NonFatal(_) => Seq.empty }
+      catch { case NonFatal(_) => Seq.empty }
     entries.foreach { st =>
-      val name = st.getPath.getName
-      name match {
-        case Ldup(key) =>
-          live.get(key) match {
-            case None => delete(st.getPath)
-            case Some(d) => sweepLdupDir(st.getPath, d)
-          }
-        case BuiltOnceDir(kind, key, _) =>
-          live.get(key) match {
-            case None => delete(st.getPath)
-            case Some(d) => sweepBuiltOnceDir(st.getPath, kind, d)
-          }
-        case AvroRt(key) =>
-          if (live.contains(key)) kept :+= st.getPath.toString
-          else delete(st.getPath)
-        case _ => () // not ours (incl. graft_<tag>_<uuid> query scratch)
+      st.getPath.getName match {
+        case Artifact(kind, key, _) => judge(st.getPath, kind, live.get(key))
+        case _ => () // not ours
       }
     }
     Report(kept, removed, unsure)

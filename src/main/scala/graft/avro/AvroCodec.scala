@@ -5,8 +5,6 @@ import java.io.ByteArrayOutputStream
 import org.apache.avro.Schema
 import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
 import org.apache.avro.io.{BinaryDecoder, BinaryEncoder, DecoderFactory, EncoderFactory}
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.functions.udf
 
 import graft.model.Message
 
@@ -15,8 +13,10 @@ import graft.model.Message
   * Mirrors the reference's deserializer
   * (AvroDeserializationSchema.java:35-50: GenericDatumReader + reused
   * BinaryDecoder, Utf8→String projection; lazy one-time reader init
-  * :62-70) as a Spark UDF — `spark-avro`'s `from_avro` is not on the
-  * offline classpath, core avro-1.12 is (SURVEY.md §7.4/§7.6).
+  * :62-70); the column form is the native
+  * [[graft.plans.AvroDecodeMessage]] expression built on [[decode]] —
+  * `spark-avro`'s `from_avro` is not on the offline classpath, core
+  * avro-1.12 is (SURVEY.md §7.4/§7.6).
   *
   * Thread-safety: decoder/reader instances are per-thread (the reference
   * could reuse one instance because Flink runs one record at a time per
@@ -58,12 +58,6 @@ object AvroCodec extends Serializable {
     )
   }
 
-  /** Lenient decode: None on malformed bytes (PERMISSIVE-style option the
-    * reference lacks — it failed the whole job instead).
-    */
-  def tryDecode(bytes: Array[Byte]): Option[Message] =
-    try Some(decode(bytes)) catch { case _: Exception => None }
-
   /** Message → wire bytes (test-side encoder; the reference's producers
     * lived outside the repo).
     */
@@ -80,21 +74,5 @@ object AvroCodec extends Serializable {
     writer.write(rec, enc)
     enc.flush()
     out.toByteArray
-  }
-
-  /** Column form: binary → struct<msgId,username,jid,stanza,sentTime>.
-    * Fail-fast on malformed rows, matching the reference.
-    */
-  def decodeUdf(spark: SparkSession): Column => Column = {
-    import spark.implicits._
-    val f = udf((b: Array[Byte]) => decode(b))
-    c => f(c)
-  }
-
-  /** Lenient column form: malformed rows decode to null. */
-  def tryDecodeUdf(spark: SparkSession): Column => Column = {
-    import spark.implicits._
-    val f = udf((b: Array[Byte]) => tryDecode(b).orNull)
-    c => f(c)
   }
 }

@@ -135,10 +135,10 @@ object Dedup {
     * Scale design (100 TB): at scale `history` is a digest-only index
     * table (32-byte sha per ever-ingested doc), so the anti-join
     * shuffles digests on both sides, never document bodies — the batch
-    * is digested in its scan projection. A broadcast Bloom filter over
-    * the history digests in front of the anti-join cheaply discards the
-    * mostly-novel majority before the shuffle; the exact anti-join
-    * stays as the semantic (Bloom false positives must not drop docs).
+    * is digested in its scan projection. The streaming corpus
+    * ([[graft.streaming.CorpusIngest]]) puts a sharded Bloom filter in
+    * front of the same exact screen; Bloom false positives must never
+    * drop docs, so the exact anti-join stays the semantic.
     */
   def incrementalIngest(history: DataFrame, batch: DataFrame,
                         textCol: String, idCol: String): DataFrame =
@@ -319,44 +319,6 @@ object Dedup {
       .filter(sigAgreement(col("sig"), col("h_sig")) >= threshold)
       .select(col("id").as(idCol)).distinct()
     freshExact.join(colliding, Seq(idCol), "left_anti").drop("__sha")
-  }
-
-  /** [[incrementalIngestDigests]] with a Bloom prefilter: rows whose
-    * digest the filter has definitely never seen skip the anti-join
-    * shuffle entirely; only possible-duplicates (true dups + the fpp
-    * false positives) join against the index. Identical output to the
-    * exact form — Bloom false positives reach the anti-join and
-    * survive it; only the shuffle volume changes, from |batch| to
-    * |dups| + fpp·|batch|. Worth it when the history index is large
-    * and batches are mostly novel (the steady state of corpus growth).
-    *
-    * The filter is built distributed (`stat.bloomFilter` merges
-    * per-partition sketches) and broadcast once. `mightContain` runs
-    * through a scalar UDF: Spark's BloomFilterMightContain expression
-    * is not in the public API, and this predicate gates a shuffle —
-    * its per-row cost is noise against the exchange it avoids.
-    */
-  def incrementalIngestBloom(seenDigests: DataFrame, batch: DataFrame,
-                             textCol: String, idCol: String,
-                             expectedItems: Long, fpp: Double = 0.01): DataFrame = {
-    val seen = seenDigests.select(col("content_sha")).distinct()
-    // stat.bloomFilter NPEs on an empty frame (no partial sketch to
-    // merge); an empty history also makes the prefilter pointless
-    if (seen.isEmpty)
-      return incrementalIngestDigests(seenDigests, batch, textCol, idCol)
-    val digested = batch
-      .select(col(idCol), sha2(col(textCol), 256).as("content_sha"))
-    val bloom = seen.stat.bloomFilter("content_sha",
-      math.max(expectedItems, 1L), fpp)
-    val bloomB = batch.sparkSession.sparkContext.broadcast(bloom)
-    val maybeSeen = udf((s: String) => bloomB.value.mightContainString(s))
-    val surelyNovel = digested.filter(!maybeSeen(col("content_sha")))
-    val checked = digested.filter(maybeSeen(col("content_sha")))
-      .join(seen, Seq("content_sha"), "left_anti")
-    surelyNovel.unionByName(checked)
-      .groupBy(col("content_sha"))
-      .agg(min(col(idCol)).as(idCol))
-      .select(col(idCol), col("content_sha"))
   }
 
   // --- MinHash + LSH -----------------------------------------------------
@@ -894,7 +856,9 @@ object Dedup {
   // --- SimHash -----------------------------------------------------------
 
   /** 64-bit SimHash over whitespace tokens: bit b is set when the sum of
-    * ±1 votes (sign of token-hash bit b) is positive.
+    * ±1 votes (sign of token-hash bit b) is positive. The Column-level
+    * reference the native [[graft.plans.TextHashExprs.simhashSig]] is
+    * checked against.
     */
   def simhash(text: Column): Column = {
     val toks = split(trim(text), "\\s+")
@@ -916,41 +880,6 @@ object Dedup {
     aggregate(
       zip_with(votes, powers, (v, p) => when(v > 0, p).otherwise(lit(0L))),
       lit(0L), (acc, x) => acc + x)
-  }
-
-  /** SimHash signatures via explode + whole-stage-codegen'd aggregation —
-    * the high-throughput form of [[simhash]]: one (id, token-hash) row
-    * per token, then 64 conditional sums Tungsten can codegen, instead of
-    * per-row interpreted array folds (HOFs don't codegen; the scalar form
-    * allocates a 64-long array per token). Same signature bit-for-bit.
-    */
-  def simhashAgg(df: DataFrame, textCol: String, idCols: Seq[String]): DataFrame = {
-    val exploded = df.select(
-      idCols.map(col) :+
-        explode(transform(split(trim(col(textCol)), "\\s+"), t => xxhash64(t))).as("h"): _*)
-    // pack 2 bit-counters per 64-bit sum (32-bit lanes): 32 aggregate
-    // buffers instead of 64 keeps the generated aggregate code small
-    // while making lane carry unreachable — a lane overflows only at
-    // 2^32 tokens in ONE document, and the long sum itself would raise
-    // an ANSI error at ~2^31 tokens first; both are beyond Spark's 2 GiB
-    // single-string limit, so no token count a row can hold corrupts a
-    // lane. ones_b recovers per-bit 1-counts and the sign test
-    // 2·ones_b > n reproduces the ±1 vote.
-    def packed(g: Int) = (0 until 2).map { j =>
-      shiftleft(shiftright(col("h"), 2 * g + j).bitwiseAND(1), 32 * j)
-    }.reduce(_ + _)
-    val aggCols =
-      count(lit(1)).as("n") +:
-        (0 until 32).map(g => sum(packed(g)).as(s"p$g"))
-    val votes = exploded.groupBy(idCols.map(col): _*)
-      .agg(aggCols.head, aggCols.tail: _*)
-    def ones(b: Int) =
-      shiftright(col(s"p${b / 2}"), 32 * (b % 2)).bitwiseAND(0xFFFFFFFFL)
-    votes.select(
-      idCols.map(col) :+
-        (0 until 64).map(b =>
-          when(ones(b) * 2 > col("n"), lit(1L << b)).otherwise(lit(0L)))
-          .reduce(_ + _).as("sig"): _*)
   }
 
   /** Hamming distance between two 64-bit signatures. */

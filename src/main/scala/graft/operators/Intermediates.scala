@@ -10,14 +10,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * scoped per `SparkSession`.
   *
   * An operator whose returned plan still reads a persisted frame (a
-  * signature cache, a sorted range partition, a scratch edge list)
-  * registers that frame here instead of handing its caller a release
-  * handle; anything an operator frees before it returns keeps its own
-  * `try/finally`. [[release]] frees everything a session registered.
-  * The registry ([[graft.SparkEntry.queries]]) calls it before every
-  * build, so a registry frame stays valid until the next registry
-  * build in that session. Direct operator callers call it once they
-  * are done with the frames they built.
+  * signature cache, a sorted range partition, a scratch edge list) or
+  * a scratch dir (an Avro round trip's files) registers it here instead
+  * of handing its caller a release handle; anything an operator frees
+  * before it returns keeps its own `try/finally`. [[release]] frees
+  * everything a session registered. The registry
+  * ([[graft.SparkEntry.queries]]) calls it before every build, so a
+  * registry frame stays valid until the next registry build in that
+  * session. Direct operator callers call it once they are done with
+  * the frames they built.
+  *
+  * This is the one idiom for query-lifetime temp state; state that
+  * outlives a session is a [[graft.queries.BuiltOnce]] artifact.
   */
 object Intermediates {
 
@@ -41,10 +45,37 @@ object Intermediates {
     df
   }
 
-  /** Evaluate `body` ONCE into a `graft_<tag>_<uuid>` parquet dir and
-    * return the read-back frame. Everything `body` registered is
-    * released as soon as the write completes (the data now lives on
-    * disk), and the dir's delete is registered in its place.
+  /** A fresh `graft_<tag>_<uuid>` dir path whose recursive delete is
+    * registered like any other intermediate: the caller writes into it,
+    * and the dir is gone at the session's next [[release]] (for the
+    * registry, its next build). Nothing is created here.
+    *
+    * The dir lives under the Spark checkpoint dir when one is
+    * configured (a shared filesystem on a real cluster); LOCAL MODE may
+    * fall back to the driver's tmp dir (as an explicit `file:` path),
+    * but a non-local session without a checkpoint dir is a loud error —
+    * executors resolving a bare tmp path against a non-local default
+    * filesystem would each write somewhere else.
+    */
+  def scratchDir(spark: SparkSession, tag: String): String = {
+    val base = spark.sparkContext.getCheckpointDir.getOrElse {
+      require(spark.sparkContext.isLocal,
+        "Intermediates.scratchDir needs a Spark checkpoint dir on a shared " +
+          "filesystem when not in local mode (sc.setCheckpointDir) — " +
+          "the driver-local tmp fallback is meaningless to executors")
+      "file:" + System.getProperty("java.io.tmpdir")
+    }
+    val dir = new Path(base,
+      s"graft_${tag}_${java.util.UUID.randomUUID().toString.take(12)}")
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    onRelease(spark) { fs.delete(dir, true); () }
+    dir.toString
+  }
+
+  /** Evaluate `body` ONCE into a [[scratchDir]] as parquet and return
+    * the read-back frame. Everything `body` registered is released as
+    * soon as the write completes (the data now lives on disk); the
+    * dir's delete is registered in its place.
     *
     * Storage-level caching is the wrong tool for a plan that is both
     * expensive and consumed by several actions (e.g. a PPJoin edge
@@ -54,33 +85,15 @@ object Intermediates {
     * (measured: sf10 `dedup_components` cost 2.5× its own edge input
     * when the loop's actions fell out of cache). The round-trip pins
     * the cost at one evaluation plus one small columnar write.
-    *
-    * The dir lives under the Spark checkpoint dir when one is
-    * configured (a shared filesystem on a real cluster); LOCAL MODE may
-    * fall back to the driver's tmp dir (as an explicit `file:` path),
-    * but a non-local session without a checkpoint dir is a loud error —
-    * executors resolving a bare tmp path against a non-local default
-    * filesystem would each write somewhere else.
     */
   def scratch(tag: String)(body: => DataFrame): DataFrame = {
     val inner = ArrayBuffer.empty[() => Unit]
     open.set(inner :: open.get)
     try {
       val df = try body finally open.set(open.get.tail)
-      val spark = df.sparkSession
-      val base = spark.sparkContext.getCheckpointDir.getOrElse {
-        require(spark.sparkContext.isLocal,
-          "Intermediates.scratch needs a Spark checkpoint dir on a shared " +
-            "filesystem when not in local mode (sc.setCheckpointDir) — " +
-            "the driver-local tmp fallback is meaningless to executors")
-        "file:" + System.getProperty("java.io.tmpdir")
-      }
-      val dir = new Path(base,
-        s"graft_${tag}_${java.util.UUID.randomUUID().toString.take(12)}")
-      val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      onRelease(spark) { fs.delete(dir, true); () }
-      df.write.parquet(dir.toString)
-      spark.read.parquet(dir.toString)
+      val dir = scratchDir(df.sparkSession, tag)
+      df.write.parquet(dir)
+      df.sparkSession.read.parquet(dir)
     } finally runAll(inner.toSeq)
   }
 

@@ -1,15 +1,39 @@
 package graft.queries
 
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Run an index build once per (directory, corpus content): a
-  * completion marker stamped with a content digest gates the rebuild,
-  * so repeated invocations — the bench's samples, Verify after Bench,
-  * every later session against unchanged inputs — pay only the index
-  * SERVE. A regenerated corpus (different rows at the same path)
-  * changes the digest and rebuilds; a half-written index (no marker:
-  * markers are stamped only after `build` returns) rebuilds too.
+/** Build a cross-session artifact once per (directory, corpus content):
+  * a `_graft_built` marker stamped with a content digest gates the
+  * rebuild, so repeated invocations — the bench's samples, Verify after
+  * Bench, every later session against unchanged inputs — pay only the
+  * SERVE. This is the one idiom for temp state that outlives a session
+  * (the IVF indexes, the near-dup index and its hot-band census, the L*
+  * memo); query-lifetime dirs belong to
+  * [[graft.operators.Intermediates]] instead.
+  *
+  * The policy, the same for every artifact:
+  *  - a regenerated corpus (different rows at the same path) changes the
+  *    stamp and rebuilds;
+  *  - a missing OR unreadable marker counts as absent and rebuilds — so
+  *    does a half-written artifact, since the marker is stamped only
+  *    after `build` returns;
+  *  - a failing `build` fails the call and stamps nothing;
+  *  - the artifact dir is made owner-only (0700) before the marker is
+  *    stamped, also when it already existed at a wider mode: the
+  *    artifact lives under a possibly world-shared tmp and is trusted
+  *    exactly when its stamp matches (deployments with hostile local
+  *    users should still point `java.io.tmpdir` at a private location);
+  *  - a failed chmod or marker write keeps the call's answer (the build
+  *    is done) and leaves the artifact unstamped, so the next call
+  *    rebuilds.
+  *
+  * Only this object knows the marker's name and format;
+  * [[graft.TmpSweep]] asks [[stampOf]].
   *
   * The stamp folds the FULL content of the key columns in: row count
   * plus TWO order-independent folds of per-row xxhash64 over `keyCols`
@@ -30,6 +54,9 @@ import org.apache.spark.sql.functions._
   */
 private[graft] object BuiltOnce {
 
+  private val Marker = "_graft_built"
+  private val OwnerOnly = new FsPermission(448.toShort) // 0700
+
   /** Collision-resistant directory key for a dataset path: sha-256 of
     * the path's UTF-8 bytes, first 16 hex chars. The earlier 32-bit
     * `String.hashCode` key let two dataset paths (or concurrent
@@ -43,13 +70,10 @@ private[graft] object BuiltOnce {
     d.take(8).map(b => f"$b%02x").mkString
   }
 
-  /** Read a small marker/state file fully as UTF-8 — the one read loop
-    * shared by every marker consumer (here, the L* markers in
-    * TextQueries, the sweeper in [[graft.TmpSweep]]). Throws on I/O
-    * failure; callers own their miss/keep policy.
+  /** Read a small file fully as UTF-8. Throws on I/O failure; callers
+    * own their miss policy.
     */
-  private[graft] def readFully(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): String = {
+  private[queries] def readFully(fs: FileSystem, p: Path): String = {
     val in = fs.open(p)
     try {
       val out = new java.io.ByteArrayOutputStream()
@@ -59,6 +83,21 @@ private[graft] object BuiltOnce {
       new String(out.toByteArray, "UTF-8")
     } finally in.close()
   }
+
+  /** Write `body` as UTF-8 to `p`, replacing it. Throws on failure. */
+  private[queries] def writeFully(fs: FileSystem, p: Path, body: String): Unit = {
+    val out = fs.create(p, true)
+    try out.write(body.getBytes("UTF-8")) finally out.close()
+  }
+
+  /** The stamp `dir` was built with; None when its marker is absent or
+    * unreadable (which [[apply]] treats alike: rebuild).
+    */
+  def stampOf(fs: FileSystem, dir: Path): Option[String] =
+    try {
+      val m = new Path(dir, Marker)
+      if (fs.exists(m)) Some(readFully(fs, m)) else None
+    } catch { case NonFatal(_) => None }
 
   def contentStamp(corpus: DataFrame, keyCols: Seq[Column]): String = {
     val h = xxhash64(keyCols: _*)
@@ -74,19 +113,19 @@ private[graft] object BuiltOnce {
   def apply(dir: String, corpus: DataFrame, keyCols: Seq[Column])(
       build: => Unit): Unit = {
     // Hadoop FS (not java.nio) so the marker lives on the same
-    // filesystem as the index it gates — HDFS-style dirs included
-    val spark = corpus.sparkSession
-    val marker = new org.apache.hadoop.fs.Path(dir, "_graft_built")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // filesystem as the artifact it gates — HDFS-style dirs included
+    val root = new Path(dir)
+    val fs = root.getFileSystem(corpus.sparkSession.sparkContext.hadoopConfiguration)
     val stamp = contentStamp(corpus, keyCols)
-    val current =
-      if (!fs.exists(marker)) None
-      else Some(readFully(fs, marker))
-    if (!current.contains(stamp)) {
+    if (!stampOf(fs, root).contains(stamp)) {
       build
-      val out = fs.create(marker, true)
-      try out.write(stamp.getBytes("UTF-8")) finally out.close()
-      ()
+      try {
+        // the build (or an earlier version) usually created the dir at
+        // the default umask, so the mode is set here, not at creation
+        fs.mkdirs(root)
+        fs.setPermission(root, OwnerOnly)
+        writeFully(fs, new Path(root, Marker), stamp)
+      } catch { case NonFatal(_) => () }
     }
   }
 }

@@ -44,7 +44,7 @@ object PipelineQueries {
 
   /** Stamp of that slice — shared with [[graft.TmpSweep]] so the
     * sweeper judges the nd-index dirs' liveness by the SAME stamp
-    * [[BuiltOnce]] wrote into their `_graft_built` markers.
+    * [[BuiltOnce]] stamped them with.
     */
   private[graft] def ndIndexContentStamp(s: SparkSession, d: String): String =
     BuiltOnce.contentStamp(ndHistory(Tables.documents(s, d)),
@@ -103,10 +103,10 @@ object PipelineQueries {
     // .avro part files → V2 scan → month × type aggregate. The oracle
     // computes the SAME aggregate straight off the parquet, so any
     // value corrupted, dropped, or duplicated in
-    // encode→container→split-read→decode flips the hash
+    // encode→container→split-read→decode flips the hash. The files live
+    // in a query-lifetime scratch dir, deleted at the next registry build
     "pipe_avro_roundtrip" -> ((s, d) => {
-      val dir = s"${System.getProperty("java.io.tmpdir")}/graft_avro_rt_" +
-        BuiltOnce.dirKey(d)
+      val dir = Intermediates.scratchDir(s, "avro")
       graft.sources.AvroFiles.write(
         Tables.events(s, d).select("event_id", "user_id", "event_type", "value", "ts"),
         dir, deflate = true)

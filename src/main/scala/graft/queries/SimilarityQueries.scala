@@ -37,7 +37,7 @@ object SimilarityQueries {
   /** Stamp of the corpus the persisted IVF layouts
     * (`graft_ivf_idx_*` / `graft_ivf_app_*`) are keyed on — shared with
     * [[graft.TmpSweep]] so the sweeper judges an index dir's liveness by
-    * the SAME stamp [[builtOnce]] wrote into its `_graft_built` marker.
+    * the SAME stamp [[builtOnce]] stamped it with.
     */
   private[graft] def ivfContentStamp(s: SparkSession, d: String): String =
     BuiltOnce.contentStamp(Tables.embeddings(s, d),

@@ -17,36 +17,14 @@ import org.apache.spark.storage.StorageLevel
   * rewrites partitions present in the incoming batch (dynamic partition
   * overwrite), so cost is O(touched months), not O(table). A real
   * cluster deployment would swap this for the Cassandra connector or a
-  * merge-on-read table format behind the same trait.
+  * merge-on-read table format behind the same methods.
   */
-trait UpsertSink {
-  /** Upsert `batch` by `keys`; later writes win within a batch via
-    * `versionCol` ordering (ties broken deterministically).
-    *
-    * Partition-bucketed implementations merge per bucket: last-write-wins
-    * is global only when `keys` functionally determine the bucket value
-    * (re-deriving it from the same payload fields on every write, as the
-    * reference derives `date_partition` from `sentTime` —
-    * CassandraOutputFormat.java:106). A later write for an existing key
-    * whose DERIVED bucket changed (e.g. a corrected timestamp crossing a
-    * month) lands in the new bucket and leaves the old row alive in the
-    * old one — exactly what the reference's Cassandra schema does, since
-    * `date_partition` is the table's partition key and a changed value
-    * addresses a different Cassandra row. Callers needing global key
-    * uniqueness across bucket changes use
-    * [[ParquetUpsertSink.upsertGlobal]] (an extra key anti-join over the
-    * stale buckets, deliberately not hidden inside this
-    * O(touched-buckets) path).
-    */
-  def upsert(batch: DataFrame, keys: Seq[String], versionCol: String): Unit
-}
-
 final class ParquetUpsertSink(
     spark: SparkSession,
     path: String,
     partitionCol: Option[String] = None,
     retry: RetryPolicy = RetryPolicy.default
-) extends UpsertSink {
+) {
 
   import ParquetUpsertSink._
 
@@ -84,7 +62,22 @@ final class ParquetUpsertSink(
       }
     }
 
-  /** [[UpsertSink.upsert]] over the partition-bucketed parquet table.
+  /** Upsert `batch` by `keys`; later writes win within a batch via
+    * `versionCol` ordering (ties broken deterministically).
+    *
+    * The table merges per partition bucket: last-write-wins is global
+    * only when `keys` functionally determine the bucket value
+    * (re-deriving it from the same payload fields on every write, as the
+    * reference derives `date_partition` from `sentTime` —
+    * CassandraOutputFormat.java:106). A later write for an existing key
+    * whose DERIVED bucket changed (e.g. a corrected timestamp crossing a
+    * month) lands in the new bucket and leaves the old row alive in the
+    * old one — exactly what the reference's Cassandra schema does, since
+    * `date_partition` is the table's partition key and a changed value
+    * addresses a different Cassandra row. Callers needing global key
+    * uniqueness across bucket changes use [[upsertGlobal]] (an extra key
+    * anti-join over the stale buckets, deliberately not hidden inside
+    * this O(touched-buckets) path).
     *
     * The touched partition values are collected in one action and the
     * merge/write runs in another, so `batch` is evaluated twice. If the

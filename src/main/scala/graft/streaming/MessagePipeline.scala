@@ -29,7 +29,10 @@ object MessagePipeline {
   /** One helper thread for the summary sink (guide §2.6: overlap
     * independent jobs). Daemon so it never blocks JVM exit; one thread
     * is enough — each micro-batch runs exactly one summary upsert
-    * beside the detail upsert on the caller's thread.
+    * beside the detail upsert on the caller's thread. The thread
+    * inherits Spark's local properties only once, from whichever
+    * micro-batch created it, so each upsert sets its own query's job
+    * group (see [[start]]).
     */
   private lazy val sinkEc: scala.concurrent.ExecutionContext =
     scala.concurrent.ExecutionContext.fromExecutor(
@@ -90,12 +93,18 @@ object MessagePipeline {
           // Await below is unconditional — so a failure in either sink
           // still fails the batch before the checkpoint commits, and
           // the replay re-runs two idempotent upserts exactly as it
-          // re-ran two sequential ones. Job descriptions are
-          // thread-local, so each sink stays labeled in the UI.
+          // re-ran two sequential ones. Job groups and descriptions are
+          // thread-local: the summary upsert runs in THIS query's group
+          // (its runId, set by the stream on this thread), so
+          // query.stop()'s cancelJobGroup reaches it, and each sink
+          // stays labeled in the UI.
+          val group = sc.getLocalProperty("spark.jobGroup.id")
           val summaryF = scala.concurrent.Future {
-            sc.setJobDescription(s"batch $batchId: summary upsert")
-            new ParquetUpsertSink(spark, summaryPath, None, retry)
+            sc.setJobGroup(group, s"batch $batchId: summary upsert",
+              interruptOnCancel = true)
+            try new ParquetUpsertSink(spark, summaryPath, None, retry)
               .upsertDistinct(Enrich.summary(b))
+            finally sc.clearJobGroup()
           }(MessagePipeline.sinkEc)
           val detail = scala.util.Try {
             sc.setJobDescription(s"batch $batchId: detail upsert")

@@ -26,17 +26,5 @@ class AvroCodecSpec extends SparkSpec {
   test("decode fails fast on malformed bytes (reference parity)") {
     // AvroDeserializationSchema.java:47-49 wraps any decode error
     intercept[Exception] { AvroCodec.decode(Array[Byte](1, 2, 3)) }
-    assert(AvroCodec.tryDecode(Array[Byte](1, 2, 3)).isEmpty)
-  }
-
-  test("decodeUdf projects a binary column to the message struct") {
-    val msgs = Seq(
-      Message("m1", "u1", "peer@x", "<m/>", 1704067200000L),
-      Message("m2", "u2", "peer@y", "hello", 0L))
-    val df = msgs.map(AvroCodec.encode).toDF("value")
-    val dec = AvroCodec.decodeUdf(spark)
-    val got = df.select(dec($"value").as("m")).select("m.*")
-      .as[Message].collect().toSeq
-    assert(got == msgs)
   }
 }

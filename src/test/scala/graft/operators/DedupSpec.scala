@@ -257,33 +257,6 @@ class DedupSpec extends SparkSpec {
     assert(kept == Set(1L, 9L))
   }
 
-  test("simhashAgg matches scalar simhash bit-for-bit") {
-    val scalar = docs.select($"doc_id", Dedup.simhash($"text").as("sig"))
-      .as[(Long, Long)].collect().toMap
-    val agg = Dedup.simhashAgg(docs, "text", Seq("doc_id"))
-      .as[(Long, Long)].collect().toMap
-    assert(scalar == agg)
-  }
-
-  test("simhashAgg is exact past 65536 tokens per doc (ADVICE r1 lane carry)") {
-    // 70k tokens would carry across the old 16-bit lanes; 32-bit lanes
-    // hold. Ground truth: per-bit vote counts computed in plain Scala
-    // over the same xxhash64 token hashes Spark produced.
-    val n = 70000
-    val doc = (0 until n).map(i => s"w${i % 7}").mkString(" ")
-    val hashes = Seq(doc).toDF("text")
-      .select(transform(split(trim($"text"), "\\s+"), t => xxhash64(t)).as("hs"))
-      .as[Seq[Long]].head()
-    assert(hashes.length == n)
-    val expected = (0 until 64).map { b =>
-      val ones = hashes.count(h => ((h >> b) & 1L) == 1L)
-      if (2 * ones > n) 1L << b else 0L
-    }.sum
-    val got = Dedup.simhashAgg(Seq((1L, doc)).toDF("doc_id", "text"),
-      "text", Seq("doc_id")).select("sig").as[Long].head()
-    assert(got == expected)
-  }
-
   test("managed variants release their internal cache (ADVICE r1)") {
     // "managed": each operator registers its internal cache with
     // Intermediates, and Intermediates.release frees all of them

@@ -100,32 +100,6 @@ class PipelineOpsSpec extends SparkSpec {
     assert(top.head == 11L) // rank-2 lex + rank-1 sem beats any single hit
   }
 
-  test("incrementalIngestBloom is output-identical to the exact form") {
-    // history: 200 docs; batch: 100 replays + 150 novel + in-batch dups
-    val history = (1L to 200L).map(i => (i, s"hist doc $i")).toDF("doc_id", "text")
-    val seen = history.select(sha2(col("text"), 256).as("content_sha"))
-    val batch = (
-      (1L to 100L).map(i => (1000L + i, s"hist doc $i")) ++   // replays
-      (1L to 150L).map(i => (2000L + i, s"new doc $i")) ++    // novel
-      (1L to 150L).map(i => (3000L + i, s"new doc $i"))       // in-batch dups
-    ).toDF("doc_id", "text")
-    val exact = Dedup.incrementalIngestDigests(seen, batch, "text", "doc_id")
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    val bloomed = Dedup.incrementalIngestBloom(seen, batch, "text", "doc_id",
-      expectedItems = 200)
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    assert(bloomed == exact)
-    assert(exact.size == 150 && exact.forall(_._1 < 3000L)) // min ids win
-  }
-
-  test("incrementalIngestBloom on an empty history ingests everything once") {
-    val seen = Seq.empty[String].toDF("content_sha")
-    val batch = Seq((1L, "a"), (2L, "b"), (3L, "a")).toDF("doc_id", "text")
-    val got = Dedup.incrementalIngestBloom(seen, batch, "text", "doc_id", 1)
-      .select("doc_id").as[Long].collect().sorted
-    assert(got.toSeq == Seq(1L, 2L))
-  }
-
   test("pipeline ops survive empty inputs") {
     val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
     assert(Search.bm25(empty, "text", "doc_id", Seq("x")).count() == 0)

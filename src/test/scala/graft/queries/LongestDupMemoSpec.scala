@@ -1,13 +1,16 @@
 package graft.queries
 
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.permission.FsPermission
+
 import graft.SparkSpec
 
-/** The round-15 L* memo (`TextQueries.longestDupLenMemo`) must never
-  * serve a stale length: the memo key folds the corpus CONTENT in
-  * (count + order-independent xxhash64 over (doc_id, text)), so
-  * rewriting the SAME path with different documents must re-search.
-  * That stamp is the only thing standing between the memoization and a
-  * silent wrong answer, so it gets its own spec.
+/** The L* memo (`TextQueries.longestDupLenMemo`, a [[BuiltOnce]]
+  * artifact) must never serve a stale length: its stamp folds the
+  * corpus CONTENT in (count + order-independent xxhash64 over
+  * (doc_id, text)), so rewriting the SAME path with different documents
+  * must re-search. That stamp is the only thing standing between the
+  * memoization and a silent wrong answer, so it gets its own spec.
   */
 class LongestDupMemoSpec extends SparkSpec {
   import spark.implicits._
@@ -46,11 +49,17 @@ class LongestDupMemoSpec extends SparkSpec {
     assert(lstar(dir).contains(31), "corpus B at the same path: re-searched")
   }
 
-  private def markerFs(p: org.apache.hadoop.fs.Path) =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  /** The memo's [[BuiltOnce]] artifact dir for `dir` at the queries'
+    * (8, 600) range, and its value file.
+    */
+  private def artifact(dir: String) = new Path(
+    s"${System.getProperty("java.io.tmpdir")}/graft_ldup_${BuiltOnce.dirKey(dir)}_8_600")
+  private def valueFile(dir: String) = new Path(artifact(dir), "lstar")
 
-  private def overwriteMarker(p: org.apache.hadoop.fs.Path, body: String): Unit = {
-    val out = markerFs(p).create(p, true)
+  private def fs(p: Path) = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  private def overwrite(p: Path, body: String): Unit = {
+    val out = fs(p).create(p, true)
     try out.write(body.getBytes("UTF-8")) finally out.close()
   }
 
@@ -58,86 +67,62 @@ class LongestDupMemoSpec extends SparkSpec {
     val dir = tmpDir("ldmemo2")
     write(dir, "qqwweerrttyyuuiioopp")
     assert(lstar(dir).contains(20))
-    // the cold search persisted a marker keyed by (path, content, range)
-    val key = TextQueries.lastLdupKeyForTest
-    val marker = TextQueries.longestDupMarker(dir, key)
-    assert(markerFs(marker).exists(marker), "cold search must persist L*")
-    // simulate a FRESH JVM: clear only the in-JVM map. Proof the next
-    // call is served from DISK (not a re-search): plant a different —
-    // wrong but well-formed — length in the marker and observe it
-    // served. The marker is trusted exactly when its embedded key
-    // matches, and the key folds the corpus content in — so this
-    // "wrong" serve is only reachable by editing the file, as here.
-    overwriteMarker(marker, s"$key\n19")
-    TextQueries.clearLongestDupMemoForTest()
+    // the cold search persisted L* in the artifact's value file
+    val file = valueFile(dir)
+    assert(fs(file).exists(file), "cold search must persist L*")
+    // nothing is held in the JVM, so every call reads what a fresh
+    // session would. Proof the next call is served from DISK (not a
+    // re-search): plant a different — wrong but well-formed — length
+    // and observe it served. The artifact is trusted exactly when its
+    // stamp matches the corpus content, so this "wrong" serve is only
+    // reachable by editing the file, as here.
+    overwrite(file, "19")
     assert(lstar(dir).contains(19), "fresh session must hit the marker, not re-search")
-    // a TORN/foreign marker is a miss: re-search restores the truth and
-    // rewrites the marker
-    overwriteMarker(marker, "garbage with no newline")
-    TextQueries.clearLongestDupMemoForTest()
+    // a TORN or foreign value file is a miss: re-search, never a crash
+    overwrite(file, "garbage with no newline")
     assert(lstar(dir).contains(20), "corrupt marker must re-search, never crash")
-    // a matching key line with an Int-overflowing digit value is ALSO a
-    // miss (the length-bounded parse keeps toInt total), never a crash
-    overwriteMarker(marker, s"$key\n99999999999")
-    TextQueries.clearLongestDupMemoForTest()
+    overwrite(file, s"${BuiltOnce.dirKey(dir)}|v3 n=2 x=1 s=1|8|600\n19")
+    assert(lstar(dir).contains(20), "foreign (older-layout) body must re-search")
+    // an Int-overflowing digit value is ALSO a miss (the length-bounded
+    // parse keeps toInt total), never a crash
+    overwrite(file, "99999999999")
     assert(lstar(dir).contains(20), "overflowing value must miss, never crash")
-    // an I/O failure is a miss on READ and a no-op on WRITE: a
-    // directory squatting on the marker path makes open throw (the
-    // racing-external-cleanup shape) and the post-search best-effort
-    // rewrite fail — the query must still answer from the re-search
-    markerFs(marker).delete(marker, false)
-    markerFs(marker).mkdirs(marker)
-    TextQueries.clearLongestDupMemoForTest()
+    // an I/O failure is a miss on READ: a directory squatting on the
+    // value file makes open throw
+    fs(file).delete(file, false)
+    fs(file).mkdirs(file)
     assert(lstar(dir).contains(20), "marker I/O failure must miss, never crash")
-    markerFs(marker).delete(marker, true)
-    // and a content CHANGE misses the old marker even across sessions
-    // (different stamp → different marker file)
+    // ...and on WRITE: a content change re-runs the search, whose value
+    // file cannot be written past the squatter — the search's answer
+    // stands, and the artifact is left unstamped for the new content
     val shared31 = "zzxxccvvbbnnmmasdfghjkl12345678"
     write(dir, shared31)
-    TextQueries.clearLongestDupMemoForTest()
-    assert(lstar(dir).contains(31), "new content, fresh session: re-searched")
+    assert(lstar(dir).contains(31), "new content: re-searched despite the failed write")
+    assert(!BuiltOnce.stampOf(fs(file), artifact(dir))
+      .contains(TextQueries.ldupContentStamp(spark, dir)),
+      "a failed value write must not stamp the artifact")
+    // once the squatter is gone the next call rebuilds and stamps
+    fs(file).delete(file, true)
+    assert(lstar(dir).contains(31))
+    assert(fs(file).exists(file))
+    assert(BuiltOnce.stampOf(fs(file), artifact(dir))
+      .contains(TextQueries.ldupContentStamp(spark, dir)))
   }
 
   test("marker directory is owner-only — including a PRE-EXISTING dir (r17 trust-boundary fix)") {
     val dir = tmpDir("ldmemo3")
     write(dir, "qqwweerrttyyuuiioopp")
-    // pre-create the marker dir at default perms (the pre-r17 on-disk
-    // state): Hadoop's mkdirs(path, perm) chmods only FRESH dirs, so
-    // the write path must setPermission unconditionally to close the
-    // world-shared-tmp hole for dirs persisted by earlier versions
-    val preDir = TextQueries.longestDupMarker(dir, "probe").getParent
-    val fs = markerFs(preDir)
-    fs.mkdirs(preDir)
-    fs.setPermission(preDir,
-      new org.apache.hadoop.fs.permission.FsPermission(493.toShort)) // 0755
-    assert(fs.getFileStatus(preDir).getPermission.toShort == 493.toShort)
+    // pre-create the artifact dir at default perms: Hadoop's
+    // mkdirs(path, perm) chmods only FRESH dirs, so BuiltOnce must
+    // setPermission unconditionally to close the world-shared-tmp hole
+    val preDir = artifact(dir)
+    fs(preDir).mkdirs(preDir)
+    fs(preDir).setPermission(preDir, new FsPermission(493.toShort)) // 0755
+    assert(fs(preDir).getFileStatus(preDir).getPermission.toShort == 493.toShort)
     assert(lstar(dir).contains(20))
-    val marker = TextQueries.longestDupMarker(dir, TextQueries.lastLdupKeyForTest)
-    assert(fs.exists(marker))
-    assert(fs.getFileStatus(marker.getParent).getPermission.toShort == 448.toShort,
-      "graft_ldup_* marker dirs must be 0700 on a world-shared tmp, " +
+    assert(fs(preDir).exists(valueFile(dir)))
+    assert(fs(preDir).getFileStatus(preDir).getPermission.toShort == 448.toShort,
+      "graft_ldup_* artifact dirs must be 0700 on a world-shared tmp, " +
         "even when the dir pre-existed at default umask")
-  }
-
-  test("memo eviction is single-entry LRU, never the entry being served (r17)") {
-    TextQueries.clearLongestDupMemoForTest()
-    (0 until 64).foreach { i =>
-      val e = new TextQueries.LdupEntry(Some(i))
-      e.tick = i + 1L // entry k0 is oldest…
-      TextQueries.longestDupMemo.put(s"k$i", e)
-    }
-    // …but k0 was just USED (highest tick), so k1 is the LRU victim
-    TextQueries.longestDupMemo.get("k0").tick = 1000L
-    TextQueries.evictLruIfFull("brand-new-key")
-    assert(TextQueries.longestDupMemo.size == 63)
-    assert(TextQueries.longestDupMemo.containsKey("k0"), "recently-served entry survives")
-    assert(!TextQueries.longestDupMemo.containsKey("k1"), "LRU entry is the one evicted")
-    // an EXISTING key triggers no eviction (it is a hit, not an insert)
-    TextQueries.evictLruIfFull("k5")
-    assert(TextQueries.longestDupMemo.size == 63)
-    // below capacity: no eviction either
-    TextQueries.evictLruIfFull("another-new-key")
-    assert(TextQueries.longestDupMemo.size == 63)
-    TextQueries.clearLongestDupMemoForTest()
   }
 }

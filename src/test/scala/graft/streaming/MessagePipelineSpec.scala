@@ -156,4 +156,55 @@ class MessagePipelineSpec extends SparkSpec {
     assert(spark.read.parquet(summary).count() ==
       Enrich.summary(Enrich.plain(msgs(0 until 10).toDF())).count())
   }
+
+  test("each pipeline's summary upserts run in its own query's job group") {
+    // the summary sink's helper thread is JVM-wide and inherits Spark's
+    // local properties once, at creation; query.stop() cancels the
+    // query's job group (its runId), so every summary upsert must carry
+    // ITS query's group, not the first query's
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).foreach(p => jobs.add(
+          (p.getProperty("spark.jobGroup.id"), p.getProperty("spark.job.description"))))
+    }
+    val sc = spark.sparkContext
+    /** Wait until the listener has seen every job started so far: one
+      * job with a unique description, delivered after all earlier events.
+      */
+    def drain(mark: String): Unit = {
+      sc.setJobDescription(mark)
+      try spark.range(1).count() finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!jobs.toArray.exists(_.asInstanceOf[(String, String)]._2 == mark)) {
+        assert(System.nanoTime() < deadline, s"listener never saw $mark")
+        Thread.sleep(20)
+      }
+    }
+    def run(tag: String): String = {
+      val input = MemoryStream[Array[Byte]](spark)
+      input.addData(msgs(0 until 40).map(AvroCodec.encode))
+      val q = MessagePipeline.run(input.toDF(), cfg, tmpDir(s"detail_jg$tag"),
+        tmpDir(s"summary_jg$tag"), tmpDir(s"cp_jg$tag"))
+      q.processAllAvailable(); q.stop()
+      drain(s"jg drained $tag")
+      q.runId.toString
+    }
+    def summaryGroups(): Seq[String] = {
+      val seen = jobs.toArray.toSeq.map(_.asInstanceOf[(String, String)])
+      jobs.clear()
+      seen.collect { case (g, d) if d != null && d.matches("batch \\d+: summary upsert") => g }
+    }
+    sc.addSparkListener(listener)
+    try {
+      drain("jg start"); jobs.clear()
+      val r1 = run("1")
+      val g1 = summaryGroups()
+      val r2 = run("2")
+      val g2 = summaryGroups()
+      assert(g1.nonEmpty && g2.nonEmpty, "each run upserts its summary")
+      assert(g1.forall(_ == r1), s"run 1 ($r1) summary jobs ran in groups ${g1.distinct}")
+      assert(g2.forall(_ == r2), s"run 2 ($r2) summary jobs ran in groups ${g2.distinct}")
+    } finally sc.removeSparkListener(listener)
+  }
 }
