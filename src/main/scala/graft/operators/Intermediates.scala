@@ -93,7 +93,8 @@ object Intermediates {
       val df = try body finally open.set(open.get.tail)
       val dir = scratchDir(df.sparkSession, tag)
       df.write.parquet(dir)
-      df.sparkSession.read.parquet(dir)
+      // the body's own schema: the read-back plans without an inference job
+      df.sparkSession.read.schema(df.schema).parquet(dir)
     } finally runAll(inner.toSeq)
   }
 

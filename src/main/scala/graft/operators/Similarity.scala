@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.sources.ParquetRead
+
 /** Similarity search over an embedding column (`array<float>`).
   *
   * Two paths, same contract:
@@ -539,7 +541,7 @@ object Similarity {
   def appendToIvfIndex(shard: DataFrame, path: String,
       idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
     val (_, cellRows, matrix) =
-      collectCellMatrix(shard.sparkSession.read.parquet(s"$path/cells"))
+      collectCellMatrix(ParquetRead(shard.sparkSession, s"$path/cells"))
     val posted = assignTop1(
       shard.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
         l2norm(col(vecCol)).as("cn")),
@@ -562,14 +564,14 @@ object Similarity {
     import scala.jdk.CollectionConverters._
     val spark = queries.sparkSession
     val (cellSchema, cellRows, _) =
-      collectCellMatrix(spark.read.parquet(s"$path/cells"))
+      collectCellMatrix(ParquetRead(spark, s"$path/cells"))
     val local = spark.createDataFrame(cellRows.toSeq.asJava, cellSchema)
     val q = assignToCells(withCentroidNorms(local))(
       queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
         l2norm(col(vecCol)).as("qn")),
       "query_id", "qv", "qn", nprobe)
     val probed = q.select("cell").distinct().collect().map(_.get(0))
-    val posts = spark.read.parquet(s"$path/postings")
+    val posts = ParquetRead(spark, s"$path/postings")
       .filter(col("cell").isInCollection(probed.toSeq))
     scoreCandidates(posts, q, "cell", k, dedupe = false)
   }

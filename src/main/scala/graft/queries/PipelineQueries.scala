@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Chunking, Decontaminate, Dedup, Intermediates, Sampling, Search, Similarity, TextAnalysis}
-import graft.sources.Tables
+import graft.sources.{ParquetRead, Tables}
 
 /** Corpus-preparation pipeline stages a training-data pipeline runs
   * between raw ingestion and tokenization: lexical search, context
@@ -71,7 +71,7 @@ object PipelineQueries {
     // cost creep (verdict #3)
     val hotDir = idxDir + "_hot"
     BuiltOnce(hotDir, history, Seq(col("doc_id"), col("text"))) {
-      s.read.parquet(idxDir)
+      ParquetRead(s, idxDir)
         .filter(size(col("bands")) > 0)
         .select(explode(col("bands")).as("band"))
         .groupBy("band").agg(count(lit(1)).as("c"))
@@ -79,7 +79,7 @@ object PipelineQueries {
         .select("band")
         .write.mode("overwrite").parquet(hotDir)
     }
-    (s.read.parquet(idxDir), s.read.parquet(hotDir), batch)
+    (ParquetRead(s, idxDir), ParquetRead(s, hotDir), batch)
   }
 
   private def ndIngestAccepted(s: SparkSession, d: String): DataFrame = {

@@ -62,7 +62,7 @@ final class GraftUpsertDataSource extends TableProvider with DataSourceRegister 
     val p = new Path(target)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(p) && fs.listStatus(p).exists(!_.getPath.getName.startsWith("_")))
-      spark.read.parquet(target).schema
+      graft.sources.ParquetRead(spark, target).schema
     else new StructType()
   }
 

@@ -204,7 +204,13 @@ final class ParquetUpsertSink(
     }
   }
 
-  def read(): DataFrame = spark.read.parquet(path)
+  /** The table as a DataFrame — the history read, one (user, month)
+    * lookup being `read().filter(...)` on the partition column. Planned
+    * through [[graft.sources.ParquetRead]]: the schema comes from one
+    * footer on the driver, so the read's only Spark job is the caller's
+    * action. A missing or empty table raises Spark's own error.
+    */
+  def read(): DataFrame = graft.sources.ParquetRead(spark, path)
 }
 
 object ParquetUpsertSink {
@@ -250,7 +256,7 @@ object Retention {
       spark: SparkSession, path: String, tsCol: String,
       partitionCol: String, ttlSeconds: Long, nowEpochSec: Long): Unit = {
     if (ttlSeconds <= 0) return
-    val table = spark.read.parquet(path)
+    val table = graft.sources.ParquetRead(spark, path)
     val cutoff = nowEpochSec - ttlSeconds
     // partitions containing at least one expired row need rewriting;
     // everything else is untouched (dynamic partition overwrite)

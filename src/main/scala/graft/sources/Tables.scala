@@ -8,12 +8,15 @@ import org.apache.spark.sql.functions._
   *
   * These are thin: the point is that every query reads through here so
   * scan-level concerns (the ns-timestamp quirk, column pruning) are
-  * handled once.
+  * handled once. Every loader plans through [[ParquetRead]]: the schema
+  * comes from one footer read on the driver, so loading a table runs no
+  * Spark job; the first job is the query's own.
   */
 object Tables {
 
+  /** `<dir>/<name>.parquet`, planned without a Spark job ([[ParquetRead]]). */
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    ParquetRead(spark, s"$dir/$name.parquet")
 
   /** Date-ish columns have shipped as DATE, TIMESTAMP and TIMESTAMP_NTZ
     * across driver rounds. Canonicalize to TimestampType: the session

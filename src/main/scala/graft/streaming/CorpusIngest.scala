@@ -10,6 +10,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.util.sketch.BloomFilter
 
 import graft.operators.{Dedup, Intermediates}
+import graft.sources.ParquetRead
 
 /** Continuous training-corpus ingestion: a document file stream runs
   * through a quality gate and (near-)dedup, and appends only genuinely
@@ -632,7 +633,7 @@ object CorpusIngest {
   }
 
   private def existingParquet(spark: SparkSession, dir: String): Option[DataFrame] =
-    try Some(spark.read.parquet(dir))
+    try Some(ParquetRead(spark, dir))
     catch { case _: org.apache.spark.sql.AnalysisException => None }
 
   // --- incremental hot-band census ---------------------------------------
@@ -942,8 +943,7 @@ object CorpusIngest {
     }
     val maxBytes = toPack.map(_._2.map(_.getLen).sum).max
     val slices = math.max(1L, (maxBytes + targetBytes - 1) / targetBytes)
-    spark.read.option("basePath", root)
-      .parquet(toPack.map(_._1.toString).toSeq: _*)
+    ParquetRead.under(spark, root, toPack.map(_._1.toString).toSeq)
       .dropDuplicates(dedupKeys)
       .repartition(col(partCol),
         pmod(xxhash64(dedupKeys.map(col): _*), lit(slices)).cast("int"))
@@ -1282,8 +1282,8 @@ object CorpusIngest {
               // covered deterministically — the racing spec stays as the
               // honest end-to-end probe, this pins the branch logic
               planningFaultForTest()
-              return spark.read.option("basePath", corpusDir)
-                .parquet(files.map(f => s"$corpusDir/$f"): _*)
+              return ParquetRead.under(spark, corpusDir,
+                files.map(f => s"$corpusDir/$f"))
             } catch {
               case e: org.apache.spark.sql.AnalysisException
                   if isPlanningStaleness(e) =>
@@ -1311,7 +1311,7 @@ object CorpusIngest {
           // instead of burning every attempt back-to-back
           Thread.sleep(math.min(1000L, 25L << attempt))
         case _ =>
-          return spark.read.parquet(corpusDir)
+          return ParquetRead(spark, corpusDir)
       }
     }
     throw new IllegalStateException(
@@ -1472,8 +1472,8 @@ object CorpusIngest {
           val freshExact =
             if (dPresent.isEmpty) candidates
             else {
-              val landed = spark.read.option("basePath", corpusDir)
-                .parquet(dPresent.map(b => s"$corpusDir/dbucket=$b"): _*)
+              val landed = ParquetRead.under(spark, corpusDir,
+                dPresent.map(b => s"$corpusDir/dbucket=$b"))
                 .filter(col("dbucket").isin(dbuckets: _*)).select("digest")
               candidates.join(landed, Seq("digest"), "left_anti")
             }
@@ -1494,8 +1494,8 @@ object CorpusIngest {
               indexFiles = filesInBuckets(spark, idxDir, "bbucket", bb)
               if (bPresent.isEmpty) freshExact
               else {
-                val idx0 = spark.read.option("basePath", idxDir)
-                  .parquet(bPresent.map(b => s"$idxDir/bbucket=$b"): _*)
+                val idx0 = ParquetRead.under(spark, idxDir,
+                  bPresent.map(b => s"$idxDir/bbucket=$b"))
                   .filter(col("bbucket").isin(bb: _*))
                   .select(col("band"), col("digest").as("h_digest"),
                     col("sig").as("h_sig"))

@@ -106,23 +106,45 @@ object MessagePipeline {
               .upsertDistinct(Enrich.summary(b))
             finally sc.clearJobGroup()
           }(MessagePipeline.sinkEc)
-          val detail = scala.util.Try {
-            sc.setJobDescription(s"batch $batchId: detail upsert")
-            new ParquetUpsertSink(spark, detailPath, Some("date_partition"), retry)
-              .upsert(b, Seq("message_id"), "sent_time")
+          try {
+            val detail = scala.util.Try {
+              sc.setJobDescription(s"batch $batchId: detail upsert")
+              new ParquetUpsertSink(spark, detailPath, Some("date_partition"), retry)
+                .upsert(b, Seq("message_id"), "sent_time")
+            }
+            // both sinks must be QUIESCENT before the closure returns
+            // (returning with a summary write in flight would let the next
+            // batch's writer race it on the same path), so await the
+            // helper unconditionally, then surface the first failure
+            scala.concurrent.Await.ready(summaryF,
+              scala.concurrent.duration.Duration.Inf)
+            detail.get
+            summaryF.value.get.get
+            ()
+          } catch {
+            case e: InterruptedException =>
+              quiesce(sc, group, summaryF)
+              throw e
           }
-          // both sinks must be QUIESCENT before the closure returns
-          // (returning with a summary write in flight would let the next
-          // batch's writer race it on the same path), so await the
-          // helper unconditionally, then surface the first failure
-          scala.concurrent.Await.ready(summaryF,
-            scala.concurrent.duration.Duration.Inf)
-          detail.get
-          summaryF.value.get.get
-          ()
         } finally { sc.setJobDescription(null); b.unpersist(); () }
       }
       .start()
+  }
+
+  /** `query.stop()` interrupted a batch (its detail upsert or the wait
+    * for the summary): cancel the batch's job group, this batch's later
+    * jobs included (the summary upsert's retries), then wait, not
+    * interruptibly, until the summary upsert has returned — a driver
+    * step such as its job commit cannot be cancelled, and no write of a
+    * stopped batch may outlive the closure. The caller re-raises the
+    * interrupt.
+    */
+  private def quiesce(sc: org.apache.spark.SparkContext, group: String,
+      summary: scala.concurrent.Future[_]): Unit = {
+    if (group != null) sc.cancelJobGroupAndFutureJobs(group)
+    while (!summary.isCompleted)
+      try scala.concurrent.Await.ready(summary, scala.concurrent.duration.Duration.Inf)
+      catch { case _: InterruptedException => () }
   }
 
   /** End-to-end: raw byte stream → decoded → enriched → sinks. */

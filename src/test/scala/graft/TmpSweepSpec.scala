@@ -35,7 +35,7 @@ class TmpSweepSpec extends SparkSpec {
     Seq((7L, "third corpus text body"))
       .toDF("doc_id", "text").write.parquet(s"$corpus3/documents.parquet")
 
-    val root = Files.createTempDirectory("sweeproot").toString
+    val root = tmpDir("sweeproot"); mkdir(root)
     val liveKey = BuiltOnce.dirKey(corpus)
     val live2Key = BuiltOnce.dirKey(corpus2)
     val live3Key = BuiltOnce.dirKey(corpus3)
@@ -100,7 +100,7 @@ class TmpSweepSpec extends SparkSpec {
     // a declared-live corpus whose parquet is GONE: stamps can't be
     // computed, so its stamped entries are 'unsure' and kept
     val corpus = tmpDir("sweepmissing")
-    val root = Files.createTempDirectory("sweeproot2").toString
+    val root = tmpDir("sweeproot2"); mkdir(root)
     val key = BuiltOnce.dirKey(corpus)
     put(s"$root/graft_ldup_${key}_8_600/_graft_built", "v3 n=1 x=1 s=1")
     put(s"$root/graft_ivf_idx_$key/_graft_built", "v3 n=1 x=1 s=1")

@@ -16,7 +16,7 @@ class IvfIndexSpec extends SparkSpec {
 
   private lazy val emb = Tables.embeddings(spark, sf0001)
   private lazy val dir = {
-    val d = java.nio.file.Files.createTempDirectory("graft_ivf_spec").toString
+    val d = tmpDir("graft_ivf_spec")
     Similarity.buildIvfIndex(emb, Similarity.centroids(emb, "label"), d)
     d
   }
@@ -69,7 +69,7 @@ class IvfIndexSpec extends SparkSpec {
     // build from the first half only, append the second half, and the
     // served results must equal an index built from everything at once
     // (same frozen centroids → identical assignment → identical serve)
-    val d2 = java.nio.file.Files.createTempDirectory("graft_ivf_app").toString
+    val d2 = tmpDir("graft_ivf_app")
     val half = emb.filter(col("vec_id") % 2 === 0)
     val rest = emb.filter(col("vec_id") % 2 =!= 0)
     Similarity.buildIvfIndex(half, Similarity.centroids(emb, "label"), d2)
@@ -109,7 +109,7 @@ class IvfIndexSpec extends SparkSpec {
     // byte-identical (same path, same length), and with the
     // one-file-per-cell repartition discipline the delta is exactly one
     // new file in the single landed cell
-    val d3 = java.nio.file.Files.createTempDirectory("graft_ivf_delta").toString
+    val d3 = tmpDir("graft_ivf_delta")
     Similarity.buildIvfIndex(emb.filter(col("vec_id") >= 5),
       Similarity.centroids(emb, "label"), d3)
     def fileMap(): Map[String, Long] = {

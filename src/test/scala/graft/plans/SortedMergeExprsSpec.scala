@@ -195,7 +195,7 @@ class SortedMergeExprsSpec extends SparkSpec {
     // a local relation can be constant-folded through the INTERPRETED
     // eval (ConvertToLocalRelation), so pin the compiled doGenCode path
     // explicitly: parquet round-trip defeats the folding
-    val dir = java.nio.file.Files.createTempDirectory("smx").toString
+    val dir = tmpDir("smx")
     Seq((Array(9L, 3L, 7L), Array(3L, 7L)),
         (Array(1L, 2L), Array(2L, 9L)))
       .toDF("a", "b").write.mode("overwrite").parquet(dir)
@@ -251,7 +251,7 @@ class SortedMergeExprsSpec extends SparkSpec {
     def arr(xs: Long*) = Literal.create(new GenericArrayData(xs.toArray),
       ArrayType(LongType, containsNull = false))
     SortedLongOverlap(arr(9L, 3L, 7L), arr(3L), checked = false).eval(null)
-    val dir = java.nio.file.Files.createTempDirectory("smxu").toString
+    val dir = tmpDir("smxu")
     Seq((Array(9L, 3L, 7L), Array(3L, 7L)))
       .toDF("a", "b").write.mode("overwrite").parquet(dir)
     val scan = spark.read.parquet(dir)
@@ -276,7 +276,7 @@ class SortedMergeExprsSpec extends SparkSpec {
     // so the two-schema read is the only way to pin both compilations.)
     import org.apache.spark.sql.types._
     val arrs = randomSortedArrays(150, 30, 40)
-    val dir = java.nio.file.Files.createTempDirectory("smxs").toString
+    val dir = tmpDir("smxs")
     arrs.zip(arrs.reverse).zipWithIndex.map { case ((a, b), i) => (i, a, b) }
       .toDF("id", "a", "b").write.mode("overwrite").parquet(dir)
     def schema(cn: Boolean) = StructType(Seq(

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -15,7 +13,7 @@ class AvroFileSourceSpec extends SparkSpec {
   import spark.implicits._
 
   private def avroDir(tag: String): String =
-    Files.createTempDirectory(s"graft_avro_$tag").toString
+    tmpDir(s"graft_avro_$tag")
 
   private def withSQLConf[A](kv: (String, String))(body: => A): A = {
     val prev = spark.conf.getOption(kv._1)
@@ -114,7 +112,7 @@ class AvroFileSourceSpec extends SparkSpec {
 
   test("micro-batch stream: committed file prefix is never re-read; new files arrive incrementally") {
     val dir = avroDir("stream")
-    val ckpt = Files.createTempDirectory("graft_avro_ckpt").toString
+    val ckpt = tmpDir("graft_avro_ckpt")
     AvroFiles.write(spark.range(0, 100).select($"id"), dir)
     val q = spark.readStream.format("graft-avro").load(dir)
       .writeStream.format("memory").queryName("avro_stream")
@@ -141,7 +139,7 @@ class AvroFileSourceSpec extends SparkSpec {
 
   test("micro-batch stream: restart from checkpoint resumes past committed files") {
     val dir = avroDir("restart")
-    val ckpt = Files.createTempDirectory("graft_avro_ckpt_r").toString
+    val ckpt = tmpDir("graft_avro_ckpt_r")
     AvroFiles.write(spark.range(0, 50).select($"id"), dir)
     // memory sink refuses checkpoint recovery; foreachBatch (the
     // engine's production sink shape) supports it

@@ -207,4 +207,78 @@ class MessagePipelineSpec extends SparkSpec {
       assert(g2.forall(_ == r2), s"run 2 ($r2) summary jobs ran in groups ${g2.distinct}")
     } finally sc.removeSparkListener(listener)
   }
+
+  test("a stopped batch returns only after its summary write; the restart adds no duplicates") {
+    // query.stop() interrupts the batch while the summary upsert is in
+    // its job commit (a driver step no job cancel reaches): the closure
+    // must not return, and so stop() must not, while that write still
+    // runs. The replay on the same checkpoint then converges.
+    val detail = tmpDir("detail_stop"); val summaryLocal = tmpDir("summary_stop")
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.graftslow.impl", classOf[SlowSuccessFs].getName)
+    val summary = s"graftslow:$summaryLocal"
+    val cp = tmpDir("cp_stop")
+    val input = MemoryStream[Array[Byte]](spark)
+    input.addData(msgs(0 until 40).map(AvroCodec.encode))
+    SlowSuccessFs.entered.set(false)
+    SlowSuccessFs.armed.set(true)
+    try {
+      val q1 = MessagePipeline.run(input.toDF(), cfg, detail, summary, cp)
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!SlowSuccessFs.entered.get()) {
+        assert(System.nanoTime() < deadline, "the summary write never reached its commit")
+        Thread.sleep(10)
+      }
+      q1.stop()
+      assert(SlowSuccessFs.inFlight.get() == 0,
+        "stop() returned while the batch's summary write was still running")
+    } finally SlowSuccessFs.armed.set(false)
+
+    val q2 = MessagePipeline.run(input.toDF(), cfg, detail, summary, cp)
+    q2.processAllAvailable(); q2.stop()
+    val sum = spark.read.parquet(summaryLocal)
+    val expected = Enrich.summary(Enrich.plain(msgs(0 until 40).toDF())).distinct().count()
+    assert(sum.count() == expected, "the summary table holds duplicate rows")
+    assert(sum.distinct().count() == expected)
+    assert(spark.read.parquet(detail).count() == 40)
+  }
+
+}
+
+/** Local filesystem under the `graftslow:` scheme whose `_SUCCESS`
+  * creates, while armed, take 3 s and count as in flight — a job commit
+  * that is still running. Registered through `fs.graftslow.impl`.
+  */
+class SlowSuccessFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  import org.apache.hadoop.fs.{FSDataOutputStream, Path}
+  import org.apache.hadoop.fs.permission.FsPermission
+  import org.apache.hadoop.util.Progressable
+
+  override def getUri: java.net.URI = java.net.URI.create("graftslow:///")
+
+  private def slow[T](f: Path)(create: => T): T =
+    if (f.getName != "_SUCCESS" || !SlowSuccessFs.armed.get()) create
+    else {
+      SlowSuccessFs.inFlight.incrementAndGet()
+      SlowSuccessFs.entered.set(true)
+      try { Thread.sleep(3000); create }
+      finally SlowSuccessFs.inFlight.decrementAndGet()
+    }
+
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int,
+      replication: Short, blockSize: Long,
+      progress: Progressable): FSDataOutputStream =
+    slow(f)(super.create(f, overwrite, bufferSize, replication, blockSize, progress))
+
+  override def create(f: Path, permission: FsPermission, overwrite: Boolean,
+      bufferSize: Int, replication: Short, blockSize: Long,
+      progress: Progressable): FSDataOutputStream =
+    slow(f)(super.create(f, permission, overwrite, bufferSize, replication,
+      blockSize, progress))
+}
+
+object SlowSuccessFs {
+  val armed = new java.util.concurrent.atomic.AtomicBoolean(false)
+  val entered = new java.util.concurrent.atomic.AtomicBoolean(false)
+  val inFlight = new java.util.concurrent.atomic.AtomicInteger(0)
 }
