@@ -74,10 +74,10 @@ final class ParquetUpsertSink(
     * month) lands in the new bucket and leaves the old row alive in the
     * old one — exactly what the reference's Cassandra schema does, since
     * `date_partition` is the table's partition key and a changed value
-    * addresses a different Cassandra row. Callers needing global key
-    * uniqueness across bucket changes use [[upsertGlobal]] (an extra key
-    * anti-join over the stale buckets, deliberately not hidden inside
-    * this O(touched-buckets) path).
+    * addresses a different Cassandra row. That is the contract: one row
+    * per key within a bucket, and one row per key across the table only
+    * while the keys determine the bucket. The merge never reads or
+    * rewrites a bucket the batch does not touch.
     *
     * The touched partition values are collected in one action and the
     * merge/write runs in another, so `batch` is evaluated twice. If the
@@ -93,8 +93,7 @@ final class ParquetUpsertSink(
     pinned(batch) { retry.run {
       val existing = readExisting(spark, path, batch)
       // restrict the merge to partitions the batch touches — key dedup is
-      // therefore per-partition; see the trait contract for the
-      // keys-determine-partition requirement this relies on.
+      // therefore per-partition (the per-bucket contract above).
       // r18 (guide §6): the touched buckets are COLLECTED (micro-batch-
       // small by contract — months per batch) and pushed as a partition
       // filter instead of the old broadcast semi-join: an IN on the
@@ -115,71 +114,6 @@ final class ParquetUpsertSink(
           dedupByKey(existing.unionByName(batch), keys, versionCol)
       }
       write(merged, path, partitionCol)
-    }}
-
-  /** [[upsert]] strengthened to GLOBAL key uniqueness: when a later write
-    * for an existing key carries a different derived bucket value (e.g. a
-    * corrected timestamp crossing a month), the stale row in the old,
-    * otherwise-untouched partition is removed in the same commit — the
-    * cross-bucket case the plain O(touched-buckets) path documents as out
-    * of contract.
-    *
-    * All copies of a batch key — whichever bucket they live in — join
-    * the batch rows in a single `versionCol` arbitration, so replayed or
-    * out-of-order older batches still lose (the at-least-once-replay
-    * contract holds across bucket migrations, not just within one).
-    *
-    * `batch` is evaluated more than once, so it is [[pinned]] like
-    * [[upsert]]'s.
-    *
-    * Cost: rewrites every partition holding a copy of a batch key
-    * (located by one broadcast key semi-join, never a table shuffle).
-    * When keys do imply buckets that set equals the touched partitions —
-    * same cost as [[upsert]] — and grows only with actual migrations.
-    */
-  def upsertGlobal(batch: DataFrame, keys: Seq[String], versionCol: String): Unit =
-    pinned(batch) { retry.run {
-      val existing = readExisting(spark, path, batch)
-      partitionCol match {
-        case Some(p) =>
-          // every copy of a batch key — wherever it lives — enters ONE
-          // versionCol arbitration together with the batch rows, so a
-          // replayed/out-of-order OLDER batch loses to the row the key
-          // migrated to (plain per-bucket LWW, extended across buckets).
-          // batchKeys is micro-batch-sized; broadcast keeps the semi-join
-          // from shuffling the table (consistent with `touched` above)
-          val batchKeys = batch.select(keys.map(col): _*).distinct()
-          val involvedParts = existing
-            .join(broadcast(batchKeys), keys, "left_semi").select(col(p))
-            .union(batch.select(col(p))).distinct().persist()
-          val involved = existing
-            .join(broadcast(involvedParts), Seq(p), "left_semi")
-          // winner per key across all copies + the batch; keys local to
-          // an involved partition ride through as their own sole copy
-          val merged = dedupByKey(involved.unionByName(batch), keys, versionCol)
-            .persist()
-          // bucket lists are collected BEFORE the overwrite: their plans
-          // read the files the write below replaces (the persist()s keep
-          // the write job from re-scanning, but correctness must not
-          // depend on cache retention)
-          val involvedVals = involvedParts.collect().map(_.get(0).toString)
-          val liveVals = merged.select(p).distinct()
-            .collect().map(_.get(0).toString).toSet
-          write(merged, path, partitionCol)
-          // dynamic overwrite replaces only partitions that receive rows:
-          // a partition whose every row was a losing copy of a migrated
-          // key writes nothing and must be dropped explicitly
-          // (driver-side bucket list, same move as Retention.compact)
-          val fs = new org.apache.hadoop.fs.Path(path)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          involvedVals.filterNot(liveVals).foreach { v =>
-            fs.delete(new org.apache.hadoop.fs.Path(s"$path/$p=$v"), true)
-          }
-          involvedParts.unpersist(); merged.unpersist()
-        case None =>
-          write(dedupByKey(existing.unionByName(batch), keys, versionCol),
-            path, partitionCol)
-      }
     }}
 
   /** Runs `body` with every evaluation of `batch` yielding the same rows:
@@ -227,7 +161,7 @@ object ParquetUpsertSink {
       .filter(col("__rn") === 1).drop("__rn")
   }
 
-  private[sink] def readExisting(spark: SparkSession, path: String, like: DataFrame): DataFrame = {
+  private def readExisting(spark: SparkSession, path: String, like: DataFrame): DataFrame = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(p) && fs.listStatus(p).nonEmpty)

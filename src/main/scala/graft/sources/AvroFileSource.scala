@@ -20,17 +20,14 @@ import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData, Generic
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Batch READ side of the connector story (the write side is
-  * `graft-upsert`, sink/GraftUpsertDataSource.scala): a DataSource V2
-  * source for Avro Object Container Files, built on the core
-  * `avro-1.12` jar the reference itself depends on — the same wire
-  * schema family as the reference's payload decoder
+/** A batch-read DataSource V2 source for Avro Object Container Files,
+  * built on the core `avro-1.12` jar the reference itself depends on —
+  * the same wire schema family as the reference's payload decoder
   * (AvroDeserializationSchema.java:22-50), promoted from
   * per-message blobs to a splittable batch file format.
   *
@@ -109,7 +106,7 @@ private[sources] final class AvroFileTable(
   override def schema(): StructType = schema
 
   override def capabilities(): util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ).asJava
+    Set(TableCapability.BATCH_READ).asJava
 
   override def newScanBuilder(caseInsensitiveStringMap: CaseInsensitiveStringMap): ScanBuilder =
     new AvroScanBuilder(schema, path)
@@ -158,58 +155,6 @@ private[sources] final class AvroScan(required: StructType, path: String)
     AvroReaderFactory(required.json, conf)
   }
 
-  override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-    new AvroMicroBatchStream(required, path)
-}
-
-/** Streaming offset = prefix length of the name-sorted file listing —
-  * the file-source analog of a Kafka partition offset (SURVEY §2.1 S1:
-  * the offline Kafka substitute). Contract: container files are
-  * immutable once visible and new files sort AFTER already-committed
-  * ones (the writer's `part-NNNNN` naming and any timestamped naming
-  * both satisfy this); a file smuggled in below the committed prefix is
-  * never re-read, exactly as a Kafka record below the committed offset
-  * is never re-delivered.
-  */
-private[sources] final case class AvroStreamOffset(fileCount: Int) extends Offset {
-  override def json(): String = s"""{"fileCount":$fileCount}"""
-}
-
-private[sources] final class AvroMicroBatchStream(required: StructType, path: String)
-  extends MicroBatchStream {
-
-  private def conf: Configuration =
-    SparkSession.active.sparkContext.hadoopConfiguration
-
-  private def listing: Seq[String] =
-    AvroFileDataSource.listAvroFiles(path, conf).map(_.getPath.toString)
-
-  override def initialOffset(): Offset = AvroStreamOffset(0)
-
-  override def latestOffset(): Offset = AvroStreamOffset(listing.size)
-
-  override def deserializeOffset(json: String): Offset = {
-    // {"fileCount":N} — exact shape written by AvroStreamOffset.json
-    val n = json.replaceAll("[^0-9]", "")
-    AvroStreamOffset(if (n.isEmpty) 0 else n.toInt)
-  }
-
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[AvroStreamOffset].fileCount
-    val e = end.asInstanceOf[AvroStreamOffset].fileCount
-    val c = conf
-    listing.slice(s, e).map { f =>
-      val len = new Path(f).getFileSystem(c).getFileStatus(new Path(f)).getLen
-      AvroInputPartition(f, 0L, len): InputPartition
-    }.toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    AvroReaderFactory(required.json, new SerializableWritable(conf))
-
-  override def commit(end: Offset): Unit = ()
-
-  override def stop(): Unit = ()
 }
 
 private[sources] final case class AvroInputPartition(

@@ -26,21 +26,25 @@ import graft.sink.{ParquetUpsertSink, RetryPolicy}
   */
 object MessagePipeline {
 
-  /** One helper thread for the summary sink (guide §2.6: overlap
-    * independent jobs). Daemon so it never blocks JVM exit; one thread
-    * is enough — each micro-batch runs exactly one summary upsert
-    * beside the detail upsert on the caller's thread. The thread
-    * inherits Spark's local properties only once, from whichever
-    * micro-batch created it, so each upsert sets its own query's job
-    * group (see [[start]]).
+  /** The summary sink's helper thread for one query (guide §2.6: overlap
+    * independent jobs). One thread is enough — each micro-batch runs
+    * exactly one summary upsert beside the detail upsert on the caller's
+    * thread — and one per query keeps two queries in one JVM from
+    * queueing their summary upserts behind each other. The thread starts
+    * with the query's first batch and ends after 60 s without work, so
+    * it lives across the batches of a running query and needs no
+    * shutdown hook or listener; a daemon, it never blocks JVM exit. Each
+    * upsert sets its own query's job group (see [[start]]).
     */
-  private lazy val sinkEc: scala.concurrent.ExecutionContext =
+  private def summaryExecutor(): scala.concurrent.ExecutionContext =
     scala.concurrent.ExecutionContext.fromExecutor(
-      java.util.concurrent.Executors.newFixedThreadPool(1, r => {
-        val t = new Thread(r, "graft-summary-sink")
-        t.setDaemon(true)
-        t
-      }))
+      new java.util.concurrent.ThreadPoolExecutor(0, 1,
+        60L, java.util.concurrent.TimeUnit.SECONDS,
+        new java.util.concurrent.LinkedBlockingQueue[Runnable](), r => {
+          val t = new Thread(r, "graft-summary-sink")
+          t.setDaemon(true)
+          t
+        }))
 
   /** raw binary `value` column → decoded message columns (native
     * Catalyst expression; fail-fast on malformed bytes like the
@@ -75,6 +79,7 @@ object MessagePipeline {
       queryName: Option[String] = None
   ): StreamingQuery = {
     val spark = history.sparkSession
+    val sinkEc = summaryExecutor()
     val writer = history.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
@@ -105,7 +110,7 @@ object MessagePipeline {
             try new ParquetUpsertSink(spark, summaryPath, None, retry)
               .upsertDistinct(Enrich.summary(b))
             finally sc.clearJobGroup()
-          }(MessagePipeline.sinkEc)
+          }(sinkEc)
           try {
             val detail = scala.util.Try {
               sc.setJobDescription(s"batch $batchId: detail upsert")

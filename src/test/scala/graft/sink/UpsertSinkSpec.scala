@@ -55,40 +55,6 @@ class UpsertSinkSpec extends SparkSpec {
       .collect().toSeq == Seq(("k1", 3L, "202402M")))
   }
 
-  test("upsertGlobal removes the stale row when a key migrates buckets") {
-    val dir = tmpDir("upsert_global")
-    val sink = new ParquetUpsertSink(spark, dir, Some("p"))
-    sink.upsertGlobal(
-      Seq(("k1", 1L, "202401M"), ("k2", 1L, "202401M"), ("k3", 1L, "202403M"))
-        .toDF("id", "v", "p"), Seq("id"), "v")
-    // k1's corrected timestamp moves it a month forward: the 202401M copy
-    // must die in the same commit, k2 (untouched neighbour) must survive
-    sink.upsertGlobal(Seq(("k1", 2L, "202402M")).toDF("id", "v", "p"),
-      Seq("id"), "v")
-    val out = sink.read().orderBy("id").as[(String, Long, String)].collect().toSeq
-    assert(out == Seq(("k1", 2L, "202402M"), ("k2", 1L, "202401M"),
-      ("k3", 1L, "202403M")))
-    // migrating the last key out of a bucket drops the bucket entirely
-    sink.upsertGlobal(Seq(("k3", 2L, "202404M")).toDF("id", "v", "p"),
-      Seq("id"), "v")
-    val after = sink.read()
-    assert(after.filter($"p" === "202403M").count() == 0)
-    assert(after.count() == 3)
-    // replay of the migrating batch converges (idempotent)
-    sink.upsertGlobal(Seq(("k1", 2L, "202402M")).toDF("id", "v", "p"),
-      Seq("id"), "v")
-    // at-least-once replay of the ORIGINAL (older) batch: every row loses
-    // the cross-bucket version arbitration — the migrated rows must NOT
-    // regress to their old buckets/versions, and the dropped bucket must
-    // not resurrect
-    sink.upsertGlobal(
-      Seq(("k1", 1L, "202401M"), ("k2", 1L, "202401M"), ("k3", 1L, "202403M"))
-        .toDF("id", "v", "p"), Seq("id"), "v")
-    assert(sink.read().orderBy("id").as[(String, Long, String)].collect().toSeq
-      == Seq(("k1", 2L, "202402M"), ("k2", 1L, "202401M"), ("k3", 2L, "202404M")))
-    assert(sink.read().filter($"p" === "202403M").count() == 0)
-  }
-
   test("a non-deterministic unpersisted batch is pinned: existing rows of the month it lands in survive") {
     // the batch's month comes from a non-deterministic UDF: 202401M on its
     // first evaluation, 202402M on every later one. Evaluated once for the
@@ -97,23 +63,18 @@ class UpsertSinkSpec extends SparkSpec {
     val month = udf(() =>
       if (UpsertSinkSpec.evaluations.getAndIncrement() == 0) "202401M" else "202402M")
       .asNondeterministic()
-    val sinks = Seq[(String, ParquetUpsertSink => (org.apache.spark.sql.DataFrame => Unit))](
-      "upsert" -> (s => b => s.upsert(b, Seq("id"), "v")),
-      "upsertGlobal" -> (s => b => s.upsertGlobal(b, Seq("id"), "v")))
-    for ((name, write) <- sinks) {
-      val sink = new ParquetUpsertSink(spark, tmpDir(s"upsert_nondet_$name"), Some("p"))
-      sink.upsert(Seq(("k1", 1L, "202401M"), ("k2", 1L, "202402M")).toDF("id", "v", "p"),
-        Seq("id"), "v")
-      UpsertSinkSpec.evaluations.set(0)
-      val batch = Seq(("k3", 1L)).toDF("id", "v").withColumn("p", month())
-      assert(!batch.queryExecution.analyzed.deterministic)
-      write(sink)(batch)
-      val out = sink.read().orderBy("id").as[(String, Long, String)].collect().toSeq
-      assert(out == Seq(("k1", 1L, "202401M"), ("k2", 1L, "202402M"), ("k3", 1L, "202401M")),
-        s"$name: $out")
-      assert(batch.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
-        s"$name left its pin cached")
-    }
+    val sink = new ParquetUpsertSink(spark, tmpDir("upsert_nondet"), Some("p"))
+    sink.upsert(Seq(("k1", 1L, "202401M"), ("k2", 1L, "202402M")).toDF("id", "v", "p"),
+      Seq("id"), "v")
+    UpsertSinkSpec.evaluations.set(0)
+    val batch = Seq(("k3", 1L)).toDF("id", "v").withColumn("p", month())
+    assert(!batch.queryExecution.analyzed.deterministic)
+    sink.upsert(batch, Seq("id"), "v")
+    val out = sink.read().orderBy("id").as[(String, Long, String)].collect().toSeq
+    assert(out == Seq(("k1", 1L, "202401M"), ("k2", 1L, "202402M"), ("k3", 1L, "202401M")),
+      s"$out")
+    assert(batch.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
+      "upsert left its pin cached")
   }
 
   test("distinct-set upsert converges under replay (summary semantics)") {

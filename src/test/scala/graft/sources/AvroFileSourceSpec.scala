@@ -110,67 +110,6 @@ class AvroFileSourceSpec extends SparkSpec {
     assert(e.getMessage.contains("does not exist"))
   }
 
-  test("micro-batch stream: committed file prefix is never re-read; new files arrive incrementally") {
-    val dir = avroDir("stream")
-    val ckpt = tmpDir("graft_avro_ckpt")
-    AvroFiles.write(spark.range(0, 100).select($"id"), dir)
-    val q = spark.readStream.format("graft-avro").load(dir)
-      .writeStream.format("memory").queryName("avro_stream")
-      .option("checkpointLocation", ckpt)
-      .start()
-    try {
-      q.processAllAvailable()
-      assert(spark.table("avro_stream").count() == 100)
-      // second wave of files (later-sorting names via fresh part indices
-      // in a SEPARATE subdir-free write: use a distinctly named file)
-      AvroFiles.write(
-        spark.range(100, 130).select($"id").coalesce(1), dir + "_wave2")
-      val second = new java.io.File(dir + "_wave2").listFiles()
-        .filter(_.getName.endsWith(".avro")).head
-      java.nio.file.Files.copy(second.toPath,
-        new java.io.File(dir, "part-zz-wave2.avro").toPath)
-      q.processAllAvailable()
-      assert(spark.table("avro_stream").count() == 130)
-      // the first 100 were not re-delivered
-      assert(spark.table("avro_stream").groupBy("id").count()
-        .filter($"count" =!= 1).count() == 0)
-    } finally q.stop()
-  }
-
-  test("micro-batch stream: restart from checkpoint resumes past committed files") {
-    val dir = avroDir("restart")
-    val ckpt = tmpDir("graft_avro_ckpt_r")
-    AvroFiles.write(spark.range(0, 50).select($"id"), dir)
-    // memory sink refuses checkpoint recovery; foreachBatch (the
-    // engine's production sink shape) supports it
-    val run1 = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-    val q1 = spark.readStream.format("graft-avro").load(dir)
-      .writeStream
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-        b.select("id").as[Long].collect().foreach(run1.add); () }
-      .option("checkpointLocation", ckpt)
-      .start()
-    try { q1.processAllAvailable() } finally q1.stop()
-    assert(run1.size == 50)
-    // new file lands while the query is down
-    AvroFiles.write(spark.range(50, 60).select($"id").coalesce(1), dir + "_w2")
-    val f = new java.io.File(dir + "_w2").listFiles()
-      .filter(_.getName.endsWith(".avro")).head
-    java.nio.file.Files.copy(f.toPath,
-      new java.io.File(dir, "part-zz-late.avro").toPath)
-    val run2 = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-    val q2 = spark.readStream.format("graft-avro").load(dir)
-      .writeStream
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-        b.select("id").as[Long].collect().foreach(run2.add); () }
-      .option("checkpointLocation", ckpt) // SAME checkpoint → resume
-      .start()
-    try { q2.processAllAvailable() } finally q2.stop()
-    // only the 10 new rows flow after restart
-    import scala.jdk.CollectionConverters._
-    assert(run2.asScala.toSet == (50L until 60L).toSet)
-  }
-
   test("multi-partition write produces one part file per non-empty partition") {
     val dir = avroDir("parts")
     val df = spark.range(0, 1000, 1, 8).select($"id")

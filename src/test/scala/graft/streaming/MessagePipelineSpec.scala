@@ -158,10 +158,10 @@ class MessagePipelineSpec extends SparkSpec {
   }
 
   test("each pipeline's summary upserts run in its own query's job group") {
-    // the summary sink's helper thread is JVM-wide and inherits Spark's
-    // local properties once, at creation; query.stop() cancels the
-    // query's job group (its runId), so every summary upsert must carry
-    // ITS query's group, not the first query's
+    // the summary sink's helper thread inherits Spark's local properties
+    // once, when it starts; query.stop() cancels the query's job group
+    // (its runId), so every summary upsert must carry ITS query's group,
+    // not that of the batch that started the thread
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
@@ -208,6 +208,55 @@ class MessagePipelineSpec extends SparkSpec {
     } finally sc.removeSparkListener(listener)
   }
 
+  test("two pipelines in one JVM: one commits a batch while the other's summary write is held") {
+    // pipeline A's summary upsert is held in its job commit (`_SUCCESS`
+    // create) until the latch opens; pipeline B, on local paths, must run
+    // its whole batch meanwhile. A summary-sink thread shared by both
+    // queries would queue B's summary upsert behind A's held one.
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.graftslow.impl", classOf[SlowSuccessFs].getName)
+    val (detailA, summaryA) = (tmpDir("detail_twoA"), tmpDir("summary_twoA"))
+    val (detailB, summaryB, cpB) = (tmpDir("detail_twoB"), tmpDir("summary_twoB"), tmpDir("cp_twoB"))
+    val inputA = MemoryStream[Array[Byte]](spark)
+    inputA.addData(msgs(0 until 40).map(AvroCodec.encode))
+    val inputB = MemoryStream[Array[Byte]](spark)
+    inputB.addData(msgs(40 until 80).map(AvroCodec.encode))
+    val held = new java.util.concurrent.CountDownLatch(1)
+    SlowSuccessFs.entered.set(false)
+    SlowSuccessFs.release.set(held)
+    SlowSuccessFs.armed.set(true)
+    val qa = MessagePipeline.run(inputA.toDF(), cfg, detailA, s"graftslow:$summaryA",
+      tmpDir("cp_twoA"))
+    var qb: org.apache.spark.sql.streaming.StreamingQuery = null
+    try {
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!SlowSuccessFs.entered.get()) {
+        assert(System.nanoTime() < deadline, "A's summary write never reached its commit")
+        Thread.sleep(10)
+      }
+      qb = MessagePipeline.run(inputB.toDF(), cfg, detailB, summaryB, cpB)
+      assert(qb.awaitTermination(60000L),
+        "pipeline B did not finish its batch while A's summary write was held")
+      assert(qb.exception.isEmpty, s"${qb.exception}")
+      assert(new java.io.File(cpB, "commits/0").exists(), "pipeline B committed no batch")
+      assert(SlowSuccessFs.inFlight.get() == 1 && qa.isActive,
+        "A's summary write was no longer held when B finished")
+    } finally {
+      // open the latch first: a stopped B would wait for its summary write
+      held.countDown()
+      SlowSuccessFs.armed.set(false)
+      SlowSuccessFs.release.set(null)
+      if (qb != null) qb.stop()
+    }
+    qa.processAllAvailable(); qa.stop()
+    for ((detail, summary, ids) <- Seq((detailA, summaryA, 0 until 40),
+        (detailB, summaryB, 40 until 80))) {
+      assert(spark.read.parquet(detail).count() == 40)
+      assert(spark.read.parquet(summary).count() ==
+        Enrich.summary(Enrich.plain(msgs(ids).toDF())).distinct().count())
+    }
+  }
+
   test("a stopped batch returns only after its summary write; the restart adds no duplicates") {
     // query.stop() interrupts the batch while the summary upsert is in
     // its job commit (a driver step no job cancel reaches): the closure
@@ -246,8 +295,10 @@ class MessagePipelineSpec extends SparkSpec {
 }
 
 /** Local filesystem under the `graftslow:` scheme whose `_SUCCESS`
-  * creates, while armed, take 3 s and count as in flight — a job commit
-  * that is still running. Registered through `fs.graftslow.impl`.
+  * creates, while armed, are held and count as in flight — a job commit
+  * that is still running. A create is held until the
+  * [[SlowSuccessFs.release]] latch opens (at most 2 min) when one is set,
+  * else for 3 s. Registered through `fs.graftslow.impl`.
   */
 class SlowSuccessFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   import org.apache.hadoop.fs.{FSDataOutputStream, Path}
@@ -261,7 +312,13 @@ class SlowSuccessFs extends org.apache.hadoop.fs.RawLocalFileSystem {
     else {
       SlowSuccessFs.inFlight.incrementAndGet()
       SlowSuccessFs.entered.set(true)
-      try { Thread.sleep(3000); create }
+      try {
+        Option(SlowSuccessFs.release.get()) match {
+          case Some(latch) => latch.await(2, java.util.concurrent.TimeUnit.MINUTES)
+          case None => Thread.sleep(3000)
+        }
+        create
+      }
       finally SlowSuccessFs.inFlight.decrementAndGet()
     }
 
@@ -281,4 +338,6 @@ object SlowSuccessFs {
   val armed = new java.util.concurrent.atomic.AtomicBoolean(false)
   val entered = new java.util.concurrent.atomic.AtomicBoolean(false)
   val inFlight = new java.util.concurrent.atomic.AtomicInteger(0)
+  val release =
+    new java.util.concurrent.atomic.AtomicReference[java.util.concurrent.CountDownLatch](null)
 }
