@@ -28,10 +28,6 @@ object MessageFunctions {
   def datePartition(ts: Column): Column =
     concat(date_format(ts, "yyyyMM"), lit("M"))
 
-  /** Same, straight from epoch millis. */
-  def datePartitionFromMillis(millis: Column): Column =
-    datePartition(sentTs(millis))
-
   // --- AES-128-CBC-PKCS5, byte-parity with Encryptor.java ---------------
   //
   // One static call per row of graft.plans.AesCbc (a cached Cipher per
@@ -66,10 +62,6 @@ object MessageFunctions {
   /** code → canonical name ("T" → "TEXT"); null for unknown codes. */
   def classifyType(code: Column): Column =
     element_at(mapLit(MessageTypes.codeToName), code)
-
-  /** name → code ("PHOTO" → "P"). */
-  def typeCode(name: Column): Column =
-    element_at(mapLit(MessageTypes.nameToCode), name)
 
   // --- XMPP stanza parsing (XmppPacketReader.java:308-435) --------------
 

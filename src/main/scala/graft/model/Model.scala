@@ -17,28 +17,6 @@ final case class Message(
     sentTime: Long // epoch millis (CassandraOutputFormat.java:103)
 )
 
-/** Enriched output row of the detail table (`MESSAGE_HISTORY`,
-  * CassandraOutputFormat.java:87-89): stanza stored encrypted, partition
-  * key is the month bucket.
-  */
-final case class HistoryRow(
-    message_id: String,
-    username: String,
-    jid: String,
-    date_partition: String,
-    sent_time: java.sql.Timestamp,
-    stanza: String
-)
-
-/** Distinct-set summary row (`MESSAGE_HISTORY_SUMMARY`,
-  * CassandraOutputFormat.java:95,108).
-  */
-final case class SummaryRow(
-    username: String,
-    jid: String,
-    first_date_partition: String
-)
-
 object Schemas {
   /** Wire/in-flight schema (Message.avsc:1-11 == MessageObject fields). */
   val message: StructType = StructType(Seq(

@@ -372,54 +372,6 @@ object Multimodal {
       .toDF("doc_id", "pixels")
   }
 
-  final case class MediaPatch(doc_id: Long, patch_id: Int, v: Array[Float])
-  implicit private val patchEnc: Encoder[MediaPatch] =
-    Encoders.product[MediaPatch]
-
-  /** ViT-style patch extraction over a [[resizeMedia]] output: cut the
-    * W×H RGB tensor into (W/p)·(H/p) non-overlapping p×p patches, each
-    * flattened row-major with channels-last and normalized to [0,1] —
-    * the tensor layout a vision-transformer embedding stage consumes.
-    * Patch ids are row-major over the patch grid.
-    *
-    * Scale notes: a narrow flatMap with a fixed fan-out of (W/p)·(H/p)
-    * rows per image and no shuffle; output bytes = input bytes × 4/3
-    * (byte→float), so partition sizing follows the resize stage's.
-    */
-  def extractPatches(resized: DataFrame, width: Int, height: Int,
-                     patch: Int): Dataset[MediaPatch] = {
-    require(patch > 0 && width % patch == 0 && height % patch == 0,
-      s"patch $patch must tile ${width}x$height")
-    val ds = resized.select(col("doc_id"), col("pixels").as("blob"))
-      .as[MediaRow](rowEnc)
-    val cols = width / patch
-    val rows = height / patch
-    ds.flatMap { r =>
-      val px = r.blob
-      (0 until rows * cols).iterator.map { pid =>
-        val py = pid / cols
-        val pxi = pid % cols
-        val v = new Array[Float](patch * patch * 3)
-        var k = 0
-        var dy = 0
-        while (dy < patch) {
-          val y = py * patch + dy
-          var dx = 0
-          while (dx < patch) {
-            val base = (y * width + pxi * patch + dx) * 3
-            v(k) = (px(base) & 0xFF) / 255.0f
-            v(k + 1) = (px(base + 1) & 0xFF) / 255.0f
-            v(k + 2) = (px(base + 2) & 0xFF) / 255.0f
-            k += 3
-            dx += 1
-          }
-          dy += 1
-        }
-        MediaPatch(r.doc_id, pid, v)
-      }
-    }
-  }
-
   /** Pure-column metadata that needs no codec: payload size and a content
     * digest (dedup key for media). Oracle-expressible.
     */

@@ -127,13 +127,7 @@ object QualityClassifier {
         e.getField("cnt").cast("double"))
   }
 
-  /** Predicted P(y=1) for `text` under `model`. */
-  def probability(text: Column, model: Model): Column =
-    lit(1.0) / (lit(1.0) +
-      exp(-marginCol(featureEntries(text, model.dim),
-        model.effWeights, model.effBias)))
-
-  /** Hard prediction: p ≥ 0.5 ⇔ margin ≥ 0 — transcendental-free, so
+  /** Hard prediction: P(y=1) ≥ 0.5 ⇔ margin ≥ 0 — transcendental-free, so
     * the decision is exactly the deterministic fixed-point margin sign.
     */
   def prediction(text: Column, model: Model): Column =

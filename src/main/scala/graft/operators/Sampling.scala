@@ -11,12 +11,6 @@ import org.apache.spark.sql.functions._
   */
 object Sampling {
 
-  /** Keep ~numerator/denominator of rows, selected by a hash of `key`
-    * (uniform, deterministic, partitioning-independent).
-    */
-  def hashSample(df: DataFrame, key: Column, numerator: Int, denominator: Int): DataFrame =
-    df.filter(pmod(xxhash64(key), lit(denominator.toLong)) < numerator)
-
   /** Systematic sampling by a dense numeric key (every k-th row by id) —
     * fully oracle-expressible; use when the key is already uniform.
     */

@@ -18,7 +18,7 @@ import graft.plans.RollingHashes
   *  - [[gramCensus]]: all length-L substrings occurring ≥ 2 times
   *    corpus-wide (fixed L ⇒ fully oracle-replayable in SQL by
   *    exploding `substr(text, i, L)`);
-  *  - [[longestDup]]: the MAXIMUM length at which any duplicated
+  *  - [[longestDupLen]]: the MAXIMUM length at which any duplicated
   *    substring exists, found by binary search on L over the census's
   *    existence bit — ⌈log₂(maxLen)⌉ corpus passes, never a suffix
   *    array in memory.
@@ -278,25 +278,11 @@ object SubstringDedup {
     }
   }
 
-  /** The empty frame [[longestDup]] (and the `text_longest_dup` query
-    * registration) return when no duplicate of even `minLen` exists —
-    * shared so the operator and the registration cannot drift schemas.
+  /** The frame the `text_longest_dup` query returns when no duplicate of
+    * even `minLen` exists: the census schema with a leading `len`.
     */
   def emptyLongestDupFrame(spark: org.apache.spark.sql.SparkSession): DataFrame = {
     import spark.implicits._
     Seq.empty[(Int, String, Long, Long)].toDF("len", "gram", "n_docs", "n_occ")
   }
-
-  /** [[longestDupLen]]'s census: the L* duplicates with a `len` column;
-    * EMPTY when no duplicate of even `minLen` exists. The returned
-    * frame is a plain lazy census over the caller's `df`.
-    */
-  def longestDup(df: DataFrame, minLen: Int = 8, maxLen: Int = 4096,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    longestDupLen(df, minLen, maxLen, idCol, textCol) match {
-      case None => emptyLongestDupFrame(df.sparkSession)
-      case Some(lo) =>
-        gramCensus(df, lo, idCol, textCol)
-          .select(lit(lo).as("len"), col("gram"), col("n_docs"), col("n_occ"))
-    }
 }

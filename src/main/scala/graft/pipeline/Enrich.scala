@@ -6,13 +6,14 @@ import org.apache.spark.sql.functions._
 import graft.functions.MessageFunctions._
 
 /** Engine configuration (replaces the reference's hard-coded constants at
-  * CassandraOutputFormat.java:39-40 and the `record.ttl` property,
-  * BackupMessageConsumer.java:46-51). Key/IV are injected, never inlined.
+  * CassandraOutputFormat.java:39-40). Key/IV are injected, never inlined.
+  * The reference's `record.ttl` property (BackupMessageConsumer.java:46-51)
+  * has no counterpart: the pipeline applies no TTL (`graft.sink.Retention`
+  * is the library form).
   */
 final case class GraftConfig(
     encryptionKey: String,
-    initVector: String,
-    ttlSeconds: Long = -1L // <=0 ⇒ retention disabled, like the reference
+    initVector: String
 ) {
   require(encryptionKey.getBytes("UTF-8").length == 16, "AES-128 needs a 16-byte key")
   require(initVector.getBytes("UTF-8").length == 16, "CBC needs a 16-byte IV")
@@ -42,7 +43,7 @@ object GraftConfig {
 object Enrich {
 
   def apply(messages: DataFrame, cfg: GraftConfig): DataFrame = {
-    val ts = timestamp_millis(col("sentTime"))
+    val ts = sentTs(col("sentTime"))
     messages.select(
       col("msgId").as("message_id"),
       col("username"),
@@ -58,7 +59,7 @@ object Enrich {
     * vectors + round-trip property tests instead.
     */
   def plain(messages: DataFrame): DataFrame = {
-    val ts = timestamp_millis(col("sentTime"))
+    val ts = sentTs(col("sentTime"))
     messages.select(
       col("msgId").as("message_id"),
       col("username"),

@@ -14,7 +14,7 @@ import org.apache.spark.sql.types._
 /** Bounded top-k buffer: the k best (score, id) pairs seen so far, kept
   * sorted best-first under the window total order `score DESC, id ASC`
   * (java.lang.Double.compare, so NaN ranks above every real — identical
-  * to Spark's descending sort and to [[TopKAggregator.better]]).
+  * to Spark's descending sort).
   * Insertion is O(k) array shifting; the common case (full buffer, input
   * no better than the worst) is a single compare.
   */
@@ -42,14 +42,13 @@ final class TopKPairsBuffer(val k: Int) {
 /** `topk_pairs(score, id, k)` → array<struct<score,id>>: per-group top-k
   * as a NATIVE imperative aggregate over raw column values.
   *
-  * This is the production form of the typed [[TopKAggregator]] (kept as
-  * `Aggregator` API coverage): same algebra — partial size-k buffers
-  * merge associatively, so each map partition ships at most k rows per
-  * group and no full group is ever collected or sorted — but the buffer
-  * is a pair of primitive arrays updated straight from `InternalRow`,
-  * with no Encoder ser/de per row (the typed path deserializes every
-  * input row into Scala tuples and re-serializes List buffers; that
-  * constant factor was ~1.5-2× the whole window-form runtime).
+  * Partial size-k buffers merge associatively, so each map partition
+  * ships at most k rows per group and no full group is ever collected or
+  * sorted. The buffer is a pair of primitive arrays updated straight from
+  * `InternalRow`, with no Encoder ser/de per row (a typed `Aggregator`
+  * deserializes every input row into Scala tuples and re-serializes its
+  * buffers; that constant factor was ~1.5-2× the whole window-form
+  * runtime).
   *
   * Shuffle format: 4 + 16k bytes per group (count + packed
   * double/long pairs). Null score or id inputs are skipped, matching

@@ -93,8 +93,8 @@ object RelationalQueries {
     // (algebraic partial top-k: shuffles k rows per group per partition
     // instead of whole groups; identical output to rel_window_topk).
     // graft.plans.TopKPairsAgg updates primitive arrays straight from
-    // InternalRow — no Encoder ser/de per input row like the typed
-    // Aggregator form (kept as API coverage in plans.TopKAggregator)
+    // InternalRow — no Encoder ser/de per input row like a typed
+    // Aggregator
     "rel_topk_aggregator" -> ((s, d) =>
       Tables.orders(s, d)
         .groupBy("o_custkey")

@@ -147,7 +147,7 @@ class MessageFunctionsSpec extends SparkSpec {
     )
     forAll(cases) { (ms, exp) =>
       val got = Seq(ms).toDF("ms")
-        .select(datePartitionFromMillis($"ms")).as[String].head()
+        .select(datePartition(sentTs($"ms"))).as[String].head()
       assert(got == exp, s"for millis=$ms")
     }
   }

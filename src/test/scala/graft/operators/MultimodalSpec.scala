@@ -125,31 +125,6 @@ class MultimodalSpec extends SparkSpec {
       le32(0) ++ le32(0) ++ le32(0) ++ le32(0) ++ data
   }
 
-  test("extractPatches: ViT tiling, row-major grid, channels-last, [0,1] floats") {
-    import spark.implicits._
-    // 4x4 RGB tensor with pixel (y,x,c) = (y*4+x)*3+c — every byte unique
-    val px = Array.tabulate(4 * 4 * 3)(_.toByte)
-    val df = Seq((7L, px)).toDF("doc_id", "pixels")
-    val got = Multimodal.extractPatches(df, width = 4, height = 4, patch = 2)
-      .collect().sortBy(_.patch_id)
-    assert(got.length == 4 && got.forall(_.v.length == 12))
-    // patch 0 = pixels (0,0),(0,1),(1,0),(1,1); channels-last per pixel
-    def pix(y: Int, x: Int) = (0 until 3).map(c => ((y * 4 + x) * 3 + c) / 255.0f)
-    assert(got(0).v.toSeq == (pix(0, 0) ++ pix(0, 1) ++ pix(1, 0) ++ pix(1, 1)))
-    // patch 3 (bottom-right) = (2,2),(2,3),(3,2),(3,3)
-    assert(got(3).v.toSeq == (pix(2, 2) ++ pix(2, 3) ++ pix(3, 2) ++ pix(3, 3)))
-    assert(got.forall(_.v.forall(f => f >= 0f && f <= 1f)))
-  }
-
-  test("extractPatches composes with resizeMedia (stub decoder)") {
-    import spark.implicits._
-    val media = Seq((1L, "payload-bytes".getBytes("UTF-8"))).toDF("doc_id", "blob")
-    val resized = Multimodal.resizeMedia(media, () => new Multimodal.StubDecoder, 8, 8)
-    val patches = Multimodal.extractPatches(resized, 8, 8, patch = 4)
-    assert(patches.count() == 4) // (8/4)^2
-    assert(patches.collect().forall(_.v.length == 4 * 4 * 3))
-  }
-
   test("resize: real nearest-neighbour decode for 24-bit BMP (both row orders)") {
     val dec = new HeaderDecoder
     val px = Seq((255, 0, 0), (0, 255, 0), (0, 0, 255), (255, 255, 0))

@@ -64,19 +64,6 @@ class QualityClassifierSpec extends SparkSpec {
       s"holdout ${acc("holdout")} vs base rate $base")
   }
 
-  test("probability is the sigmoid of the margin and ranks by it") {
-    val model = QualityClassifier.train(
-      labeled.filter(col("split") === "train"), "text", "y")
-    val rows = labeled.limit(20)
-      .select(QualityClassifier.probability(col("text"), model).as("p"),
-        QualityClassifier.prediction(col("text"), model).as("pred"))
-      .as[(Double, Int)].collect()
-    rows.foreach { case (p, pred) =>
-      assert(p >= 0.0 && p <= 1.0)
-      assert((p >= 0.5) == (pred == 1))
-    }
-  }
-
   test("registered violation row is empty (floor 0.85 holds end to end)") {
     val df = graft.SparkEntry.queries("text_train_classifier")(spark, dir)
     assert(df.count() === 0)

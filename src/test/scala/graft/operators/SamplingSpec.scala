@@ -10,16 +10,6 @@ class SamplingSpec extends SparkSpec {
 
   private lazy val docs = Tables.documents(spark, sf001)
 
-  test("hashSample is deterministic and partitioning-independent") {
-    val a = Sampling.hashSample(docs, col("doc_id"), 1, 4)
-      .select("doc_id").as[Long].collect().toSet
-    val b = Sampling.hashSample(docs.repartition(13), col("doc_id"), 1, 4)
-      .select("doc_id").as[Long].collect().toSet
-    assert(a == b) // df.sample would differ across partitionings
-    val frac = a.size.toDouble / docs.count()
-    assert(frac > 0.15 && frac < 0.35, s"frac=$frac")
-  }
-
   test("systematic sample rate is exact on dense ids") {
     val n = Sampling.systematicSample(docs, col("doc_id"), 3, 4).count()
     assert(n == docs.filter($"doc_id" % 4 < 3).count())

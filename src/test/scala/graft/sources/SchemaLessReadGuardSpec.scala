@@ -1,10 +1,10 @@
 package graft.sources
 
-import java.nio.file.{Files, Path, Paths}
-
-import scala.jdk.CollectionConverters._
+import java.nio.file.{Path, Paths}
 
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SourceScan
 
 /** No engine code plans a parquet read without a schema outside
   * [[ParquetRead]]: `spark.read.parquet(p)` with no schema runs a Spark
@@ -28,43 +28,9 @@ class SchemaLessReadGuardSpec extends AnyFunSuite {
   private val chain = ("""\.read(?![\w(])((?:\s*\.\s*(?:format|option|options|schema)""" +
     """\((?:[^()]|\([^()]*\))*\))*)\s*\.\s*(parquet|load)\(""").r
 
-  /** `src` with every comment blanked to spaces (newlines kept), so
-    * offsets and line numbers stay those of the file.
-    */
-  private def blankComments(src: String): String = {
-    val out = new StringBuilder(src)
-    var i = 0
-    def blank(from: Int, to: Int): Unit =
-      for (j <- from until math.min(to, src.length) if src(j) != '\n') out(j) = ' '
-    while (i < src.length) {
-      if (src.startsWith("\"\"\"", i)) {
-        val end = src.indexOf("\"\"\"", i + 3)
-        i = if (end < 0) src.length else end + 3
-      } else if (src(i) == '"') {
-        var j = i + 1
-        while (j < src.length && src(j) != '"' && src(j) != '\n')
-          j += (if (src(j) == '\\') 2 else 1)
-        i = j + 1
-      } else if (src.startsWith("//", i)) {
-        val end = src.indexOf('\n', i)
-        val stop = if (end < 0) src.length else end
-        blank(i, stop); i = stop
-      } else if (src.startsWith("/*", i)) {
-        var depth = 1; var j = i + 2
-        while (j < src.length && depth > 0) {
-          if (src.startsWith("/*", j)) { depth += 1; j += 2 }
-          else if (src.startsWith("*/", j)) { depth -= 1; j += 2 }
-          else j += 1
-        }
-        blank(i, j); i = j
-      } else i += 1
-    }
-    out.toString
-  }
-
   /** Line numbers of the schema-less parquet reads in `src`. */
   private[sources] def schemaLessReads(src: String): Seq[Int] = {
-    val code = blankComments(src)
+    val code = SourceScan.blankComments(src)
     chain.findAllMatchIn(code).filter { m =>
       val links = m.group(1)
       val parquet = m.group(2) == "parquet" ||
@@ -92,15 +58,12 @@ class SchemaLessReadGuardSpec extends AnyFunSuite {
 
   test("no src/main parquet read outside ParquetRead plans without a schema") {
     val root = Paths.get("src/main/scala")
-    assert(Files.isDirectory(root), s"run from the repository root (cwd ${Paths.get("").toAbsolutePath})")
-    val s = Files.walk(root)
-    val files = try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-      finally s.close()
+    val files = SourceScan.files("src/main/scala").filter(_.toString.endsWith(".scala"))
     def rel(f: Path): String = root.relativize(f).toString.replace('\\', '/')
     assert(exempt.keys.forall(k => files.exists(rel(_) == k)), "an exemption names a missing file")
     val found = for {
       f <- files if !exempt.contains(rel(f))
-      line <- schemaLessReads(new String(Files.readAllBytes(f), "UTF-8"))
+      line <- schemaLessReads(SourceScan.read(f))
     } yield s"src/main/scala/${rel(f)}:$line"
     assert(found.isEmpty,
       "schema-less parquet reads (plan them with graft.sources.ParquetRead): " + found.mkString(", "))
