@@ -1,53 +1,16 @@
 package graft.sources
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-
 import graft.SparkSpec
 import graft.avro.AvroCodec
 import graft.model.Message
 import graft.pipeline.GraftConfig
 import graft.streaming.MessagePipeline
 
+/** The engine's offline message source: a parquet directory of binary
+  * `value` rows (Avro-encoded messages), streamed with a fixed schema —
+  * the stream shape `StreamingBench` and perfbench drive. */
 class MessageSourceSpec extends SparkSpec {
   import spark.implicits._
-
-  test("kafka config projection strips the reference prefix (F2 parity)") {
-    val props = Map(
-      "kafka.message.backup.topic" -> "message-topic",
-      "kafka.message.backup.group.id" -> "message-consumer",
-      "kafka.message.backup.zookeeper.connect" -> "zk:2181",
-      "cassandra.hosts" -> "c1,c2", // unrelated keys are dropped
-      "record.ttl" -> "86400")
-    val kp = MessageSource.kafkaProps(props)
-    assert(kp == Map("topic" -> "message-topic",
-      "group.id" -> "message-consumer", "zookeeper.connect" -> "zk:2181"))
-  }
-
-  test("kafka reader options: full reference-convention translation") {
-    val got = MessageSource.kafkaReaderOptions(Map(
-      "kafka.message.backup.topic" -> "message-topic",
-      "kafka.message.backup.bootstrap.servers" -> "b1:9092,b2:9092",
-      "kafka.message.backup.group.id" -> "message-consumer",
-      "kafka.message.backup.auto.offset.reset" -> "smallest", // 0.8-era value
-      "kafka.message.backup.zookeeper.connect" -> "zk:2181",  // dropped
-      "record.ttl" -> "86400"))                               // unprefixed, dropped
-    assert(got == Map(
-      "subscribe" -> "message-topic",
-      "kafka.bootstrap.servers" -> "b1:9092,b2:9092",
-      "startingOffsets" -> "earliest",
-      "kafka.group.id" -> "message-consumer"))
-    // topic defaults like the reference's conf default
-    assert(MessageSource.kafkaReaderOptions(Map(
-      "kafka.message.backup.bootstrap.servers" -> "b:9092"))("subscribe")
-      == "message-topic")
-    // unknown offset-reset values fail loudly, not silently as 'latest'
-    val e = intercept[IllegalArgumentException] {
-      MessageSource.kafkaReaderOptions(Map(
-        "kafka.message.backup.bootstrap.servers" -> "b:9092",
-        "kafka.message.backup.auto.offset.reset" -> "sideways"))
-    }
-    assert(e.getMessage.contains("auto.offset.reset"))
-  }
 
   test("file source streams binary values end-to-end through the pipeline") {
     val msgs = (0 until 8).map(i =>
@@ -57,35 +20,9 @@ class MessageSourceSpec extends SparkSpec {
 
     val detail = tmpDir("msrc_det"); val summary = tmpDir("msrc_sum")
     val q = MessagePipeline.run(
-      MessageSource.Files(inDir).stream(spark),
+      spark.readStream.schema("value BINARY").parquet(inDir),
       GraftConfig.dev, detail, summary, tmpDir("msrc_cp"))
     q.processAllAvailable(); q.stop()
     assert(spark.read.parquet(detail).count() == 8)
-  }
-
-  test("wrapped memory stream source matches the pipeline contract") {
-    val in = MemoryStream[Array[Byte]](spark)
-    in.addData(Seq(Message("w1", "u", "p@x", "s", 0L)).map(AvroCodec.encode))
-    val src = MessageSource.Wrapped(in.toDF())
-    val detail = tmpDir("msrc2_det")
-    val q = MessagePipeline.run(src.stream(spark), GraftConfig.dev,
-      detail, tmpDir("msrc2_sum"), tmpDir("msrc2_cp"))
-    q.processAllAvailable(); q.stop()
-    assert(spark.read.parquet(detail).count() == 1)
-  }
-
-  test("kafka source rejects zookeeper-only config with a clear message") {
-    val src = MessageSource.Kafka(Map(
-      "kafka.message.backup.topic" -> "t",
-      "kafka.message.backup.zookeeper.connect" -> "zk:2181"))
-    val e = intercept[IllegalArgumentException] { src.stream(spark) }
-    assert(e.getMessage.contains("bootstrap.servers"))
-  }
-
-  test("kafka source fails lazily without the connector jar") {
-    val src = MessageSource.Kafka(Map(
-      "kafka.message.backup.topic" -> "t",
-      "kafka.message.backup.bootstrap.servers" -> "broker:9092"))
-    intercept[Exception] { src.stream(spark) } // DATA_SOURCE_NOT_FOUND offline
   }
 }
