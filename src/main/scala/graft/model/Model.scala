@@ -36,13 +36,6 @@ object Schemas {
     StructField("sent_time", TimestampType),
     StructField("stanza", StringType)
   ))
-
-  /** Summary output schema (CassandraOutputFormat.java:95). */
-  val summary: StructType = StructType(Seq(
-    StructField("username", StringType),
-    StructField("jid", StringType),
-    StructField("first_date_partition", StringType)
-  ))
 }
 
 /** Message-category taxonomy (reference: message/MessageType.java:6-24).
@@ -50,7 +43,8 @@ object Schemas {
   * two names — first declaration wins for code→name.
   */
 object MessageTypes {
-  val nameToCode: Map[String, String] = Map(
+  /** (name, code) for each constant, in declaration order. */
+  private val constants: Seq[(String, String)] = Seq(
     "TEXT" -> "T", "BUZZ" -> "B", "PHOTO" -> "P", "IMAGE" -> "P",
     "VIDEO" -> "V", "AUDIO" -> "A", "LOCATION" -> "L", "CONTACT" -> "C",
     "STICKER" -> "S", "GIF" -> "G", "CAPS_MEME" -> "M", "CAPS" -> "M",
@@ -59,12 +53,8 @@ object MessageTypes {
     "INCOMING_CALL" -> "IC", "MISSED_CALL" -> "MC"
   )
 
+  val nameToCode: Map[String, String] = constants.toMap
+
   /** code → canonical (first-declared) name. */
-  val codeToName: Map[String, String] = Map(
-    "T" -> "TEXT", "B" -> "BUZZ", "P" -> "PHOTO", "V" -> "VIDEO",
-    "A" -> "AUDIO", "L" -> "LOCATION", "C" -> "CONTACT", "S" -> "STICKER",
-    "G" -> "GIF", "M" -> "CAPS_MEME", "R" -> "REGISTER",
-    "J" -> "MUCROOM_JOIN", "NP" -> "MESSAGE_WITHOUT_PREVIEW",
-    "E" -> "SECRET_MESSAGE", "IC" -> "INCOMING_CALL", "MC" -> "MISSED_CALL"
-  )
+  val codeToName: Map[String, String] = constants.distinctBy(_._2).map(_.swap).toMap
 }

@@ -36,12 +36,6 @@ object Projection {
     Array.fill(outDim)(Array.fill(dim)(rnd.nextGaussian() * inv))
   }
 
-  /** Attach the projected vector as `outCol` — a narrow per-row map. */
-  def project(df: DataFrame, outDim: Int, dim: Int, seed: Long = 31L,
-      vecCol: String = "embedding", outCol: String = "proj"): DataFrame =
-    df.withColumn(outCol,
-      graft.plans.MatVec(col(vecCol), gaussianMatrix(outDim, dim, seed)))
-
   /** Exact top-k cosine via a projected shortlist: candidates are ranked
     * by cosine in the PROJECTED space (outDim-wide dots over the narrow
     * projected corpus), the top `shortlist` per query survive, and only

@@ -42,17 +42,10 @@ object GraftConfig {
   */
 object Enrich {
 
-  def apply(messages: DataFrame, cfg: GraftConfig): DataFrame = {
-    val ts = sentTs(col("sentTime"))
-    messages.select(
-      col("msgId").as("message_id"),
-      col("username"),
-      col("jid"),
-      datePartition(ts).as("date_partition"),
-      ts.as("sent_time"),
-      encryptStanza(col("stanza"), cfg.encryptionKey, cfg.initVector).as("stanza")
-    ).filter(col("stanza").isNotNull) // F1: null-drop after encryption
-  }
+  def apply(messages: DataFrame, cfg: GraftConfig): DataFrame =
+    plain(messages)
+      .withColumn("stanza", encryptStanza(col("stanza"), cfg.encryptionKey, cfg.initVector))
+      .filter(col("stanza").isNotNull) // F1: null-drop after encryption
 
   /** Plaintext variant (no crypto) — the SQL-expressible core used for
     * oracle verification; encryption correctness is covered by golden

@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import scala.util.control.NonFatal
+
 /** Idempotent keyed upsert into a parquet-backed table — the engine's
   * stand-in for the reference's Cassandra INSERT-as-upsert
   * (CassandraOutputFormat.java:101-137). Cassandra gives last-write-wins
@@ -12,18 +14,24 @@ import org.apache.spark.storage.StorageLevel
   * key-dedup on merge, so at-least-once replay converges to the same
   * table (the reference's effectively-once argument, SURVEY.md §2.8).
   *
-  * Scale notes (100 TB): the table is partitioned by a bucket column
+  * Scale notes: the table is partitioned by a bucket column
   * (`date_partition` for history — one month per partition); a merge only
   * rewrites partitions present in the incoming batch (dynamic partition
-  * overwrite), so cost is O(touched months), not O(table). A real
-  * cluster deployment would swap this for the Cassandra connector or a
-  * merge-on-read table format behind the same methods.
+  * overwrite), and each touched month is rewritten whole. A live stream
+  * writes mostly into the current month, so every batch pays O(month so
+  * far) bytes, not O(batch) (ROADMAP direction 1 has the measurements).
+  * A real cluster deployment would swap this for the Cassandra connector
+  * or a merge-on-read table format behind the same methods.
+  *
+  * Each write runs up to 5 times, the reference's retry budget
+  * (CassandraOutputFormat.java:93,97), and a write that fails every
+  * attempt fails the batch. The reference also stepped each retry down a
+  * consistency level; a parquet table has no consistency levels.
   */
 final class ParquetUpsertSink(
     spark: SparkSession,
     path: String,
-    partitionCol: Option[String] = None,
-    retry: RetryPolicy = RetryPolicy.default
+    partitionCol: Option[String] = None
 ) {
 
   import ParquetUpsertSink._
@@ -49,7 +57,7 @@ final class ParquetUpsertSink(
     * pattern, which this sink's tables already need for TTL anyway.
     */
   def upsertDistinct(batch: DataFrame): Unit =
-    retry.run {
+    retried {
       val existing = ParquetUpsertSink.readExisting(spark, path, batch)
       val fresh = batch.distinct()
       val cond = batch.columns.toSeq
@@ -90,7 +98,7 @@ final class ParquetUpsertSink(
     * itself, and a deterministic batch pays nothing.
     */
   def upsert(batch: DataFrame, keys: Seq[String], versionCol: String): Unit =
-    pinned(batch) { retry.run {
+    pinned(batch) { retried {
       val existing = readExisting(spark, path, batch)
       // restrict the merge to partitions the batch touches — key dedup is
       // therefore per-partition (the per-bucket contract above).
@@ -128,6 +136,14 @@ final class ParquetUpsertSink(
       try body finally batch.unpersist()
     }
 
+  /** Runs `op` until it succeeds, at most [[Attempts]] times, and
+    * rethrows the last attempt's failure. A fatal error or an interrupt
+    * (`query.stop()`) is not retried.
+    */
+  private def retried(op: => Unit, attempt: Int = 1): Unit =
+    try op
+    catch { case NonFatal(_) if attempt < Attempts => retried(op, attempt + 1) }
+
   private def write(df: DataFrame, path: String, pcol: Option[String]): Unit = {
     val w = df.write.mode(SaveMode.Overwrite)
     pcol match {
@@ -148,6 +164,9 @@ final class ParquetUpsertSink(
 }
 
 object ParquetUpsertSink {
+
+  /** Attempts per write: the reference's budget. */
+  private val Attempts = 5
 
   /** Last-write-wins per key: max(versionCol) row kept; ties broken by a
     * total order over all columns so replays are deterministic.

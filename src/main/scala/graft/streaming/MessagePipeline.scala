@@ -6,7 +6,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.avro.AvroCodec
 import graft.pipeline.{Enrich, GraftConfig}
-import graft.sink.{ParquetUpsertSink, RetryPolicy}
+import graft.sink.ParquetUpsertSink
 
 /** The whole reference job (BackupMessageConsumer.java:33-63) as a
   * Structured Streaming assembly:
@@ -74,7 +74,6 @@ object MessagePipeline {
       detailPath: String,
       summaryPath: String,
       checkpointDir: String,
-      retry: RetryPolicy = RetryPolicy.default,
       trigger: Trigger = Trigger.AvailableNow(),
       queryName: Option[String] = None
   ): StreamingQuery = {
@@ -107,14 +106,14 @@ object MessagePipeline {
           val summaryF = scala.concurrent.Future {
             sc.setJobGroup(group, s"batch $batchId: summary upsert",
               interruptOnCancel = true)
-            try new ParquetUpsertSink(spark, summaryPath, None, retry)
+            try new ParquetUpsertSink(spark, summaryPath)
               .upsertDistinct(Enrich.summary(b))
             finally sc.clearJobGroup()
           }(sinkEc)
           try {
             val detail = scala.util.Try {
               sc.setJobDescription(s"batch $batchId: detail upsert")
-              new ParquetUpsertSink(spark, detailPath, Some("date_partition"), retry)
+              new ParquetUpsertSink(spark, detailPath, Some("date_partition"))
                 .upsert(b, Seq("message_id"), "sent_time")
             }
             // both sinks must be QUIESCENT before the closure returns

@@ -2,18 +2,23 @@ package graft
 
 import java.nio.file.Path
 
-import scala.util.matching.Regex
-
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Every public name in `src/main` has a caller outside the specs. The
   * scan covers top-level public types, and the public `def`/`val`
   * members of top-level `object`s (class members implement Spark
-  * interfaces and are out of scope). A name counts as used when some
-  * file of `src/main`, `perfbench/src` or `tools` mentions it outside a
-  * declaration; specs do not count. Comments are blanked first. The
-  * match is by name, so a name that another identifier shares counts as
-  * used; `apply`, `main`, `implicit` and `override` members are skipped,
+  * interfaces and are out of scope). The texts searched are the files of
+  * `src/main`, `perfbench/src` and `tools`; specs do not count, and
+  * comments are blanked first.
+  *  - A type is used when some text mentions its name outside a
+  *    declaration.
+  *  - A member `Obj.m` is used when some text names it as `Obj.m`, when a
+  *    file that imports `Obj`'s members (`import ….Obj._`, `….Obj.{…}`,
+  *    `….Obj.m`) mentions `m` outside a declaration, or when its own
+  *    file does so other than as `x.m`. A member whose name is a common
+  *    word (`x.m` on some other value) is therefore not taken as used.
+  *
+  * `apply`, `main`, `implicit` and `override` members are skipped,
   * because their callers do not name them.
   */
 class ZeroCallerGuardSpec extends AnyFunSuite {
@@ -21,10 +26,12 @@ class ZeroCallerGuardSpec extends AnyFunSuite {
   /** Names that stay without a caller, with the reason. */
   private val keep = Map(
     "GenData" -> "entry point: `runMain graft.GenData <sf> <dir>` generates test data",
+    "SparkEntry.entry" -> "entry point (README layout): external callers invoke `graft.SparkEntry.entry` by name",
+    "Schemas.history" -> "the MESSAGE_HISTORY schema that EnrichSpec checks Enrich's output against",
     "MessageFunctions.tryDecryptStanza" ->
       "reference parity row X2: Encryptor's catch-all turns undecryptable input into null",
     "MessageTypes.nameToCode" ->
-      "the reference's 18 declared constants (MessageType.java:6-24) that the taxonomy spec checks",
+      "the name→code direction of the reference's taxonomy (MessageType.java:6-24) that the taxonomy spec checks",
     "CosinePairs.shingleList" -> "Column reference form the native shingle expressions are compared against",
     "Dedup.minhashSignature" -> "Column reference form the native MinHash is compared against",
     "Dedup.hashedShinglesHof" -> "Column reference form the native hashed shingles are compared against",
@@ -37,7 +44,9 @@ class ZeroCallerGuardSpec extends AnyFunSuite {
     "Quantize.int8Error" -> "spec oracle: the int8 round-trip error bound",
     "QualityClassifier.logLoss" -> "spec oracle: the trained classifier's loss",
     "Retention" -> "ROADMAP direction 1: the TTL form the table store is to apply",
+    "Retention.live" -> "ROADMAP direction 1: the TTL form the table store is to apply",
     "Retention.compact" -> "ROADMAP direction 1: the TTL form the table store is to apply",
+    "CorpusIngest.start" -> "ROADMAP direction 1: the streaming corpus ingest the table store lifts from",
     "CorpusIngest.startNearDup" -> "ROADMAP direction 1: the streaming corpus ingest the table store lifts from",
     "MessagePipeline.decodeWithDeadLetter" ->
       "ROADMAP direction 2: the dead-letter split whose counts the pipeline is to publish")
@@ -65,24 +74,51 @@ class ZeroCallerGuardSpec extends AnyFunSuite {
       }
     }
 
-  /** The names declared in `sources` that no text of `corpus` uses:
-    * every occurrence of the name is a declaration.
+  private val word = """\w+""".r
+  private val declaration = """\b(?:def|val|var|class|trait|object|type)\s+(\w+)""".r
+  private val qualified = """\b(\w+)\s*\.\s*(?=(\w+))""".r
+  private val memberImport = """\bimport\s+(?:[\w.]*\.)?(\w+)\.(?:_|\{|\w)""".r
+
+  private def counts(names: Iterator[String]): Map[String, Int] =
+    names.toSeq.groupMapReduce(identity)(_ => 1)(_ + _)
+
+  /** What one text says about the names it mentions. */
+  private final class Text(code: String) {
+    val words: Map[String, Int] = counts(word.findAllIn(code))
+    val decls: Map[String, Int] = counts(declaration.findAllMatchIn(code).map(_.group(1)))
+    /** Mentions of a name with no `.` directly before it. */
+    val bare: Map[String, Int] = counts(word.findAllMatchIn(code).filter { m =>
+      var i = m.start - 1
+      while (i >= 0 && code(i).isWhitespace) i -= 1
+      i < 0 || code(i) != '.'
+    }.map(_.matched))
+    val pairs: Set[(String, String)] =
+      qualified.findAllMatchIn(code).map(m => (m.group(1), m.group(2))).toSet
+    val importsMembersOf: Set[String] = memberImport.findAllMatchIn(code).map(_.group(1)).toSet
+    def bareUse(n: String): Boolean = bare.getOrElse(n, 0) > decls.getOrElse(n, 0)
+  }
+
+  /** The names declared in `sources` that nothing in `sources` or
+    * `others` uses, by the rules of the class doc.
     */
-  private def zeroCaller(sources: Seq[String], corpus: Seq[String]): Seq[String] = {
-    def count(re: Regex): Map[String, Int] =
-      corpus.flatMap(re.findAllMatchIn(_).map(m => m.group(m.groupCount))).groupMapReduce(identity)(_ => 1)(_ + _)
-    val words = count("""\w+""".r)
-    val decls = count("""\b(?:def|val|var|class|trait|object|type)\s+(\w+)""".r)
-    sources.flatMap(declared).distinct.filter { q =>
-      val n = q.split('.').last
-      words.getOrElse(n, 0) <= decls.getOrElse(n, 0)
+  private def zeroCaller(sources: Seq[String], others: Seq[String]): Seq[String] = {
+    val own = sources.map(new Text(_))
+    val texts = own ++ others.map(new Text(_))
+    def total(f: Text => Map[String, Int], n: String) = texts.map(f(_).getOrElse(n, 0)).sum
+    def used(q: String, home: Text): Boolean = q.split('.') match {
+      case Array(t) => total(_.words, t) > total(_.decls, t)
+      case Array(obj, m) =>
+        texts.exists(_.pairs((obj, m))) || home.bareUse(m) ||
+          texts.exists(t => (t ne home) && t.importsMembersOf(obj) && t.bareUse(m))
     }
+    sources.indices.flatMap(i => declared(sources(i)).map(_ -> own(i)))
+      .distinctBy(_._1).collect { case (q, home) if !used(q, home) => q }
   }
 
   test("the scanner reports exactly the public names nothing uses") {
     val src = Seq(
       "object Used {",
-      "  def called(x: Int): Int = x",
+      "  def called(x: Int): Int = x + local",
       "  def orphan: Int = 1",
       "  val orphanVal = 2",
       "  private def hidden = 3",
@@ -92,28 +128,34 @@ class ZeroCallerGuardSpec extends AnyFunSuite {
       "  def apply(): Int = 6",
       "  object Nested { def inner = 7 }",
       "  // def commented = 8",
+      "  def local = 10",
+      "  def common = 11",
       "}",
       "final case class Orphan(a: Int)",
       "private class Hidden",
       "object Braceless extends Used.type",
       "class Widget {",
       "  def classMember = 9",
+      "}",
+      "object Imported {",
+      "  def viaImport = 12",
       "}").mkString("\n")
-    val caller = "val y = Used.called(1) + Widget.toString + Braceless"
+    val caller = "val y = Used.called(1) + Widget.toString + Braceless + other.common(2)"
+    val importer = "import graft.Imported._\nval w = viaImport"
     val code = SourceScan.blankComments(src)
     assert(declared(code) == Seq("Used", "Used.called", "Used.orphan", "Used.orphanVal",
-      "Orphan", "Braceless", "Widget"))
-    assert(zeroCaller(Seq(code), Seq(code, caller)) == Seq("Used.orphan", "Used.orphanVal", "Orphan"))
+      "Used.local", "Used.common", "Orphan", "Braceless", "Widget", "Imported", "Imported.viaImport"))
+    assert(zeroCaller(Seq(code), Seq(caller, importer)) ==
+      Seq("Used.orphan", "Used.orphanVal", "Used.common", "Orphan"))
   }
 
   test("every public src/main name has a caller outside the specs") {
     def text(f: Path): String =
       if (f.toString.endsWith(".scala")) SourceScan.blankComments(SourceScan.read(f)) else SourceScan.read(f)
     val sources = SourceScan.files("src/main/scala").filter(_.toString.endsWith(".scala")).map(text)
-    val corpus = sources ++
-      (SourceScan.files("src/main/resources") ++ SourceScan.files("perfbench/src") ++
-        SourceScan.files("tools")).map(text)
-    val found = zeroCaller(sources, corpus)
+    val others = (SourceScan.files("src/main/resources") ++ SourceScan.files("perfbench/src") ++
+      SourceScan.files("tools")).map(text)
+    val found = zeroCaller(sources, others)
     assert((keep.keySet -- found).isEmpty,
       "keep-map entries that now have a caller or are gone: " + (keep.keySet -- found).toSeq.sorted.mkString(", "))
     assert((found.toSet -- keep.keySet).isEmpty,

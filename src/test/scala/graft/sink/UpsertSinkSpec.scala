@@ -7,6 +7,20 @@ import graft.SparkSpec
 class UpsertSinkSpec extends SparkSpec {
   import spark.implicits._
 
+  /** A sink on `dir` whose renames go through [[FlakyRenameFs]]. */
+  private def flakySink(dir: String): ParquetUpsertSink = {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.graftflaky.impl", classOf[FlakyRenameFs].getName)
+    new ParquetUpsertSink(spark, s"graftflaky:$dir")
+  }
+
+  /** The row files published in `dir` (an aborted commit leaves only
+    * `_temporary` state).
+    */
+  private def published(dir: String): Seq[String] =
+    Option(new java.io.File(dir).listFiles()).fold(Seq.empty[String])(_.map(_.getName).toSeq)
+      .filter(f => f.endsWith(".parquet") && !f.startsWith("_"))
+
   test("upsert is an idempotent keyed merge (at-least-once replay converges)") {
     val dir = tmpDir("upsert")
     val sink = new ParquetUpsertSink(spark, dir)
@@ -115,10 +129,7 @@ class UpsertSinkSpec extends SparkSpec {
 
   test("distinct-set upsert: aborted append publishes nothing; the retry converges (r18)") {
     val dir = tmpDir("upsert_set_abort")
-    spark.sparkContext.hadoopConfiguration
-      .set("fs.graftflaky.impl", classOf[FlakyRenameFs].getName)
-    val sink = new ParquetUpsertSink(spark, s"graftflaky:$dir",
-      retry = RetryPolicy(maxRetries = 1))
+    val sink = flakySink(dir)
     val b = Seq(("u1", "j1", "202401M"), ("u2", "j2", "202402M")).toDF("u", "j", "p")
     FlakyRenameFs.failing.set(true)
     try {
@@ -126,10 +137,7 @@ class UpsertSinkSpec extends SparkSpec {
       // the aborted commit must not have published any row file (only
       // _temporary state may exist) — a partially visible append is the
       // case the anti-join makes safe, but v1 commits publish nothing
-      val visible = Option(new java.io.File(dir).listFiles())
-        .fold(Seq.empty[String])(_.map(_.getName).toSeq)
-        .filter(f => f.endsWith(".parquet") && !f.startsWith("_"))
-      assert(visible.isEmpty, s"aborted append published: $visible")
+      assert(published(dir).isEmpty, s"aborted append published: ${published(dir)}")
     } finally FlakyRenameFs.failing.set(false)
     // the at-least-once retry of the SAME batch converges to exactly-once
     sink.upsertDistinct(b)
@@ -146,25 +154,30 @@ class UpsertSinkSpec extends SparkSpec {
     assert(Retention.live(df, "ts", -1, now).count() == 2)
   }
 
-  test("retry ladder degrades then fails (strict) or drops (lenient)") {
-    var levels = Vector.empty[String]
-    val strict = RetryPolicy(maxRetries = 3)
-    intercept[RuntimeException] {
-      strict.runWith[Unit] { l => levels :+= l; throw new RuntimeException("down") }
-    }
-    assert(levels == Vector("QUORUM", "THREE", "TWO"))
+  test("a write whose first 2 attempts fail lands exactly once, on attempt 3") {
+    val dir = tmpDir("upsert_retry")
+    val sink = flakySink(dir)
+    val b = Seq(("u1", "j1", "202401M"), ("u1", "j1", "202401M")).toDF("u", "j", "p")
+    // a failed attempt makes one rename, the commit of its one write
+    // task, so each injected fault fails one attempt
+    FlakyRenameFs.faults.set(0)
+    FlakyRenameFs.failNext.set(2)
+    try sink.upsertDistinct(b) finally FlakyRenameFs.failNext.set(0)
+    assert(FlakyRenameFs.faults.get() == 2)
+    assert(sink.read().as[(String, String, String)].collect().toSeq ==
+      Seq(("u1", "j1", "202401M")))
+  }
 
-    val lenient = RetryPolicy(maxRetries = 2, lenient = true)
-    assert(lenient.runWith[Unit] { _ => throw new RuntimeException("x") }.isEmpty)
-
-    // succeeds on a later rung
-    var n = 0
-    val got = RetryPolicy(maxRetries = 5).runWith { l =>
-      n += 1; if (n < 3) throw new RuntimeException("retry me") else l
-    }
-    assert(got.contains("TWO") && n == 3)
-
-    intercept[IllegalArgumentException] { RetryPolicy(maxRetries = 0) }
+  test("a write that fails on every attempt throws after exactly 5 attempts and publishes nothing") {
+    val dir = tmpDir("upsert_retry_exhausted")
+    val sink = flakySink(dir)
+    FlakyRenameFs.faults.set(0)
+    FlakyRenameFs.failing.set(true)
+    try intercept[Exception] {
+      sink.upsertDistinct(Seq(("u1", "j1", "202401M")).toDF("u", "j", "p"))
+    } finally FlakyRenameFs.failing.set(false)
+    assert(FlakyRenameFs.faults.get() == 5)
+    assert(published(dir).isEmpty, s"failed write published: ${published(dir)}")
   }
 }
 
@@ -176,21 +189,27 @@ object UpsertSinkSpec {
 }
 
 /** Switchable fault-injection filesystem (r18): local semantics, but
-  * every rename throws while [[FlakyRenameFs.failing]] is set — drives
-  * the abort-then-retry path of the sinks (the always-throwing cousin
-  * lives in CorpusIngestSpec). Registered per-test via
-  * `fs.graftflaky.impl`; the flag is static because Hadoop caches FS
-  * instances per scheme.
+  * every rename throws while [[FlakyRenameFs.failing]] is set, and the
+  * next [[FlakyRenameFs.failNext]] renames throw — drives the
+  * abort-then-retry path of the sinks (the always-throwing cousin lives
+  * in CorpusIngestSpec). Registered per-test via `fs.graftflaky.impl`;
+  * the state is static because Hadoop caches FS instances per scheme.
   */
 class FlakyRenameFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getUri: java.net.URI = java.net.URI.create("graftflaky:///")
   override def rename(src: org.apache.hadoop.fs.Path,
       dst: org.apache.hadoop.fs.Path): Boolean =
-    if (FlakyRenameFs.failing.get())
+    if (FlakyRenameFs.failing.get() ||
+        FlakyRenameFs.failNext.getAndUpdate(n => math.max(n - 1, 0)) > 0) {
+      FlakyRenameFs.faults.incrementAndGet()
       throw new java.io.IOException("injected rename fault (flaky)")
-    else super.rename(src, dst)
+    } else super.rename(src, dst)
 }
 
 object FlakyRenameFs {
   val failing = new java.util.concurrent.atomic.AtomicBoolean(false)
+  /** Countdown: this many of the next renames fail. */
+  val failNext = new java.util.concurrent.atomic.AtomicInteger(0)
+  /** Renames failed so far. */
+  val faults = new java.util.concurrent.atomic.AtomicInteger(0)
 }

@@ -115,8 +115,8 @@ class MessagePipelineSpec extends SparkSpec {
     // upsert. The effectively-once contract requires a failure in EITHER
     // sink to fail the whole batch before its checkpoint commit — a
     // swallowed helper-thread failure would commit a batch whose summary
-    // rows never landed. Inject: every summary write fails (all retry
-    // rungs), the query must terminate with the injected error; then
+    // rows never landed. Inject: every summary write fails (all 5
+    // attempts), the query must terminate with the injected error; then
     // heal the filesystem and redeliver — both tables converge to the
     // reference, including the detail rows the failed batch DID write
     // (idempotent LWW absorbs them).
