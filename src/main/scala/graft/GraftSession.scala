@@ -2,11 +2,12 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-import graft.plans.GraftExtensions
+import graft.plans.BandJoinRule
 
 /** Canonical session construction: every entry point (Verify, Bench,
-  * DevSmoke, tests) builds through here so engine-critical settings are
-  * set once, not re-discovered per main.
+  * DevSmoke, perfbench) builds through here so engine-critical settings
+  * are set once, not re-discovered per main. (The spec suites' shared
+  * session, `TestSpark`, builds its own and installs the same rule.)
   *
   * Settings rationale (100 TB notes in README):
   *  - shuffle partitions sized to the actual parallelism (the 200
@@ -20,7 +21,7 @@ import graft.plans.GraftExtensions
   *    unreadable without it (Tables.events normalizes to micros)
   *  - zstd parquet output: better ratio than snappy at similar speed —
   *    at corpus scale output bytes are a first-order cost
-  *  - graft SQL functions (vector_dot, avro_decode_message) registered
+  *  - the band-join rewrite ([[graft.plans.BandJoinRule]]) installed
   */
 object GraftSession {
 
@@ -40,10 +41,10 @@ object GraftSession {
       .config("spark.sql.parquet.compression.codec", "zstd")
       .config("spark.ui.enabled", "false")
 
-  /** Build (or reuse) the session and install graft's SQL functions. */
+  /** Build (or reuse) the session and install [[BandJoinRule]]. */
   def get(cpus: Int): SparkSession = {
     val spark = builder(cpus).getOrCreate()
-    GraftExtensions.install(spark)
+    BandJoinRule.install(spark)
     spark.sparkContext.setLogLevel("WARN")
     spark
   }

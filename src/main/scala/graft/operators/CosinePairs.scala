@@ -187,9 +187,9 @@ object CosinePairs {
         col("vtfs").as("fb"), col("n2").as("n2_b")), "id_b")
       .withColumn("cos_raw",
         // terms are sorted UNIQUE ascending by construction (the `vts`
-        // struct sort over per-document-distinct terms), so the
-        // internal unchecked variant skips the per-pair order prepass
-        SortedTermDot.unchecked(col("ta"), col("fa"), col("tb"), col("fb"))
+        // struct sort over per-document-distinct terms), as the merge
+        // requires
+        SortedTermDot(col("ta"), col("fa"), col("tb"), col("fb"))
           .cast("double") /
           (sqrt(col("n2_a").cast("double")) * sqrt(col("n2_b").cast("double"))))
       .filter(col("cos_raw") >= threshold)

@@ -542,11 +542,10 @@ object Dedup {
       .join(sets.withColumnRenamed("id", "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
       // `sh` is sorted at signature build: one codegen'd merge per
       // candidate instead of [[jaccard]]'s per-pair hash set (the
-      // helper stays as the order-agnostic reference form). Sortedness
-      // holds by construction (sort_array in withSignatures), so the
-      // internal unchecked variant skips the per-pair order prepass
+      // helper stays as the order-agnostic reference form). The merge
+      // relies on the sort_array in withSignatures
       .withColumn("n_common",
-        graft.plans.SortedLongOverlap.unchecked(col("sh_a"), col("sh_b")))
+        graft.plans.SortedLongOverlap(col("sh_a"), col("sh_b")))
       .withColumn("jaccard", col("n_common").cast("double") /
         (size(col("sh_a")) + size(col("sh_b")) - col("n_common")).cast("double"))
       .filter(col("jaccard") >= threshold)
@@ -611,7 +610,7 @@ object Dedup {
         // shingles vanish from the sets on both sides of every pair.
         // Only (id, long) rows reach the shuffles; the rebuilt sh stays
         // sorted (sort_array) and containsNull=false (collect_list), so
-        // the unchecked merge verify below compiles the same null-free
+        // the merge verify below compiles the same null-free
         // loop. Docs whose whole set is capped away drop out here —
         // same outcome as the sz>0 filter on an empty set. `ds` feeds
         // two un-shareable subtrees (the df aggregate and the join
@@ -680,12 +679,10 @@ object Dedup {
       // verify: one codegen'd sorted merge per candidate (the `sh`
       // arrays are sorted at vector build) — `array_intersect` would
       // allocate and fill a hash set and materialize the intersection
-      // array per pair when only its SIZE is needed. Sortedness holds
-      // by construction (sort_array on `sh` above), so the internal
-      // unchecked variant skips the per-pair order prepass the SQL
-      // surface keeps
+      // array per pair when only its SIZE is needed. The merge relies
+      // on the sort_array on `sh` above
       .withColumn("n_common",
-        graft.plans.SortedLongOverlap.unchecked(col("sh_a"), col("sh_b")))
+        graft.plans.SortedLongOverlap(col("sh_a"), col("sh_b")))
       .withColumn("jaccard", col("n_common").cast("double") /
         (col("sz_a") + col("sz_b") - col("n_common")).cast("double"))
       .filter(col("jaccard") >= threshold)

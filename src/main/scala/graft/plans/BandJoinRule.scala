@@ -1,5 +1,6 @@
 package graft.plans
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical._
@@ -29,12 +30,18 @@ import org.apache.spark.unsafe.types.CalendarInterval
   * Scope guards: inner joins; deterministic band expressions; each side
   * of the band referencing exactly one join child; bails out if the plan
   * already carries the rewrite's marker attributes (the rule runs in a
-  * fixed-point batch and must not re-fire on its own output). Disable
-  * with `spark.graft.bandJoinRewrite.enabled=false`.
+  * fixed-point batch and must not re-fire on its own output). The rule
+  * is always on in a session it is installed into ([[install]]).
   */
 object BandJoinRule extends Rule[LogicalPlan] with PredicateHelper {
 
-  private val EnabledKey = "spark.graft.bandJoinRewrite.enabled"
+  /** Add the rule to a live session's extra optimizations, once. */
+  def install(spark: SparkSession): Unit = {
+    val extra = spark.experimental.extraOptimizations
+    if (!extra.contains(BandJoinRule)) {
+      spark.experimental.extraOptimizations = extra :+ BandJoinRule
+    }
+  }
 
   /** Marker column names — shared with [[graft.operators.RangeJoin]],
     * whose already-bucketed joins rely on the re-fire guard below
@@ -109,15 +116,13 @@ object BandJoinRule extends Rule[LogicalPlan] with PredicateHelper {
   private def floorDiv(x: Expression, w: Long): Expression =
     Floor(Divide(Cast(x, DoubleType), Literal(w.toDouble)))
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (conf.getConfString(EnabledKey, "true") != "true") return plan
+  override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transformUp {
       case j @ Join(left, right, Inner, Some(cond), hint)
           if !left.output.exists(_.name == LBucket) &&
             !right.output.exists(_.name == RBucket) =>
         rewrite(j, left, right, cond, hint).getOrElse(j)
     }
-  }
 
   private def rewrite(
       j: Join, left: LogicalPlan, right: LogicalPlan,

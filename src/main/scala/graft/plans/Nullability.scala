@@ -5,11 +5,10 @@ import org.apache.spark.sql.graft.bridge
 
 /** Static-nullability assertions for the engine's own builds. Kept
   * `private[graft]` on purpose: misuse is SILENT undefined behavior
-  * (codegen reads garbage on a runtime null, never raises) — the exact
-  * wrong-answer class the checked SQL surface is hardened against — so
-  * the assertion stays off the public Column API, the same scoping
-  * rationale as the unchecked sorted-merge entry points in
-  * [[SortedMergeExprs]].
+  * (codegen reads garbage on a runtime null, never raises) — so the
+  * assertion stays off the public Column API, the same scoping
+  * rationale as the sorted-merge entry points in [[SortedMergeExprs]],
+  * whose sorted-input contract likewise goes unverified at run time.
   */
 private[graft] object Nullability {
 

@@ -25,30 +25,20 @@ import org.apache.spark.sql.types._
   * candidate join fans out, so verification is O(|a|+|b|) compiled work
   * with zero allocation per pair.
   *
-  * The sorted-input PRECONDITION IS ENFORCED at every public surface:
-  * an unsorted array raises `IllegalArgumentException` instead of
-  * silently undercounting. These are public SQL functions
-  * ([[GraftExtensions]]), and a misordered ad-hoc input would otherwise
-  * produce a plausible wrong answer — the one defect class no oracle
-  * guards at the SQL surface. The check is one branch-predictable
-  * compare per element folded into a prepass (always-false on
-  * contract-respecting inputs) — measured at ~1.25× of the bare verify
-  * merge in-JVM (DevSortCheckCost), which is noise next to the
-  * candidate join on ad-hoc calls but real money on the engine's own
-  * per-pair verify stages. Those stages sort at vector/signature BUILD
-  * time (`sort_array` before the candidate join fans out), so they use
-  * the `checked = false` constructor flag via the `private[graft]`
-  * `unchecked` Column entry points — a variant deliberately NOT
-  * registered for SQL and not reachable from any public API: the SQL
-  * surface always pays (and gets) the loud contract.
+  * Sorted input is the CALLER'S contract and is not re-checked per
+  * pair: the engine's verify stages sort once when they build each
+  * vector or signature (`sort_array` before the candidate join fans
+  * out), and the merge relies on that order. The Column entry points
+  * are `private[graft]` for that reason — an unsorted input would
+  * silently undercount.
   *
   * Null handling is specialized at CODEGEN time on the inputs' static
   * `containsNull`: the engine's shingle/term arrays are built
   * `containsNull = false` ([[HashedShinglesExpr]] et al.), so their
-  * merge loops compile with no per-element null branch at all; SQL
-  * callers with nullable elements get the tolerant loops (null =
-  * "no entry"). Both specializations evaluate identically on null-free
-  * data — spec-pinned against each other.
+  * merge loops compile with no per-element null branch at all; inputs
+  * with nullable elements get the tolerant loops (null = "no entry").
+  * Both specializations evaluate identically on null-free data —
+  * spec-pinned against each other.
   */
 private[graft] object SortedMergeExprs {
 
@@ -65,99 +55,6 @@ private[graft] object SortedMergeExprs {
     case ArrayType(_, cn) => cn
     case _ => true
   }
-
-  /** Loud misuse failure — also the codegen throw site. `strict`
-    * distinguishes the dot's unique-ascending terms contract from the
-    * overlap's duplicates-allowed ascending one in the message.
-    */
-  def unsortedError(fn: String, side: String, idx: Int, strict: Boolean): Nothing =
-    throw new IllegalArgumentException(
-      s"$fn: $side input array is not sorted " +
-        (if (strict) "strictly ascending (sorted UNIQUE term keys required)"
-         else "ascending") +
-        s" at index $idx — sort it at build time (array_sort), as the " +
-        "engine's vector/signature builders do")
-
-  /** Interpreted-path order validation over the non-null elements the
-    * merge considers. `strict` additionally rejects equal neighbours
-    * (the tf-vector unique-terms invariant). `vals` — when non-null —
-    * is the parallel tf array whose null entries make a position
-    * invisible to the merge, so they are invisible to the check too.
-    */
-  def checkAscending(a: ArrayData, vals: ArrayData, fn: String, side: String,
-      strict: Boolean): Unit = {
-    val n = a.numElements()
-    var prev = 0L
-    var hasPrev = false
-    var k = 0
-    while (k < n) {
-      if (!a.isNullAt(k) && (vals == null || !vals.isNullAt(k))) {
-        val v = a.getLong(k)
-        if (hasPrev && (if (strict) v <= prev else v < prev))
-          unsortedError(fn, side, k, strict)
-        prev = v
-        hasPrev = true
-      }
-      k += 1
-    }
-  }
-
-  /** Codegen for [[checkAscending]]: same skip logic, inline throw via
-    * the static helper (Janino resolves the Scala object's MODULE$).
-    * `arrNulls`/`valsNulls` come from the inputs' static containsNull;
-    * when neither admits nulls the loop compiles to one load + one
-    * always-false compare per element with no null branch or prologue.
-    */
-  private[plans] def genAscendingCheck(ctx: CodegenContext,
-      arr: String, arrNulls: Boolean, vals: String, valsNulls: Boolean,
-      fn: String, side: String, strict: Boolean): String = {
-    val n = ctx.freshName("n")
-    val k = ctx.freshName("k")
-    val v = ctx.freshName("v")
-    val prev = ctx.freshName("prev")
-    val cmp = if (strict) "<=" else "<"
-    val skips = Seq(
-      if (arrNulls) Some(s"$arr.isNullAt($k)") else None,
-      if (vals != null && valsNulls) Some(s"$vals.isNullAt($k)") else None
-    ).flatten
-    if (skips.isEmpty) {
-      s"""
-         |int $n = $arr.numElements();
-         |if ($n > 1) {
-         |  long $prev = $arr.getLong(0);
-         |  for (int $k = 1; $k < $n; $k++) {
-         |    long $v = $arr.getLong($k);
-         |    if ($v $cmp $prev) {
-         |      graft.plans.SortedMergeExprs$$.MODULE$$.unsortedError(
-         |        "$fn", "$side", $k, $strict);
-         |    }
-         |    $prev = $v;
-         |  }
-         |}
-       """.stripMargin
-    } else {
-      val skip = skips.mkString(" || ")
-      // prologue finds the first considered element, so the hot loop is
-      // one load + one always-false compare per element — no flag
-      s"""
-         |int $n = $arr.numElements();
-         |int $k = 0;
-         |while ($k < $n && ($skip)) $k++;
-         |if ($k < $n) {
-         |  long $prev = $arr.getLong($k);
-         |  for ($k++; $k < $n; $k++) {
-         |    if ($skip) continue;
-         |    long $v = $arr.getLong($k);
-         |    if ($v $cmp $prev) {
-         |      graft.plans.SortedMergeExprs$$.MODULE$$.unsortedError(
-         |        "$fn", "$side", $k, $strict);
-         |    }
-         |    $prev = $v;
-         |  }
-         |}
-       """.stripMargin
-    }
-  }
 }
 
 /** `sorted_overlap(a, b)` → INT: the number of DISTINCT values present
@@ -165,20 +62,10 @@ private[graft] object SortedMergeExprs {
   * `size(array_intersect(a, b))` on null-free inputs (duplicates
   * within one array count once; the dual-advance skips equal runs).
   * Null elements are ignored (the dedup shingle arrays are declared
-  * `containsNull=false`; tolerating stray nulls keeps SQL callers from
-  * crashing, and the verify semantics treat null as "no shingle").
-  * Inputs MUST be sorted ascending, and with `checked = true` (every
-  * public surface — SQL and the Column `apply`) the contract is
-  * ENFORCED: an out-of-order non-null element raises rather than
-  * undercounting. `checked = false` is reachable only through the
-  * `private[graft]` [[SortedLongOverlap.unchecked]] entry point, for
-  * engine verify paths whose arrays are sorted by construction at
-  * build time (`sort_array` before the candidate join) — the prepass
-  * there re-checks an invariant the plan already guarantees, on every
-  * candidate pair.
+  * `containsNull=false`; the verify semantics treat null as "no
+  * shingle"). Inputs MUST be sorted ascending; nothing checks it.
   */
-case class SortedLongOverlap(left: Expression, right: Expression,
-    checked: Boolean = true)
+case class SortedLongOverlap(left: Expression, right: Expression)
     extends BinaryExpression {
 
   override def dataType: DataType = IntegerType
@@ -194,10 +81,6 @@ case class SortedLongOverlap(left: Expression, right: Expression,
   override def nullSafeEval(l: Any, r: Any): Any = {
     val a = l.asInstanceOf[ArrayData]
     val b = r.asInstanceOf[ArrayData]
-    if (checked) {
-      SortedMergeExprs.checkAscending(a, null, "sorted_overlap", "left", strict = false)
-      SortedMergeExprs.checkAscending(b, null, "sorted_overlap", "right", strict = false)
-    }
     val na = a.numElements()
     val nb = b.numElements()
     var i = 0
@@ -234,11 +117,6 @@ case class SortedLongOverlap(left: Expression, right: Expression,
       val x = ctx.freshName("x")
       val y = ctx.freshName("y")
       val cnt = ctx.freshName("cnt")
-      val checks = if (!checked) "" else
-        SortedMergeExprs.genAscendingCheck(ctx, a, aNulls, null, valsNulls = false,
-          "sorted_overlap", "left", strict = false) +
-        SortedMergeExprs.genAscendingCheck(ctx, b, bNulls, null, valsNulls = false,
-          "sorted_overlap", "right", strict = false)
       // containsNull=false inputs compile merge loops with no null branch
       val skipA = if (aNulls) s"if ($a.isNullAt($i)) { $i++; continue; }" else ""
       val skipB = if (bNulls) s"if ($b.isNullAt($j)) { $j++; continue; }" else ""
@@ -247,7 +125,6 @@ case class SortedLongOverlap(left: Expression, right: Expression,
       val runB = if (bNulls) s"($b.isNullAt($j) || $b.getLong($j) == $x)"
         else s"$b.getLong($j) == $x"
       s"""
-         |$checks
          |int $na = $a.numElements();
          |int $nb = $b.numElements();
          |int $i = 0; int $j = 0; int $cnt = 0;
@@ -274,21 +151,13 @@ case class SortedLongOverlap(left: Expression, right: Expression,
 }
 
 object SortedLongOverlap {
-  /** Column-API entry point — contract-checked, like the SQL surface. */
-  def apply(a: Column, b: Column): Column =
-    bridge.column(SortedLongOverlap(bridge.expression(a), bridge.expression(b)))
-
-  /** Engine-internal variant that SKIPS the sorted-input prepass. Use
-    * ONLY where the plan sorts the arrays by construction immediately
-    * before the candidate join (`sort_array` at signature/vector
-    * build) — the prepass would re-verify a guaranteed invariant once
-    * per candidate pair (~1.25× of the merge itself, DevSortCheckCost).
-    * Not SQL-registered; misuse on genuinely unsorted input silently
+  /** Column-API entry point. Sorted input is the caller's contract:
+    * both arrays must be sorted ascending by construction (`sort_array`
+    * where the signature is built) — an unsorted array silently
     * undercounts, which is why this stays `private[graft]`.
     */
-  private[graft] def unchecked(a: Column, b: Column): Column =
-    bridge.column(SortedLongOverlap(bridge.expression(a), bridge.expression(b),
-      checked = false))
+  private[graft] def apply(a: Column, b: Column): Column =
+    bridge.column(SortedLongOverlap(bridge.expression(a), bridge.expression(b)))
 }
 
 /** `sorted_dot(terms_a, tfs_a, terms_b, tfs_b)` → BIGINT: the sparse
@@ -299,18 +168,11 @@ object SortedLongOverlap {
   * integer until the caller's final sqrt. A length mismatch between a
   * terms array and its tfs array yields null (malformed vector, never
   * a silent wrong dot); null elements are tolerated as "no entry".
-  * With `checked = true` (every public surface) the sorted-unique
-  * terms contract is ENFORCED: a non-increasing neighbour pair among
-  * the entries the merge would consider (key and tf both non-null)
-  * raises instead of silently dropping terms from the dot.
-  * `checked = false` is reachable only through the `private[graft]`
-  * [[SortedTermDot.unchecked]] entry point, for the engine's APSS
-  * verify whose vectors are term-sorted by construction at build.
+  * Terms MUST be sorted unique ascending; nothing checks it.
   */
 case class SortedTermDot(
     termsA: Expression, tfsA: Expression,
-    termsB: Expression, tfsB: Expression,
-    checked: Boolean = true)
+    termsB: Expression, tfsB: Expression)
     extends QuaternaryExpression {
 
   override def first: Expression = termsA
@@ -338,10 +200,6 @@ case class SortedTermDot(
     val na = keysA.numElements()
     val nb = keysB.numElements()
     if (na != valsA.numElements() || nb != valsB.numElements()) return null
-    if (checked) {
-      SortedMergeExprs.checkAscending(keysA, valsA, "sorted_dot", "left terms", strict = true)
-      SortedMergeExprs.checkAscending(keysB, valsB, "sorted_dot", "right terms", strict = true)
-    }
     var i = 0
     var j = 0
     var acc = 0L
@@ -372,11 +230,6 @@ case class SortedTermDot(
       val x = ctx.freshName("x")
       val y = ctx.freshName("y")
       val acc = ctx.freshName("acc")
-      val checks = if (!checked) "" else
-        SortedMergeExprs.genAscendingCheck(ctx, ta, kaNulls, fa, vaNulls,
-          "sorted_dot", "left terms", strict = true) +
-        SortedMergeExprs.genAscendingCheck(ctx, tb, kbNulls, fb, vbNulls,
-          "sorted_dot", "right terms", strict = true)
       // containsNull=false inputs compile merge loops with no null branch
       def skip(parts: Seq[Option[String]], idx: String): String = {
         val ps = parts.flatten
@@ -394,7 +247,6 @@ case class SortedTermDot(
          |if ($na != $fa.numElements() || $nb != $fb.numElements()) {
          |  ${ev.isNull} = true;
          |} else {
-         |  $checks
          |  int $i = 0; int $j = 0; long $acc = 0L;
          |  while ($i < $na && $j < $nb) {
          |    $skipA
@@ -418,22 +270,17 @@ case class SortedTermDot(
 }
 
 object SortedTermDot {
-  /** Column-API entry point — contract-checked, like the SQL surface. */
-  def apply(termsA: Column, tfsA: Column, termsB: Column, tfsB: Column): Column =
-    bridge.column(SortedTermDot(
-      bridge.expression(termsA), bridge.expression(tfsA),
-      bridge.expression(termsB), bridge.expression(tfsB)))
-
-  /** Engine-internal variant that SKIPS the sorted-unique prepass —
-    * see [[SortedLongOverlap.unchecked]] for the use rule (arrays
-    * sorted by construction at vector build, never SQL-exposed).
+  /** Column-API entry point. Sorted input is the caller's contract:
+    * each terms array must be sorted unique ascending by construction
+    * (term-sorted at vector build, as the APSS verify's are) — a
+    * misordered one silently drops terms from the dot, which is why
+    * this stays `private[graft]`.
     */
-  private[graft] def unchecked(termsA: Column, tfsA: Column,
+  private[graft] def apply(termsA: Column, tfsA: Column,
       termsB: Column, tfsB: Column): Column =
     bridge.column(SortedTermDot(
       bridge.expression(termsA), bridge.expression(tfsA),
-      bridge.expression(termsB), bridge.expression(tfsB),
-      checked = false))
+      bridge.expression(termsB), bridge.expression(tfsB)))
 }
 
 /** `suffix_sq_mass(tfs)` → ARRAY<BIGINT>: element i (0-based) is

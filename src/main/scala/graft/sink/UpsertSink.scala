@@ -94,7 +94,7 @@ final class ParquetUpsertSink(
     * dropping that partition's existing rows. So a batch that is neither
     * persisted nor deterministic is persisted here for the call
     * ([[pinned]]). The production caller,
-    * [[graft.streaming.MessagePipeline.start]], persists each micro-batch
+    * [[graft.streaming.MessagePipeline.run]], persists each micro-batch
     * itself, and a deterministic batch pays nothing.
     */
   def upsert(batch: DataFrame, keys: Seq[String], versionCol: String): Unit =

@@ -68,20 +68,21 @@ object MessagePipeline {
     (decoded, dead)
   }
 
-  /** Attach the sink stage to an enriched (history-schema) stream. */
-  def start(
+  /** Attach the sink stage to an enriched (history-schema) stream; it
+    * drains what is available and stops (`Trigger.AvailableNow`).
+    */
+  private def start(
       history: DataFrame,
       detailPath: String,
       summaryPath: String,
       checkpointDir: String,
-      trigger: Trigger = Trigger.AvailableNow(),
-      queryName: Option[String] = None
+      queryName: Option[String]
   ): StreamingQuery = {
     val spark = history.sparkSession
     val sinkEc = summaryExecutor()
     val writer = history.writeStream
       .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
+      .trigger(Trigger.AvailableNow())
     queryName.foreach(writer.queryName)
     writer
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -161,5 +162,5 @@ object MessagePipeline {
       queryName: Option[String] = None
   ): StreamingQuery =
     start(Enrich(decode(raw), cfg), detailPath, summaryPath, checkpointDir,
-      queryName = queryName)
+      queryName)
 }

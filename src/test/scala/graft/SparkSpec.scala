@@ -26,8 +26,8 @@ object TestSpark {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
-    // same extension surface as production sessions (GraftSession)
-    graft.plans.GraftExtensions.install(s)
+    // same optimizer rule as production sessions (GraftSession)
+    graft.plans.BandJoinRule.install(s)
     s
   }
 

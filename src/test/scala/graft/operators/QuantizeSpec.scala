@@ -45,12 +45,12 @@ class QuantizeSpec extends SparkSpec {
         $"q.max_err" <=> array_max($"errs")))
       .count()
     assert(mismatched == 0)
-    // null input → null struct; SQL registration resolves
+    // null input → null struct
     assert(Seq(Option.empty[Seq[Float]]).toDF("v")
       .select(graft.operators.Quantize.int8($"v")).collect()(0).isNullAt(0))
     // scale 2/127 → codes (64, -127): 63.5 rounds away to 64
-    assert(spark.sql("SELECT (int8_quantize(array(1.0F, -2.0F))).q_l1")
-      .as[Long].head() == 191L)
+    assert(Seq(Array(1.0f, -2.0f)).toDF("v")
+      .select(graft.operators.Quantize.int8($"v")("q_l1")).as[Long].head() == 191L)
   }
 
   test("quantized cosine approximates fp32 cosine (compression sanity)") {

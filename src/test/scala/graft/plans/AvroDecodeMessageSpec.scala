@@ -30,15 +30,6 @@ class AvroDecodeMessageSpec extends SparkSpec {
     assert(lenient.head.isNullAt(0))
   }
 
-  test("SQL registration decodes through the function registry") {
-    GraftExtensions.install(spark)
-    msgs.map(AvroCodec.encode).toDF("value").createOrReplaceTempView("wire")
-    val got = spark.sql(
-      "SELECT avro_decode_message(value).msgId AS id FROM wire ORDER BY id")
-      .as[String].collect().toSeq
-    assert(got == Seq("m1", "m2"))
-  }
-
   test("rejects non-binary input at analysis time") {
     intercept[Exception] {
       Seq("oops").toDF("value").select(AvroDecodeMessage($"value")).collect()

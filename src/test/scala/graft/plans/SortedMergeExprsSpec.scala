@@ -31,6 +31,8 @@ class SortedMergeExprsSpec extends SparkSpec {
     val one = Seq((Array(1L, 1L, 2L, 5L, 5L, 5L), Array(1L, 5L, 5L, 9L)))
       .toDF("a", "b")
     assert(one.select(SortedLongOverlap($"a", $"b")).as[Int].head() == 2)
+    val known = Seq((Array(1L, 3L, 7L), Array(3L, 7L, 8L))).toDF("a", "b")
+    assert(known.select(SortedLongOverlap($"a", $"b")).as[Int].head() == 2)
     val empty = Seq((Array.empty[Long], Array(1L, 2L))).toDF("a", "b")
     assert(empty.select(SortedLongOverlap($"a", $"b")).as[Int].head() == 0)
     val nullIn = Seq((None: Option[Array[Long]], Some(Array(1L))))
@@ -39,9 +41,9 @@ class SortedMergeExprsSpec extends SparkSpec {
   }
 
   test("sorted_overlap: nulls interleaved inside an equal run count once") {
-    // reachable only from the SQL surface (engine-built arrays are
-    // null-free): the run-skip must step over interior nulls or
-    // array(5, null, 5) x array(5, null, 5) would count 5 twice
+    // engine-built arrays are null-free, but the tolerant loops must
+    // still honour the contract: the run-skip steps over interior nulls
+    // or array(5, null, 5) x array(5, null, 5) would count 5 twice
     val rows = Seq(
       (Seq(Some(5L), None, Some(5L)), Seq(Some(5L), None, Some(5L)), 1),
       (Seq(None, Some(2L), Some(2L)), Seq(Some(2L), None), 1),
@@ -81,6 +83,10 @@ class SortedMergeExprsSpec extends SparkSpec {
       .toDF("ta", "fa", "tb", "fb")
     assert(d.select(SortedTermDot($"ta", $"fa", $"tb", $"fb"))
       .as[Long].head() == 0L)
+    val known = Seq((Array(1L, 3L), Array(2L, 5L), Array(3L, 4L), Array(10L, 1L)))
+      .toDF("ta", "fa", "tb", "fb")
+    assert(known.select(SortedTermDot($"ta", $"fa", $"tb", $"fb"))
+      .as[Long].head() == 50L) // shared term 3: 5 * 10
     val bad = Seq((Array(1L, 2L), Array(3L), Array(1L), Array(7L)))
       .toDF("ta", "fa", "tb", "fb")
     assert(bad.select(SortedTermDot($"ta", $"fa", $"tb", $"fb"))
@@ -91,6 +97,8 @@ class SortedMergeExprsSpec extends SparkSpec {
     val got = Seq(Array(3L, 1L, 2L)).toDF("tfs")
       .select(SuffixSqMass($"tfs")).as[Seq[Long]].head()
     assert(got == Seq(14L, 5L, 4L)) // 9+1+4, 1+4, 4
+    assert(Seq(Array(1L, 2L)).toDF("tfs")
+      .select(SuffixSqMass($"tfs")).as[Seq[Long]].head() == Seq(5L, 4L))
     val empty = Seq(Array.empty[Long]).toDF("tfs")
       .select(SuffixSqMass($"tfs")).as[Seq[Long]].head()
     assert(empty.isEmpty)
@@ -111,45 +119,9 @@ class SortedMergeExprsSpec extends SparkSpec {
     assert(SuffixSqMass(arr(2L, 3L)).eval(null)
       .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
       .toLongArray.toSeq == Seq(13L, 9L))
-  }
-
-  test("unsorted input RAISES instead of silently undercounting") {
-    // the misuse contract (judge r14 #1): these are public SQL
-    // functions, and an unsorted array would otherwise return a
-    // plausible undercount no oracle catches — so the precondition is
-    // enforced on both execution paths
-    def causeChainContains(e: Throwable, s: String): Boolean =
-      Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(10)
-        .exists(_.toString.contains(s))
-    // codegen path (through a plan)
-    val bad = Seq((Array(9L, 3L, 7L), Array(3L, 7L))).toDF("a", "b")
-    val e1 = intercept[Exception] {
-      bad.select(SortedLongOverlap($"a", $"b")).collect()
-    }
-    assert(causeChainContains(e1, "sorted_overlap"))
-    // interpreted path (direct eval)
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.sql.catalyst.util.GenericArrayData
-    import org.apache.spark.sql.types._
-    def arr(xs: Long*) = Literal.create(new GenericArrayData(xs.toArray),
-      ArrayType(LongType, containsNull = false))
-    val e2 = intercept[IllegalArgumentException] {
-      SortedLongOverlap(arr(1L, 5L, 2L), arr(2L)).eval(null)
-    }
-    assert(e2.getMessage.contains("not sorted"))
-    // duplicates are LEGAL for the overlap (count-once semantics) …
+    // duplicates are legal for the overlap and count once
     assert(SortedLongOverlap(arr(2L, 2L, 5L), arr(2L, 5L)).eval(null) == 2)
-    // … but ILLEGAL term keys for the dot (unique-terms invariant):
-    // both a misordered and a duplicate key raise
-    val e3 = intercept[IllegalArgumentException] {
-      SortedTermDot(arr(4L, 1L), arr(1L, 1L), arr(1L), arr(1L)).eval(null)
-    }
-    assert(e3.getMessage.contains("sorted_dot"))
-    val e4 = intercept[IllegalArgumentException] {
-      SortedTermDot(arr(3L, 3L), arr(1L, 1L), arr(3L), arr(1L)).eval(null)
-    }
-    assert(e4.getMessage.contains("strictly ascending"))
-    // a null tf makes its key invisible to the merge — and to the check
+    // a null tf makes its key invisible to the merge
     val keysWithNullTf = Literal.create(
       new GenericArrayData(Array[Any](5L, 2L, 7L)),
       ArrayType(LongType, containsNull = true))
@@ -160,120 +132,13 @@ class SortedMergeExprsSpec extends SparkSpec {
       .eval(null) == 11L)
   }
 
-  test("order check property: every adjacent inversion raises, sorted never does") {
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.sql.catalyst.util.GenericArrayData
-    import org.apache.spark.sql.types._
-    def arr(xs: Array[Long]) = Literal.create(new GenericArrayData(xs),
-      ArrayType(LongType, containsNull = false))
-    val rnd = new scala.util.Random(19)
-    (1 to 50).foreach { _ =>
-      val sorted = Array.fill(rnd.nextInt(12) + 2)(rnd.nextLong() % 40)
-        .distinct.sorted
-      val other = arr(Array(sorted.head))
-      // sorted input never raises, at every position of the other side
-      SortedLongOverlap(arr(sorted), other).eval(null)
-      SortedTermDot(arr(sorted), arr(sorted.map(_ => 1L)),
-        other, arr(Array(1L))).eval(null)
-      // every adjacent swap creates exactly one inversion — each must
-      // raise from BOTH expressions regardless of where it sits
-      (0 until sorted.length - 1).foreach { i =>
-        val bad = sorted.clone()
-        val t = bad(i); bad(i) = bad(i + 1); bad(i + 1) = t
-        intercept[IllegalArgumentException] {
-          SortedLongOverlap(arr(bad), other).eval(null)
-        }
-        intercept[IllegalArgumentException] {
-          SortedTermDot(arr(bad), arr(bad.map(_ => 1L)),
-            other, arr(Array(1L))).eval(null)
-        }
-      }
-    }
-  }
-
-  test("unsorted input raises from WHOLE-STAGE CODEGEN over a file scan") {
-    // a local relation can be constant-folded through the INTERPRETED
-    // eval (ConvertToLocalRelation), so pin the compiled doGenCode path
-    // explicitly: parquet round-trip defeats the folding
-    val dir = tmpDir("smx")
-    Seq((Array(9L, 3L, 7L), Array(3L, 7L)),
-        (Array(1L, 2L), Array(2L, 9L)))
-      .toDF("a", "b").write.mode("overwrite").parquet(dir)
-    val scan = spark.read.parquet(dir)
-    val e = intercept[Exception] {
-      scan.select(SortedLongOverlap($"a", $"b")).collect()
-    }
-    assert(Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
-      .take(10).exists(_.toString.contains("sorted_overlap")))
-    val e2 = intercept[Exception] {
-      // a as its own tf vector: row 1's terms [9,3,7] are misordered
-      scan.select(SortedTermDot($"a", $"a", $"a", $"a")).collect()
-    }
-    assert(Iterator.iterate(e2: Throwable)(_.getCause).takeWhile(_ != null)
-      .take(10).exists(_.toString.contains("sorted_dot")))
-    // and the sorted rows alone pass through the same compiled plan
-    assert(scan.filter($"a" === array(lit(1L), lit(2L)))
-      .select(SortedLongOverlap($"a", $"b")).as[Int].head() == 1)
-  }
-
-  test("unsorted input raises from the SQL surface too") {
-    GraftExtensions.install(spark)
-    val e = intercept[Exception] {
-      spark.sql("SELECT sorted_overlap(array(3L, 1L), array(1L))").collect()
-    }
-    assert(Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
-      .take(10).exists(_.toString.contains("sorted_overlap")))
-  }
-
-  test("unchecked internal variant: same results as checked on sorted input, " +
-      "no prepass on unsorted, never SQL-reachable") {
-    // the engine's own verify stages sort at vector/signature BUILD, so
-    // they use the private unchecked constructor flag and skip the
-    // per-pair order prepass; equivalence on contract-respecting input
-    // is what makes the skip safe
-    val arrs = randomSortedArrays(100, 30, 48)
-    val df = arrs.zip(arrs.reverse).toDF("a", "b")
-    val both = df.select(
-      SortedLongOverlap($"a", $"b").as("c"),
-      SortedLongOverlap.unchecked($"a", $"b").as("u")).collect()
-    assert(both.forall(r => r.getInt(0) == r.getInt(1)))
-    assert(both.exists(_.getInt(0) > 0))
-    val dot = df.select(
-      SortedTermDot($"a", $"a", $"b", $"b").as("c"),
-      SortedTermDot.unchecked($"a", $"a", $"b", $"b").as("u")).collect()
-    assert(dot.forall(r => r.getLong(0) == r.getLong(1)))
-    // unchecked skips the prepass: unsorted input returns (a wrong
-    // count — the documented misuse mode of the private variant)
-    // instead of raising, on BOTH eval paths
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.sql.catalyst.util.GenericArrayData
-    import org.apache.spark.sql.types._
-    def arr(xs: Long*) = Literal.create(new GenericArrayData(xs.toArray),
-      ArrayType(LongType, containsNull = false))
-    SortedLongOverlap(arr(9L, 3L, 7L), arr(3L), checked = false).eval(null)
-    val dir = tmpDir("smxu")
-    Seq((Array(9L, 3L, 7L), Array(3L, 7L)))
-      .toDF("a", "b").write.mode("overwrite").parquet(dir)
-    val scan = spark.read.parquet(dir)
-    scan.select(SortedLongOverlap.unchecked($"a", $"b")).collect() // no raise
-    scan.select(SortedTermDot.unchecked($"a", $"a", $"b", $"b")).collect()
-    // the SQL registration stays CHECKED: same unsorted rows raise
-    GraftExtensions.install(spark)
-    scan.createOrReplaceTempView("smxu")
-    val e = intercept[Exception] {
-      spark.sql("SELECT sorted_overlap(a, b) FROM smxu").collect()
-    }
-    assert(Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
-      .take(10).exists(_.toString.contains("sorted_overlap")))
-  }
-
   test("containsNull=false codegen specialization matches the tolerant path") {
     // the same null-free parquet data compiled through BOTH shapes —
     // read once with element-required schema (no null branches
     // compiled) and once with the tolerant containsNull=true schema —
-    // must agree for overlap and dot, checked and unchecked. (A cast
-    // between the two array shapes would be removed by SimplifyCasts,
-    // so the two-schema read is the only way to pin both compilations.)
+    // must agree for overlap and dot. (A cast between the two array
+    // shapes would be removed by SimplifyCasts, so the two-schema read
+    // is the only way to pin both compilations.)
     import org.apache.spark.sql.types._
     val arrs = randomSortedArrays(150, 30, 40)
     val dir = tmpDir("smxs")
@@ -287,22 +152,21 @@ class SortedMergeExprsSpec extends SparkSpec {
       spark.read.schema(schema(cn)).parquet(dir).select(
         $"id",
         SortedLongOverlap($"a", $"b").as("o"),
-        SortedTermDot.unchecked($"a", $"a", $"b", $"b").as("d"))
+        SortedTermDot($"a", $"a", $"b", $"b").as("d"))
         .collect().map(r => r.getInt(0) -> ((r.getInt(1), r.getLong(2)))).toMap
     val strict = results(cn = false)
     val tolerant = results(cn = true)
     assert(strict == tolerant)
     assert(strict.values.exists(_._1 > 0) && strict.values.exists(_._2 > 0L))
-  }
-
-  test("registered for SQL via GraftExtensions.install") {
-    GraftExtensions.install(spark)
-    val r = spark.sql(
-      """SELECT sorted_overlap(array(1L, 3L, 7L), array(3L, 7L, 8L)) AS o,
-        |       sorted_dot(array(1L, 3L), array(2L, 5L),
-        |                  array(3L, 4L), array(10L, 1L)) AS d,
-        |       suffix_sq_mass(array(1L, 2L)) AS m""".stripMargin).head()
-    assert(r.getInt(0) == 2 && r.getLong(1) == 50L &&
-      r.getSeq[Long](2) == Seq(5L, 4L))
+    // a local relation can be constant-folded through the INTERPRETED
+    // eval (ConvertToLocalRelation); a file scan runs the compiled
+    // doGenCode under whole-stage codegen
+    val one = tmpDir("smx")
+    Seq((Array(1L, 2L), Array(2L, 9L))).toDF("a", "b")
+      .write.mode("overwrite").parquet(one)
+    val scan = spark.read.parquet(one).select(SortedLongOverlap($"a", $"b"))
+    assert(scan.queryExecution.executedPlan.exists(
+      _.isInstanceOf[org.apache.spark.sql.execution.WholeStageCodegenExec]))
+    assert(scan.as[Int].head() == 1)
   }
 }

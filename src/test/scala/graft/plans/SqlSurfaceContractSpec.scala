@@ -1,45 +1,18 @@
 package graft.plans
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, LongType}
+import org.apache.spark.sql.types.ArrayType
 
 import graft.SparkSpec
 
-/** Contracts of the engine's public SQL/metadata surface that no
-  * single-operator spec owns:
-  *
-  *  1. the SQL registry carries ONLY contract-checked expression
-  *     builders — the r16 unchecked sorted-merge variants must never
-  *     leak into SQL under any name (the checked flag is a constructor
-  *     default the SQL builders cannot override);
-  *  2. `Nullability.knownNotNull` (private[graft] since r17 — the
-  *     UB-capable assertion is off the public bridge) really flips the
-  *     STATIC nullability the codegen specializations key on — a
-  *     column-level assertion and a transform-lambda element assertion
-  *     both surface in the schema.
+/** `Nullability.knownNotNull` (private[graft] since r17 — the
+  * UB-capable assertion is off the public bridge) really flips the
+  * STATIC nullability the codegen specializations key on — a
+  * column-level assertion and a transform-lambda element assertion both
+  * surface in the schema.
   */
 class SqlSurfaceContractSpec extends SparkSpec {
   import spark.implicits._
-
-  test("every SQL-registered sorted-merge builder constructs the CHECKED form") {
-    val builders = GraftExtensions.descriptors.toMap
-    assert(!builders.keySet.exists(_.contains("unchecked")),
-      "no unchecked variant may be SQL-registered under any name")
-    // construct through the registry exactly as the SQL path does and
-    // inspect the expression's checked flag directly
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.sql.catalyst.util.GenericArrayData
-    def arr(xs: Long*) = Literal.create(new GenericArrayData(xs.toArray),
-      ArrayType(LongType, containsNull = false))
-    builders("sorted_overlap")(Seq(arr(1L), arr(1L))) match {
-      case SortedLongOverlap(_, _, checked) => assert(checked)
-      case other => fail(s"unexpected expression: $other")
-    }
-    builders("sorted_dot")(Seq(arr(1L), arr(1L), arr(1L), arr(1L))) match {
-      case SortedTermDot(_, _, _, _, checked) => assert(checked)
-      case other => fail(s"unexpected expression: $other")
-    }
-  }
 
   test("knownNotNull flips static nullability at column and array-element level") {
     val df = Seq((Seq(1L, 2L), Seq(3L, 4L))).toDF("a", "b")

@@ -5,24 +5,6 @@ import graft.SparkSpec
 class TextHashExprsSpec extends SparkSpec {
   import spark.implicits._
 
-  test("SQL registration: all native text/vector functions resolve") {
-    GraftExtensions.install(spark)
-    Seq(("a b c d", 1L)).toDF("text", "id").createOrReplaceTempView("thx")
-    val row = spark.sql(
-      """SELECT size(hashed_shingles(text)) AS n3,
-        |       size(hashed_shingles(text, 2)) AS n2,
-        |       size(minhash_sig(hashed_shingles(text), 16)) AS k,
-        |       simhash_sig(text) AS sig
-        |FROM thx""".stripMargin).collect().head
-    assert(row.getInt(0) == 2 && row.getInt(1) == 3 && row.getInt(2) == 16)
-    val emb = graft.sources.Tables.embeddings(spark, sf001).limit(3)
-    emb.createOrReplaceTempView("thx_emb")
-    val sigs = spark.sql(
-      "SELECT hyperplane_sigs(embedding, 64, 4, 6) AS s FROM thx_emb")
-      .as[Seq[Long]].collect()
-    assert(sigs.forall(s => s.length == 6 && s.forall(b => b >= 0 && b < 16)))
-  }
-
   test("hashed_shingle_list: multiplicity kept; distinct of it IS hashed_shingles") {
     import org.apache.spark.sql.functions._
     val texts = Seq("a b a b a", "x y z x y z x y", "one two", "",
@@ -42,14 +24,16 @@ class TextHashExprsSpec extends SparkSpec {
     // "a b a" at positions 0 and 2 must collide (same token triple)
     val aba = rows(0).getSeq[Long](0)
     assert(aba(0) == aba(2) && aba(0) != aba(1))
+    // set sizes and signature shapes through the Column entry points
+    val abcd = Seq("a b c d").toDF("text").select(
+      size(TextHashExprs.hashedShingles($"text", 3)),
+      size(TextHashExprs.hashedShingles($"text", 2)),
+      size(TextHashExprs.minhashSig(TextHashExprs.hashedShingles($"text", 3), 16)))
+      .collect().head
+    assert(abcd.getInt(0) == 2 && abcd.getInt(1) == 3 && abcd.getInt(2) == 16)
+    val sigs = graft.sources.Tables.embeddings(spark, sf001).limit(3)
+      .select(HyperplaneSigs($"embedding", 64, 4, 6)).as[Seq[Long]].collect()
+    assert(sigs.forall(s => s.length == 6 && s.forall(b => b >= 0 && b < 16)))
   }
 
-  test("SQL registration: literal-arg validation fails at analysis, not runtime") {
-    GraftExtensions.install(spark)
-    Seq("x").toDF("text").createOrReplaceTempView("thx2")
-    val e = intercept[Exception] {
-      spark.sql("SELECT hashed_shingles(text, length(text)) FROM thx2").collect()
-    }
-    assert(e.getMessage.toLowerCase.contains("literal"))
-  }
 }

@@ -16,19 +16,6 @@ class TopKPairsAggSpec extends SparkSpec {
     assert(viaAgg == viaWindow)
   }
 
-  test("SQL-registered form matches the Column form") {
-    val orders = graft.sources.Tables.orders(spark, sf001)
-    orders.createOrReplaceTempView("orders_tk")
-    val viaSql = spark.sql(
-      """SELECT o_custkey, topk_pairs(o_totalprice, o_orderkey, 3) AS topk
-        |FROM orders_tk GROUP BY o_custkey""".stripMargin)
-      .orderBy("o_custkey").collect().toSeq
-    val viaCol = orders.groupBy("o_custkey")
-      .agg(TopKPairs(col("o_totalprice"), col("o_orderkey"), 3).as("topk"))
-      .orderBy("o_custkey").collect().toSeq
-    assert(viaSql == viaCol)
-  }
-
   test("buffer: serialization round-trips; merge bounded; NaN and ties ordered") {
     val agg = TopKPairsAgg(
       org.apache.spark.sql.graft.bridge.expression(lit(0.0)),

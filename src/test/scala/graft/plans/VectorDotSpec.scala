@@ -22,6 +22,9 @@ class VectorDotSpec extends SparkSpec {
     val got = Seq((Array(1f, 2f, 3f), Array(4.0, 5.0, 6.0)))
       .toDF("a", "b").select(VectorDot($"a", $"b")).as[Double].head()
     assert(got == 32.0)
+    val dd = Seq((Array(1.0, 2.0), Array(3.0, 4.0)))
+      .toDF("a", "b").select(VectorDot($"a", $"b")).as[Double].head()
+    assert(dd == 11.0)
   }
 
   test("length mismatch and null elements yield null (zip_with parity)") {
@@ -33,14 +36,6 @@ class VectorDotSpec extends SparkSpec {
       .select(VectorDot($"a".cast("array<float>"), $"b".cast("array<float>")))
       .collect()
     assert(withNull.head.isNullAt(0))
-  }
-
-  test("registered for SQL via GraftExtensions.install") {
-    GraftExtensions.install(spark)
-    val got = spark.sql(
-      "SELECT vector_dot(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d")
-      .as[Double].head()
-    assert(got == 11.0)
   }
 
   test("codegen path executes (no fallback) inside a projection") {

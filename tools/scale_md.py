@@ -668,11 +668,13 @@ round 18 adds no new flags — see "This run's per-decade flags")
 - **Expression-cost pricing** (rounds 15/16): bench-level A/B across
   JVMs cannot see sub-30% expression deltas (±27% control noise); the
   in-JVM alternating twin harness (`DevSortCheckCost`, 1M real
-  tf-vector pairs) is the instrument. The r15 sorted-input prepass
-  priced at 1.25× there; r16 moved the engine's own verify paths to
-  `private[graft]` unchecked constructors + static-containsNull
-  codegen (SQL surface stays checked, registry-introspection
-  spec-pinned) — `dedup_cosine_pairs` 0.53× like-for-like at sf0.1.
+  tf-vector pairs; retired, `git show
+  0446b78:src/test/scala/graft/DevSortCheckCost.scala`) is the
+  instrument. The r15 sorted-input prepass priced at 1.25× there; r16
+  moved the engine's own verify paths to check-free constructors +
+  static-containsNull codegen — `dedup_cosine_pairs` 0.53×
+  like-for-like at sf0.1. The checked form and the SQL registry that
+  needed it are gone; sorted input is the callers' contract.
 - **Single-HEAD provenance**: all three suite columns, the standalone
   probes, and both ingest series are measured back-to-back at one HEAD
   with every product commit before them; only doc/artifact commits
