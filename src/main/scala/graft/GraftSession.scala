@@ -22,8 +22,36 @@ import graft.plans.BandJoinRule
   *  - zstd parquet output: better ratio than snappy at similar speed —
   *    at corpus scale output bytes are a first-order cost
   *  - the band-join rewrite ([[graft.plans.BandJoinRule]]) installed
+  *  - Spark's JVM-wide cache of Janino-compiled classes sized to the
+  *    registry's working set ([[CodegenCacheEntries]]): at the default
+  *    100 entries a cycle of queries that needs more classes than that
+  *    recompiles every class on every run. One perfbench `query_mix`
+  *    round needs ~200 classes; the 169 registry entries need 2,249
+  *    (sf0.001). Each cached class holds ~32 KB of heap
   */
 object GraftSession {
+
+  /** Entries in Spark's cache of generated classes
+    * (`spark.sql.codegen.cache.maxEntries`, default 100). The cache
+    * evicts the least recently used class, so when a cycle of queries
+    * needs more classes than it holds, every lookup misses and Janino
+    * compiles every class again on every run. Measured on 4 cores,
+    * local[4], counting `CodegenMetrics.METRIC_COMPILATION_TIME`: one
+    * pass over all 169 registry entries at sf0.001 compiles 2,249
+    * classes; at 100 entries a second pass compiles 3,219 classes, at 4096
+    * it compiles 104. A perfbench `query_mix` round after its warm-up
+    * compiles 202 classes at 100 entries and 4 at 4096. 4096 holds the
+    * registry's working set with headroom.
+    *
+    * Cost: ~32 KB of heap per cached class, measured after a full GC:
+    * +76 MB at ~2,350 entries after two registry passes, so ~130 MB when
+    * full; a `query_mix` run holds ~3 MB more.
+    *
+    * Spark reads the value once per JVM, when `CodeGenerator`'s cache is
+    * created by the first compile, so it is set on the builder, before
+    * any query runs, not with `spark.conf.set` on a live session.
+    */
+  val CodegenCacheEntries = 4096
 
   def builder(cpus: Int): SparkSession.Builder =
     SparkSession.builder()
@@ -40,6 +68,7 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.parquet.compression.codec", "zstd")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
 
   /** Build (or reuse) the session and install [[BandJoinRule]]. */
   def get(cpus: Int): SparkSession = {

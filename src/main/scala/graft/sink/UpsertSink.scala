@@ -100,8 +100,10 @@ final class ParquetUpsertSink(
   def upsert(batch: DataFrame, keys: Seq[String], versionCol: String): Unit =
     pinned(batch) { retried {
       val existing = readExisting(spark, path, batch)
-      // restrict the merge to partitions the batch touches — key dedup is
-      // therefore per-partition (the per-bucket contract above).
+      // restrict the merge to partitions the batch touches; key dedup is
+      // per partition (the per-bucket contract above), so the bucket
+      // joins the dedup key: a key's row in one touched bucket never
+      // competes with its row in another.
       // r18 (guide §6): the touched buckets are COLLECTED (micro-batch-
       // small by contract — months per batch) and pushed as a partition
       // filter instead of the old broadcast semi-join: an IN on the
@@ -117,7 +119,7 @@ final class ParquetUpsertSink(
           val relevant =
             if (touchedVals.isEmpty) existing.limit(0)
             else existing.filter(col(p).isInCollection(touchedVals.toSeq))
-          dedupByKey(relevant.unionByName(batch), keys, versionCol)
+          dedupByKey(relevant.unionByName(batch), keys :+ p, versionCol)
         case None =>
           dedupByKey(existing.unionByName(batch), keys, versionCol)
       }

@@ -24,6 +24,9 @@ object TestSpark {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      // the engine's compile behaviour: each generated class once per JVM
+      .config("spark.sql.codegen.cache.maxEntries",
+        GraftSession.CodegenCacheEntries.toString)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     // same optimizer rule as production sessions (GraftSession)

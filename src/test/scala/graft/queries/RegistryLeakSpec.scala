@@ -1,5 +1,7 @@
 package graft.queries
 
+import org.apache.spark.metrics.source.CodegenMetrics
+
 import graft.{SparkEntry, SparkSpec}
 import graft.operators.Intermediates
 
@@ -8,7 +10,9 @@ import graft.operators.Intermediates
   * the session's intermediates are released: no CacheManager entry, no
   * persisted RDD, no `graft_<tag>_<uuid>` scratch dir. The build-once
   * caches (`graft_ivf_*`, `graft_nd_idx_*`, `graft_ldup_*`) persist
-  * across sessions by design and are not intermediates.
+  * across sessions by design and are not intermediates. A second run
+  * of the same queries compiles no generated class: it finds them all
+  * in Spark's code cache.
   */
 class RegistryLeakSpec extends SparkSpec {
   private val sc = spark.sparkContext
@@ -73,5 +77,24 @@ class RegistryLeakSpec extends SparkSpec {
     // C = dedup_exact: building it releases B's scratch dir
     noop("dedup_exact")
     assert(held(rdds, dirs).isEmpty, held(rdds, dirs).mkString("; "))
+  }
+
+  test("a repeated query_mix pass compiles no generated class") {
+    // the 12 queries of perfbench's `query_mix` round (perfbench/config.json)
+    val mix = Seq("rel_percentiles", "rel_window_running", "rel_q1_pricing",
+      "text_repetition", "text_remove_dup_spans", "dedup_resolve",
+      "sim_ivf_index_topk", "pipe_chunk_docs", "ev_sessions_30m",
+      "msg_pipeline_encrypted", "msg_roundtrip", "mm_meta")
+    // Janino compiles a class only on a miss in Spark's code cache
+    def compiles(): Long = {
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      mix.foreach(noop)
+      Intermediates.release(spark)
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+    }
+    val first = compiles()
+    val second = compiles()
+    assert(second == 0,
+      s"second pass compiled $second classes (first pass: $first)")
   }
 }

@@ -69,6 +69,24 @@ class UpsertSinkSpec extends SparkSpec {
       .collect().toSeq == Seq(("k1", 3L, "202402M")))
   }
 
+  test("partition-crossing key: the table does not depend on how records are batched") {
+    // month A holds k and j; k arrives again dated in month B, beside an
+    // update of j in A. Dedup is per bucket, so k's A row survives whether
+    // or not the batch that moves k also touches A.
+    def table(batches: Seq[Seq[(String, Long, String)]]) = {
+      val sink = new ParquetUpsertSink(spark, tmpDir("upsert_batching"), Some("p"))
+      sink.upsert(Seq(("k", 1L, "202401M"), ("j", 1L, "202401M")).toDF("id", "v", "p"),
+        Seq("id"), "v")
+      batches.foreach(b => sink.upsert(b.toDF("id", "v", "p"), Seq("id"), "v"))
+      sink.read().orderBy("p", "id").as[(String, Long, String)].collect().toSeq
+    }
+    val (kToB, jInA) = (("k", 2L, "202402M"), ("j", 2L, "202401M"))
+    val together = table(Seq(Seq(kToB, jInA)))
+    val apart = table(Seq(Seq(kToB), Seq(jInA)))
+    assert(together == apart, s"one batch: $together; two batches: $apart")
+    assert(together == Seq(("j", 2L, "202401M"), ("k", 1L, "202401M"), ("k", 2L, "202402M")))
+  }
+
   test("a non-deterministic unpersisted batch is pinned: existing rows of the month it lands in survive") {
     // the batch's month comes from a non-deterministic UDF: 202401M on its
     // first evaluation, 202402M on every later one. Evaluated once for the
