@@ -65,17 +65,12 @@ object CosinePairs {
 
   /** Word n-gram shingle list WITH multiplicity (unlike the hashed
     * distinct shingles in [[graft.plans.TextHashExprs]] — tf weighting
-    * needs the counts). Empty for texts shorter than n tokens; the
-    * CASE-guard matters because `sequence(0, -1)` DESCENDS rather than
-    * yielding an empty array.
+    * needs the counts). Empty for NULL text and texts shorter than n
+    * tokens. The lowercased text is split a fixed number of times per
+    * row, never once per shingle (see [[Dedup.ngramList]]).
     */
-  def shingleList(text: Column, n: Int): Column = {
-    val toks = split(trim(lower(text)), "\\s+")
-    when(size(toks) >= n,
-      transform(sequence(lit(0), size(toks) - n),
-        i => concat_ws(" ", slice(toks, i + lit(1), lit(n)))))
-      .otherwise(array().cast("array<string>"))
-  }
+  def shingleList(text: Column, n: Int): Column =
+    Dedup.ngramList(split(trim(lower(text)), "\\s+"), n)
 
   /** All document pairs with tf-cosine ≥ `threshold` over `shingleN`-gram
     * vectors: `(id_a, id_b, cosine)` with id_a < id_b, cosine exact and
@@ -108,10 +103,8 @@ object CosinePairs {
     // contract; the Jaccard family hashes case-sensitively): one O(len)
     // scan per document, and only (id, long) rows reach the groupBy.
     // The Column-HOF [[shingleList]] form is retained as the executable
-    // string-semantics reference the specs replay — it re-evaluates the
-    // tokenizer per ELEMENT (no let-binding in Catalyst lambdas), which
-    // is O(len²) per document and was the dominant cost of the whole
-    // join before the native form.
+    // string-semantics reference the specs replay; it materializes every
+    // shingle string, which the long hashes here avoid.
     val dt = df
       .select(col(idCol).as("id"),
         explode(graft.plans.TextHashExprs.hashedShingleList(

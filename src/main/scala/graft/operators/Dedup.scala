@@ -20,14 +20,24 @@ object Dedup {
   // --- shingling ---------------------------------------------------------
 
   /** Distinct word n-gram shingles of a text column (empty when the text
-    * has fewer than n tokens — `sequence` would otherwise run backwards).
+    * is NULL or has fewer than n tokens). The text is split a fixed
+    * number of times per row, never once per shingle (see [[ngramList]]).
     */
-  def shingles(text: Column, n: Int = 3): Column = {
-    val toks = split(trim(text), "\\s+")
+  def shingles(text: Column, n: Int = 3): Column =
+    array_distinct(ngramList(split(trim(text), "\\s+"), n))
+
+  /** Word n-grams of a token array, in order and with repeats; empty when
+    * the array is NULL or shorter than n. Zips the n shifted copies of the
+    * array, so the lambda reads only its own struct fields: a lambda that
+    * referenced `toks` itself would re-evaluate the whole token array per
+    * element (higher-order functions run interpreted, with no
+    * subexpression elimination).
+    */
+  private[operators] def ngramList(toks: Column, n: Int): Column = {
+    val shifted = (0 until n).map(k => slice(toks, lit(k + 1), size(toks) - lit(n - 1)))
     when(size(toks) >= n,
-      array_distinct(
-        transform(sequence(lit(0), size(toks) - lit(n)),
-          i => concat_ws(" ", slice(toks, i + lit(1), lit(n))))))
+      transform(arrays_zip(shifted: _*),
+        z => concat_ws(" ", (0 until n).map(k => z(k.toString)): _*)))
       .otherwise(array().cast("array<string>"))
   }
 

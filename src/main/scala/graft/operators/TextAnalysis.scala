@@ -194,7 +194,9 @@ object TextAnalysis {
   /** Within-document repetition: fraction of word 3-gram occurrences
     * that are repeats of an earlier 3-gram in the same document — a
     * standard generated-/boilerplate-text signal (high value = the doc
-    * keeps repeating itself). 0 for docs with fewer than 3 tokens.
+    * keeps repeating itself). 0 for NULL text and docs with fewer than
+    * n tokens. Each row's text is split a fixed number of times, never
+    * once per shingle ([[Dedup.shingles]]).
     */
   def repetitionRatio(text: Column, n: Int = 3): Column = {
     val toks = tokens(text)
@@ -241,16 +243,17 @@ object TextAnalysis {
       length(regexp_replace(col(textCol), "\\.\\.\\.", ""))) / lit(3)
     val alphaFrac = size(filter(toks, t => t.rlike("[A-Za-z]")))
       .cast("double") / greatest(w, lit(1)).cast("double")
+    // intersect, not filter(stopwords, s => array_contains(lowered, s)):
+    // that lambda would rebuild `lowered` once per stopword
     val lowered = transform(toks, t => lower(t))
-    val swHits = size(filter(array(GopherStopwords.map(lit): _*),
-      s => array_contains(lowered, s)))
+    val swHits = size(array_intersect(array(GopherStopwords.map(lit): _*), lowered))
     df.withColumn("g_word_count", w.between(50, 100000))
       .withColumn("g_mean_word_len", mwl.between(3.0, 10.0))
       .withColumn("g_symbol_ratio",
         (hashes + ellipses).cast("double") / greatest(w, lit(1)).cast("double")
           <= 0.1)
       .withColumn("g_alpha_words", alphaFrac >= 0.8)
-      .withColumn("g_stopwords", swHits >= 1)
+      .withColumn("g_stopwords", when(col(textCol).isNotNull, swHits >= 1))
   }
 
   /** Deflate compression ratio (compressed/raw bytes) — the classic

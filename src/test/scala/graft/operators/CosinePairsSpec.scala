@@ -124,10 +124,17 @@ class CosinePairsSpec extends SparkSpec {
   }
 
   test("shingleList: multiplicity kept, sub-n text yields empty array") {
-    val r = Seq("a b a b a", "x y").toDF("text")
+    val r = Seq(Some("a b a b a"), Some("x y"), None, Some(""), Some("A B C"),
+      Some("\ta b  c d"), Some("a a a a a")).toDF("text")
       .select(CosinePairs.shingleList(col("text"), 3).as("sh"))
       .as[Seq[String]].collect()
     assert(r(0) == Seq("a b a", "b a b", "a b a")) // repeat NOT deduped
     assert(r(1).isEmpty)
+    assert(r(2) == Seq.empty) // NULL text: empty, not NULL
+    assert(r(3) == Seq.empty)
+    assert(r(4) == Seq("a b c")) // exactly n tokens, lowercased
+    // trim strips spaces only: the tab leaves an empty first token
+    assert(r(5) == Seq(" a b", "a b c", "b c d"))
+    assert(r(6) == Seq("a a a", "a a a", "a a a"))
   }
 }

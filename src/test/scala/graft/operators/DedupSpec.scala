@@ -11,11 +11,24 @@ class DedupSpec extends SparkSpec {
   private lazy val docs = Tables.documents(spark, sf001).cache()
 
   test("shingles: empty under n tokens, distinct, order-derived") {
-    val got = Seq("a b c d", "a b", "x x x x x")
-      .toDF("t").select(Dedup.shingles($"t", 3)).as[Seq[String]].collect()
+    val texts = Seq(Some("a b c d"), Some("a b"), Some("x x x x x"), None,
+      Some(""), Some("a b c"), Some("\ta b  c d"), Some("a a a a a"))
+    val rows = texts.toDF("t")
+      .select(Dedup.shingles($"t", 3), TextAnalysis.repetitionRatio($"t", 3))
+      .as[(Seq[String], Double)].collect()
+    val got = rows.map(_._1)
     assert(got(0) == Seq("a b c", "b c d"))
     assert(got(1) == Seq.empty)
     assert(got(2) == Seq("x x x")) // distinct collapses repeats
+    assert(got(3) == Seq.empty) // NULL text: empty, not NULL
+    assert(got(4) == Seq.empty)
+    assert(got(5) == Seq("a b c")) // exactly n tokens
+    // trim strips spaces only: the tab leaves an empty first token
+    assert(got(6) == Seq(" a b", "a b c", "b c d"))
+    assert(got(7) == Seq("a a a"))
+    // 3 occurrences of 1 distinct shingle: 2 of 3 are repeats
+    assert(rows.map(_._2).toSeq ==
+      Seq(0.0, 0.0, 0.666667, 0.0, 0.0, 0.0, 0.0, 0.666667))
   }
 
   test("exact dedup keeps one row per distinct content, lowest id") {

@@ -264,10 +264,14 @@ class TextAnalysisSpec extends SparkSpec {
     assert(failing("g_alpha_words") == Set(4L, 6L))
     assert(failing("g_stopwords") == Set(5L, 6L))
     // doc 0 passes every rule; NULL text (doc 6) fails every rule
-    Seq("g_word_count", "g_mean_word_len", "g_symbol_ratio",
-      "g_alpha_words", "g_stopwords").foreach { r =>
+    val rules = Seq("g_word_count", "g_mean_word_len", "g_symbol_ratio",
+      "g_alpha_words", "g_stopwords")
+    rules.foreach { r =>
       assert(!failing(r).contains(0L), s"doc 0 must pass $r")
       assert(failing(r).contains(6L), s"NULL text must fail $r")
     }
+    // …and every flag of the NULL-text doc is NULL, not a silent false
+    val nullFlags = got.filter(col("doc_id") === 6L).select(rules.map(col): _*).head()
+    assert(rules.indices.forall(nullFlags.isNullAt), s"NULL text flags: $nullFlags")
   }
 }

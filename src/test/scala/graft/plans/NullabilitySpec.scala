@@ -11,7 +11,7 @@ import graft.SparkSpec
   * column-level assertion and a transform-lambda element assertion both
   * surface in the schema.
   */
-class SqlSurfaceContractSpec extends SparkSpec {
+class NullabilitySpec extends SparkSpec {
   import spark.implicits._
 
   test("knownNotNull flips static nullability at column and array-element level") {
